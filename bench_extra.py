@@ -15,10 +15,10 @@ Usage:
 
 Contract parity with bench.py: reads $SPARK_GRAFT_SF_DIR and
 $SPARK_GRAFT_CPUS, warms the Python-worker daemon the same way, runs the
-queries in the same order. Memoized state (the IVF index, component label
-caches) is reset before every `embed_ivf_ann` repeat so the cold query stays
-cold on each repeat; `embed_ivf_ann_warm` keeps the memo (it measures the
-warm path by contract).
+queries in the same order. Memoized state is reset before every repeat so
+cold queries stay cold: the component label tables before every query, the
+IVF index before `embed_ivf_ann` and `embed_ivf_trained`; `embed_ivf_ann_warm`
+keeps the IVF memo (it measures the warm path by contract).
 """
 
 from __future__ import annotations
@@ -41,14 +41,15 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _reset_memos(name: str) -> None:
-    """Cold queries must not inherit a previous repeat's memoized index."""
+    """Cold queries must not inherit a previous repeat's memoized state:
+    the IVF index and the persisted component label tables."""
     if name == "embed_ivf_ann" or name == "embed_ivf_trained":
-        for key, (_cen, asg) in list(entry._IVF_INDEX.items()):
-            try:
-                asg.unpersist(False)
-            except Exception:
-                pass
+        for _cen, asg in entry._IVF_INDEX.values():
+            asg.unpersist(False)
         entry._IVF_INDEX.clear()
+    for labels in entry._COMPONENT_LABELS.values():
+        labels.unpersist(False)
+    entry._COMPONENT_LABELS.clear()
 
 
 def main() -> None:

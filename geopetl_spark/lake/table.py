@@ -488,11 +488,7 @@ class LakeTable:
             # miss), so dropping the delta dirs with the base is safe
             if (buckets is None or int(b) in set(buckets)) and b not in skip:
                 delta_dirs.extend(dlist)
-        read_schema = self._read_schema(m)
-        if not dirs and not delta_dirs:
-            df = self.spark.createDataFrame([], read_schema)
-        else:
-            df = self.spark.read.schema(read_schema).parquet(*dirs, *delta_dirs)
+        df = self._scan(m, [*dirs, *delta_dirs])
         if delta_dirs:
             df = _reduce_latest(df, m["key_col"])
         if not include_system:
@@ -504,6 +500,31 @@ class LakeTable:
         if limit is not None:
             df = df.limit(limit)
         return df
+
+    def _scan(self, m: dict, dirs: list[str]) -> DataFrame:
+        """Raw rows of ``dirs`` under manifest ``m``'s read schema."""
+        read_schema = self._read_schema(m)
+        if not dirs:
+            return self.spark.createDataFrame([], read_schema)
+        return self.spark.read.schema(read_schema).parquet(*dirs)
+
+    def _changelog_dirs(self, m: dict, wm: int | None) -> list[str]:
+        """Every base and delta dir of ``m`` that may hold a row with
+        ``_lsn > wm``. A dir whose recorded ``_lsn`` max is at or below the
+        watermark holds only rows that filter drops, so it is not read; a
+        dir with no recorded range is always read (conservative)."""
+        preds = [] if wm is None else [(LSN_COL, ">", int(wm))]
+        out: list[str] = []
+        for dirs_by_bucket, stats in (
+            (m["buckets"], m.get("bucket_stats")),
+            (m.get("deltas") or {}, m.get("delta_stats")),
+        ):
+            for b, dlist in dirs_by_bucket.items():
+                zones = ((stats or {}).get(b) or {}).get("dirs") or {}
+                out.extend(
+                    d for d in dlist if not zones.get(d) or self._zones_may_match(zones[d], preds)
+                )
+        return out
 
     def read_changes(
         self,
@@ -517,11 +538,27 @@ class LakeTable:
         as live rows, deletes as ``_deleted=True`` tombstones; columns =
         table schema + ``_lsn`` + ``_deleted``.
 
-        Cost model: the ``_lsn`` zone maps prune every bucket whose maximum
-        LSN is at or below the watermark, so an epoch that touched 3 of
-        4096 buckets reads 3 buckets — the changelog is O(changed data),
-        not O(table); a ``since_version`` predating the first merge yields
-        the full CDC-derived state.
+        Cost model: the read is O(the data the window's commits wrote), not
+        O(table) or O(history). Base and delta dirs carry their ``_lsn``
+        [min, max] in the manifest, and a dir whose max is at or below the
+        ``since_version`` watermark ``wm`` is not read, so a one-commit
+        window reads that commit's dirs only. On a merge-on-read table the
+        surviving rows are filtered to ``_lsn > wm`` first and only then
+        reduced per key by max (``_lsn``, ``_seq``). That returns exactly
+        the rows of reducing the whole table and filtering afterwards:
+
+        * a key's max row has ``_lsn > wm`` exactly when some row of the
+          key does (``_lsn`` leads the order, and NULL sorts lowest), and
+        * then that max row also passes the filter, so it is the max of
+          the key's surviving rows too.
+
+        Pruning a dir only removes rows the filter would drop, so it cannot
+        change either side. A dir with no recorded range (LSN-less bulk
+        rows, or a manifest from before per-dir ranges) is always read. A ``since_version``
+        predating the first merge (``wm`` None) yields the full
+        CDC-derived state. Spark lists more than 32 dirs with a parallel
+        listing job, so a window over a wide bucket count (over 32 delta
+        dirs per commit) still pays that job.
 
         **Changelog-retention contract** (enforced, not advisory):
 
@@ -577,16 +614,12 @@ class LakeTable:
                 f"keep_last_versions above the oldest consumer's lag). "
                 f"Resync from a full snapshot read()."
             ) from None
-        pred = None if wm is None else f"{LSN_COL} > {int(wm)}"
-        skip = self._pruned_buckets(m_to, pred)
-        all_b = set(m_to["buckets"]) | set(m_to.get("deltas") or {})
-        keep = [int(b) for b in all_b if b not in skip]
-        # passing the watermark predicate through read() additionally
-        # engages per-DIR _lsn-zone pruning inside surviving buckets
-        # (delta-free tables only — read() enforces that)
-        df = self.read(version=to_version, buckets=keep, include_system=True, where=pred)
-        if wm is None:
-            df = df.filter(F.col(LSN_COL).isNotNull())
+        df = self._scan(m_to, self._changelog_dirs(m_to, wm))
+        # the watermark filter runs BEFORE the merge-on-read reduce (see
+        # "Cost model" above for why that returns the same rows)
+        df = df.filter(F.col(LSN_COL).isNotNull() if wm is None else F.col(LSN_COL) > int(wm))
+        if m_to.get("deltas"):
+            df = _reduce_latest(df, m_to["key_col"])
         return df.drop(BUCKET_COL, SEQ_COL)
 
     def iter_changes(
@@ -763,7 +796,14 @@ class LakeTable:
         fail_on_empty: bool = False,
         lineage: list[dict] | None = None,
     ) -> dict:
-        """Full refresh (``overwrite`` ≈ truncate+load) or blind ``append``."""
+        """Full refresh (``overwrite`` ≈ truncate+load) or blind ``append``.
+
+        An ``append`` whose ``df`` carries ``_lsn`` is checked (no NULL
+        ``_lsn``, all above the watermark) by a separate job before the
+        write job, so ``df`` is evaluated twice: its ``_lsn`` must be
+        deterministic (not derived from ``rand()`` or
+        ``monotonically_increasing_id()``), or the rows written can differ
+        from the rows checked."""
         if not self.exists():
             raise ValueError(
                 f"no lake table at {self.path}; create() it first "
@@ -792,7 +832,8 @@ class LakeTable:
             # read_changes — which filters _lsn > watermark. Null LSNs or
             # LSNs at/below the current watermark would be silently invisible
             # to every changelog window while the version looks complete, so
-            # refuse them loudly before any data is written.
+            # refuse them loudly before any data is written. This job and
+            # the write each evaluate df (see the docstring).
             wm = m.get("lsn_watermark")
             chk = df.agg(
                 F.count(F.when(F.col(LSN_COL).isNull(), 1)).alias("n_null"),
@@ -1111,17 +1152,19 @@ class LakeTable:
         # delta zone maps widen across delta commits exactly like append's
         # base zones; a bucket whose existing deltas predate delta_stats
         # tracking has unknown zones, and _merge_zones(None, x) poisons the
-        # union to {} so it can never prune
+        # union to {} so it can never prune. Each delta dir also keeps its
+        # own _lsn range (that column only: read_changes prunes dirs on it)
         delta_stats = {k: dict(v) for k, v in m.get("delta_stats", {}).items()}
         for b, dlist in written.items():
             had_prior = bool(deltas.get(b))
             deltas.setdefault(b, []).extend(dlist)
             nz = wstats[b].get("zones", {})
-            if had_prior:
-                prior = (delta_stats.get(b) or {}).get("zones")
-                delta_stats[b] = {"zones": self._merge_zones(prior, nz)}
-            else:
-                delta_stats[b] = {"zones": nz}
+            prior = (delta_stats.get(b) or {}) if had_prior else {}
+            zones = self._merge_zones(prior.get("zones"), nz) if had_prior else nz
+            dirs = dict(prior.get("dirs") or {})
+            if LSN_COL in nz:
+                dirs.update({d: {LSN_COL: nz[LSN_COL]} for d in dlist})
+            delta_stats[b] = {"zones": zones, "dirs": dirs}
 
         new_m = dict(m)
         new_m.update(
@@ -1435,7 +1478,7 @@ def _stat_parquet_file(path: str) -> dict:
                 name.startswith("_") and name != LSN_COL
             ):
                 # nested / system / known-unusable (the _lsn zone stays:
-                # it drives changelog bucket pruning)
+                # it drives changelog dir pruning)
                 continue
             st = col.statistics
             ok = (

@@ -269,3 +269,32 @@ def test_pipeline_with_schema_drift(spark, tmp_path):
     assert "quality" in t.schema().fieldNames()
     q = t.read().select("quality").where(F.col("quality").isNotNull()).count()
     assert q > 0
+
+
+def test_pipeline_epoch_discovery_ignores_non_epoch_entries(spark, tmp_path):
+    """Epochs are discovered from the log's ``_epoch_part=<n>`` dir names:
+    entries Spark's file index skips and epoch dirs not yet holding a data
+    file are ignored, and an empty log has no epochs to run."""
+    log = tmp_path / "log"
+    write_cdc_log(spark, str(log), 2000, n_keys=100, events_per_epoch=1000)
+    (log / "_SUCCESS").touch()
+    (log / ".hidden").touch()
+    (log / "_temporary" / "0").mkdir(parents=True)
+    (log / "_temporary" / "0" / "part-0.parquet").touch()
+    (log / "_epoch_part=7").mkdir()  # a writer has not landed its file yet
+    (log / "_epoch_part=8").mkdir()
+    (log / "_epoch_part=8" / ".part-0.parquet.crc").touch()
+    (log / "_epoch_part=8" / "_SUCCESS").touch()
+    tp = str(tmp_path / "lake")
+    LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    cfg = IngestConfig(log_path=str(log), table_path=tp, checkpoint_path=str(tmp_path / "ck"))
+    assert [r.epoch for r in run_ingest(spark, cfg)] == [0, 1]
+    assert run_ingest(spark, cfg) == []  # caught up
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    cfg_e = IngestConfig(log_path=str(empty), table_path=tp, checkpoint_path=str(tmp_path / "ck-e"))
+    version = LakeTable(spark, tp).manifest()["version"]
+    assert run_ingest(spark, cfg_e) == []
+    assert LakeTable(spark, tp).manifest()["version"] == version

@@ -1,11 +1,12 @@
 """Poison-row quarantine + lineage observability surface."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
 from geopetl_spark import LakeTable
-from geopetl_spark.streaming.lineage import LineageLog, read_lineage
+from geopetl_spark.streaming.lineage import LineageLog, partition_lineage, read_lineage
 from geopetl_spark.streaming.pipeline import IngestConfig, apply_epoch
 from tests.test_cdc_engine import DOC_SCHEMA
 
@@ -40,10 +41,18 @@ def test_null_key_and_lsn_rows_quarantined(spark, tmp_path):
     assert row["min_lsn"] == 1 and row["max_lsn"] == 3
 
 
-def test_reapply_skip_path_still_accounts_quarantine(spark, tmp_path):
+def test_reapply_skip_path_still_accounts_quarantine(spark, tmp_path, monkeypatch):
     """Re-applying an already-committed epoch takes the merge skip path; the
     fallback lineage scan must still report poison rows (previously lost)
-    and keeps per-partition granularity (partition_id >= 0)."""
+    and keeps per-partition granularity (partition_id >= 0). The lineage
+    phase times that scan."""
+    from geopetl_spark.streaming import pipeline
+
+    def slow_lineage(*args, **kwargs):
+        time.sleep(0.3)
+        return partition_lineage(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "partition_lineage", slow_lineage)
     tp = str(tmp_path / "lake")
     LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
     t = LakeTable(spark, tp)
@@ -60,6 +69,8 @@ def test_reapply_skip_path_still_accounts_quarantine(spark, tmp_path):
     apply_epoch(spark, cfg, t, batch, epoch=0, lineage_log=log)
     res2 = apply_epoch(spark, cfg, t, batch, epoch=0, lineage_log=log)  # deliberate re-apply
     assert res2.commit["operation"] == "skip"
+    assert set(res2.commit["phase_sec"]) == {"lineage", "merge"}
+    assert res2.commit["phase_sec"]["lineage"] >= 0.3
     assert res2.commit["rows_quarantined"] == 2
     second = log.read()[1]
     assert all(p["partition_id"] >= 0 for p in second["partitions"])
