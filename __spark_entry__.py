@@ -1042,7 +1042,8 @@ SHH as (select doc_id, sum(case when s > 0 then (1::BIGINT << j) else 0::BIGINT 
 def _lsh_bucket_sql(table_alias: str, n_bits: int = 4, j0: int = 0) -> str:
     """bucket id from ``n_bits`` deterministic integer hyperplanes starting
     at family index ``j0`` (mirrors
-    geopetl_spark.operators.ann._hyperplane_sign_bits / _multi_table_keyed:
+    geopetl_spark.operators.ann._hyperplane_buckets, which keys both
+    lsh_bucketed_topk and the near-dup index _multi_table_keyed:
     table t of the near-dup index uses j0 = t*n_bits)."""
     terms = []
     for jj in range(n_bits):

@@ -6,7 +6,6 @@ from .ann import (
     ivf_centroid_array,
     ivf_topk,
     ivf_train_centroids,
-    lsh_bucket,
     lsh_config_for,
     lsh_bucketed_topk,
 )
@@ -27,7 +26,7 @@ __all__ = [
     "range_join",
     "deterministic_sample", "hash_bucket", "pack_sequences", "split_by_hash",
     "component_stats", "dup_components",
-    "cosine_topk", "embedding_near_dup_pairs", "lsh_bucket", "lsh_bucketed_topk", "lsh_config_for",
+    "cosine_topk", "embedding_near_dup_pairs", "lsh_bucketed_topk", "lsh_config_for",
     "ivf_assign", "ivf_centroid_array", "ivf_topk", "ivf_train_centroids",
     "dedup_exact_events", "latest_per_key", "latest_per_key_window",
     "exact_dup_groups", "ngram_jaccard_pairs", "minhash_lsh_pairs",

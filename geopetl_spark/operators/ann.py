@@ -1,26 +1,31 @@
 """Similarity search over embedding columns.
 
-* :func:`cosine_topk` — exact brute-force top-k (the correctness baseline):
-  broadcast the (small) query set against the corpus, window top-k. At
-  cluster scale the corpus side stays partitioned and never shuffles; only
-  the per-partition top-k rows move (the final window input is ≤ k rows per
-  query per partition after the partial prune).
-* :func:`lsh_bucketed_topk` — the scale path: random-hyperplane LSH buckets
-  (deterministic integer hyperplanes, cross-engine reproducible), equi-join
-  on bucket, top-k within bucket. Recall < 1 by construction; bucket width
-  (``n_bits``) trades recall for candidate count.
+* :func:`cosine_topk` — exact brute-force top-k (the correctness baseline).
+* :func:`lsh_bucketed_topk` — approximate top-k over random-hyperplane LSH
+  buckets (deterministic integer hyperplanes, cross-engine reproducible);
+  bucket width (``n_bits``) trades recall for candidate count.
+* :func:`ivf_topk` — approximate top-k over the inverted lists of the
+  ``nprobe`` nearest centroids (:func:`ivf_centroid_array` seeding or
+  :func:`ivf_train_centroids` spherical k-means).
 * :func:`embedding_near_dup_pairs` — cosine-threshold near-dup pairs.
 
-All vector math is built-in (zip_with/aggregate → codegen); similarities are
-rounded to 6dp for cross-engine hash determinism.
+The three top-k searches share one scan (:func:`_topk_scan`): the query side
+is collected, then one Arrow pass over the corpus scores each batch with
+numpy kernels and emits a pruned per-batch top-k. Vector math is numpy over
+Arrow batches whose dots are sequential IEEE scans (:func:`_np_seq_dot`),
+bit-identical to the Spark expression fold (``functions.arrays.dot``) and to
+DuckDB's ``list_dot_product``; similarities are rounded to 6dp for
+cross-engine hash determinism.
 """
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.arrays import cosine, dot, to_double_array
+from ..functions.arrays import dot, to_double_array
 from ..plans.barriers import opaque
 from ..plans.ckpt import materialize
 
@@ -29,39 +34,12 @@ def with_unit_vector(df: DataFrame, vec_col: str, out_col: str = "_unit") -> Dat
     """Precompute the L2-normalized vector ONCE per row, so pairwise cosine
     reduces to a single dot product. The normalization order of operations
     (sequential sum of squares -> sqrt -> per-element divide) is mirrored
-    exactly in the SQL oracles, keeping round-6 cross-engine parity."""
+    exactly in :func:`_np_unit` and the SQL oracles."""
     v = to_double_array(F.col(vec_col))
     # opaque() stops CollapseProject from inlining the norm aggregate into
     # the per-element divide (which would make normalization O(dim^2))
     df = df.withColumn("_nrm", opaque(F.sqrt(dot(v, v)), seed=3))
     return df.withColumn(out_col, F.transform(v, lambda x: x / F.col("_nrm"))).drop("_nrm")
-
-
-def _np_units(df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str) -> DataFrame:
-    """(id, unit-vector) via one Arrow-batched numpy pass — bit-identical to
-    :func:`with_unit_vector`'s sequential fold (see :func:`_np_unit`), ~100×
-    cheaper than the interpreted higher-order-function evaluation. The id
-    column keeps its INPUT type (string/UUID ids work, not just integers)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField(out_id, df.schema[id_col].dataType),
-            T.StructField(out_vec, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def go(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-            yield pd.DataFrame({out_id: pdf[id_col], out_vec: list(_np_unit(v))})
-
-    return df.mapInPandas(go, schema=out_schema)
 
 
 def _np_pair_scored(pairs: DataFrame, a_vec: str, b_vec: str, keep: list[str]) -> DataFrame:
@@ -92,92 +70,93 @@ def _np_pair_scored(pairs: DataFrame, a_vec: str, b_vec: str, keep: list[str]) -
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "gemm",
-) -> DataFrame:
-    """Exact top-k neighbors per query by cosine (excludes self-matches).
-    Ties break on neighbor id for full determinism.
+def _topk_scan(corpus: DataFrame, id_col: str, q_type, queries: list, batch, k: int) -> DataFrame:
+    """The one top-k search kernel: exact (round6(sim) desc, neighbor id asc)
+    top-k per query over ``corpus``, self-matches excluded.
 
-    ``method='gemm'`` (default, r7 layout): the query set — small by the
-    operator's own contract (it was broadcast before) — is collected and
-    normalized driver-side, then ONE Arrow pass over the corpus scores each
-    batch against every query with the sequential-scan kernel
-    (bit-identical to the fold — ``tests/test_text_clean_ivf.py`` proves
-    the kernel) and emits only a margin-pruned per-batch top-k
-    (:func:`_topk_prune`). The corpus is never joined or replicated per
-    query — the r6 shape shipped |corpus|×|queries| vector PAIRS through
-    Arrow; now only corpus bytes cross once and O(k·queries) candidate rows
-    reach the final window. ``method='fold'`` is the pure-expression
-    variant."""
-    if method == "gemm":
+    ``queries`` is the collected query side, a list of ``(query_id,
+    unit_vector, allowed_keys)``; ``allowed_keys`` is None (score every row)
+    or the row keys the query may match (its LSH bucket, its probed
+    centroids). ``batch(pdf)`` maps one Arrow batch of ``corpus`` to
+    ``(ids, unit_matrix, row_keys)``. ONE ``mapInPandas`` pass scores each
+    batch against every query with the sequential-scan kernel and emits
+    only a margin-pruned per-batch top-k (:func:`_topk_prune`), so the
+    corpus is never joined or replicated per query and O(k·queries) rows
+    per batch reach the final window. ``query_id`` is typed ``q_type``,
+    ``neighbor_id`` keeps the corpus id column's type.
+
+    Driver-collect contract: the caller collects the query side, so it must
+    fit on the driver (the corpus side is never collected)."""
+    from pyspark.sql import types as T
+
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", q_type),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("_sim", T.DoubleType()),
+        ]
+    )
+
+    def scan(batches):
         import numpy as np
-        from pyspark.sql import types as T
+        import pandas as pd
 
-        q_rows = queries.select(id_col, vec_col).collect()
-        q_ids = [r[id_col] for r in q_rows]
-        q_mat = (
-            _np_unit(np.array([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows]))
-            if q_rows
-            else None
-        )
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType),
-                T.StructField("neighbor_id", corpus.schema[id_col].dataType),
-                T.StructField("_sim", T.DoubleType()),
-            ]
-        )
-
-        def scan(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0 or not q_ids:
+        for pdf in batches:
+            if len(pdf) == 0 or not queries:
+                continue
+            ids, u, keys = batch(pdf)
+            out_q, out_n, out_s = [], [], []
+            for qid, qv, allowed in queries:
+                m = ids != qid
+                if allowed is not None:
+                    m &= np.isin(keys, allowed)
+                if not m.any():
                     continue
-                u = _np_unit(np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]))
-                ids = pdf[id_col].to_numpy()
-                out_q, out_n, out_s = [], [], []
-                for qi, qid in enumerate(q_ids):
-                    sims = _np_seq_dot(u, q_mat[qi][None, :])
-                    m = ids != qid
-                    pid, psim = _topk_prune(ids[m], sims[m], k)
-                    out_q.extend([qid] * len(pid))
-                    out_n.extend(pid.tolist())
-                    out_s.extend(psim.tolist())
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "_sim": out_s})
+                pid, psim = _topk_prune(ids[m], _np_seq_dot(u[m], qv[None, :]), k)
+                out_q.extend([qid] * len(pid))
+                out_n.extend(pid.tolist())
+                out_s.extend(psim.tolist())
+            if out_q:
+                yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "_sim": out_s})
 
-        scored = (
-            corpus.select(id_col, vec_col)
-            .mapInPandas(scan, schema=out_schema)
-            .select("query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("similarity"))
-        )
-    else:
-        q = with_unit_vector(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), F.col("_unit").alias("_qv")
-        )
-        c = with_unit_vector(corpus, vec_col).select(
-            F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("_cv")
-        )
-        scored = (
-            c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(dot(F.col("_qv"), F.col("_cv")), 6).alias("similarity"),
-            )
-        )
+    scored = corpus.mapInPandas(scan, schema=out_schema).select(
+        "query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("similarity")
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "similarity", "rank")
     )
+
+
+def cosine_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k neighbors per query by cosine (excludes self-matches).
+    Ties break on neighbor id for full determinism. The query set is
+    collected and normalized driver-side; every corpus row is scored in
+    one :func:`_topk_scan` pass."""
+    import numpy as np
+
+    q_rows = queries.select(id_col, vec_col).collect()
+    units = (
+        _np_unit(np.array([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows]))
+        if q_rows
+        else []
+    )
+    qs = [(r[id_col], u, None) for r, u in zip(q_rows, units)]
+
+    def batch(pdf):
+        u = _np_unit(np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]))
+        return pdf[id_col].to_numpy(), u, None
+
+    corpus = corpus.select(id_col, vec_col)
+    return _topk_scan(corpus, id_col, queries.schema[id_col].dataType, qs, batch, k)
 
 
 def _hyperplane_weight(d: int, j: int) -> float:
@@ -187,33 +166,57 @@ def _hyperplane_weight(d: int, j: int) -> float:
         k(d, j) = (1103515245*(d + 64*j) + 12345) mod 2^31
         w(d, j) = ((k*k) // 2048) mod 2001 - 1000
 
-    The quadratic mix is what makes planes INDEPENDENT: round 4's affine
-    family ``(a*(d + 31*j) + c) mod 2001`` collapses to one arithmetic
-    progression mod 2001 (every plane = the same vector plus a per-plane
-    constant, modulo wraparound), so tables correlated and multi-table
-    recall undershot its model by ~2× in miss rate (measured 0.843 vs
-    modeled 0.911 at θ=0.40, BENCH/BASELINE.md). Squaring k breaks the
-    affinity in ``d``; measured recall now tracks the independence model
-    (0.958 vs 0.955 at 4×18). All ops stay in int64 (k < 2^31, k² < 2^62)
-    so DuckDB reproduces them exactly."""
+    The quadratic mix is what makes planes INDEPENDENT: an affine family
+    ``(a*(d + 31*j) + c) mod 2001`` collapses to one arithmetic progression
+    mod 2001 (every plane = the same vector plus a per-plane constant,
+    modulo wraparound), so tables correlate and multi-table recall
+    undershoots its model by ~2× in miss rate (measured 0.843 vs modeled
+    0.911 at θ=0.40, BENCH/BASELINE.md). Squaring k breaks the affinity in
+    ``d``; measured recall tracks the independence model (0.958 vs 0.955 at
+    4×18). All ops stay in int64 (k < 2^31, k² < 2^62) so DuckDB reproduces
+    them exactly."""
     k = (1103515245 * (d + 64 * j) + 12345) % 2147483648
     return float(((k * k) // 2048) % 2001 - 1000)
 
 
-def _hyperplane_sign_bits(vec, n_bits: int, dim: int):
-    """Bucket id from ``n_bits`` deterministic hyperplanes
-    (:func:`_hyperplane_weight`): sum_j sign_bit_j * 2^j."""
-    v = to_double_array(vec)
-    bucket = F.lit(0).cast("long")
-    for j in range(n_bits):
-        w_j = F.array(*[F.lit(_hyperplane_weight(d, j)) for d in range(dim)])
-        s = dot(v, w_j)
-        bucket = bucket + F.when(s > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
-    return bucket
+@lru_cache(maxsize=None)
+def _planes(n_planes: int, width: int):
+    """Hyperplanes j = 0..n_planes-1 of the shared family at ``width``: a
+    pure function of (j, d), so any executor (and the SQL oracle)
+    regenerates the identical matrix. Cached per worker process."""
+    import numpy as np
+
+    return np.array(
+        [[_hyperplane_weight(d, j) for d in range(width)] for j in range(n_planes)],
+        dtype=np.float64,
+    )
 
 
-def lsh_bucket(df: DataFrame, n_bits: int, dim: int, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("bucket", _hyperplane_sign_bits(F.col(vec_col), n_bits, dim))
+def _hyperplane_buckets(v, n_bits: int, dim: int | None, n_tables: int = 1):
+    """LSH bucket ids, shape (rows, n_tables), of the RAW vectors ``v``.
+    Table t uses hyperplanes j = t*n_bits .. t*n_bits+n_bits-1 and bucket =
+    sum_j sign_bit_j * 2^(j - t*n_bits); every dot is a sequential IEEE scan
+    (:func:`_np_seq_dot`), so the SQL oracle reproduces each sign bit.
+
+    ``dim`` pins the hyperplane width: with ``dim < len(vector)`` only the
+    first ``dim`` components enter the bucket dot; ``dim > len(vector)``
+    raises. ``None``: the vectors' own width."""
+    import numpy as np
+
+    if dim is not None and dim > v.shape[1]:
+        raise ValueError(f"dim={dim} exceeds vector length {v.shape[1]} for LSH bucketing")
+    vb = v if dim is None else v[:, :dim]
+    W = _planes(n_bits * n_tables, vb.shape[1])
+    signs = np.empty((len(v), n_bits * n_tables), dtype=bool)
+    for j in range(n_bits * n_tables):
+        signs[:, j] = _np_seq_dot(vb, W[j][None, :]) > 0
+    return np.stack(
+        [
+            (signs[:, t * n_bits : (t + 1) * n_bits] * (1 << np.arange(n_bits))).sum(axis=1)
+            for t in range(n_tables)
+        ],
+        axis=1,
+    )
 
 
 def lsh_bucketed_topk(
@@ -224,114 +227,28 @@ def lsh_bucketed_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "gemm",
 ) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's LSH bucket.
-    At scale only same-bucket pairs are scored — the pair space is never
-    enumerated.
+    """Approximate top-k: candidates limited to the query's LSH bucket
+    (table 0 of the :func:`_hyperplane_buckets` family over the first
+    ``dim`` components). The query set is collected, normalized and
+    bucketed driver-side; one :func:`_topk_scan` pass buckets each corpus
+    batch and scores only the rows sharing a query's bucket — no bucket
+    join, no per-pair vector shipping."""
+    import numpy as np
 
-    ``method='gemm'`` (default, r7 layout): the small query set is
-    collected, normalized, and bucketed driver-side (identical hyperplane
-    family and kernels — table 0 of :func:`_multi_table_keyed` IS
-    :func:`lsh_bucket`'s plane set), then ONE Arrow pass over the corpus
-    buckets each batch, scores rows that share a query's bucket with the
-    sequential-scan kernel, and emits a margin-pruned per-batch top-k
-    (:func:`_topk_prune`) — no bucket join, no per-pair vector shipping,
-    one corpus pass total (the r6 shape ran the keyer pass per side plus a
-    pair-scoring pass). ``method='fold'``: pure-expression variant, same
-    results."""
-    if method == "gemm":
-        import numpy as np
-        from pyspark.sql import types as T
+    q_rows = queries.select(id_col, vec_col).collect()
+    qs = []  # empty query set: the scan emits nothing
+    if q_rows:
+        v_q = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
+        b_q = _hyperplane_buckets(v_q, n_bits, dim)[:, 0]
+        qs = [(r[id_col], u, [b]) for r, u, b in zip(q_rows, _np_unit(v_q), b_q)]
 
-        q_rows = queries.select(id_col, vec_col).collect()
-        q_ids = [r[id_col] for r in q_rows]
-        q_buckets = q_mat = None  # empty query set: the scan emits nothing
-        if q_rows:
-            v_q = np.array([np.asarray(r[vec_col], dtype=np.float64) for r in q_rows])
-            if dim is not None and dim > v_q.shape[1]:
-                raise ValueError(
-                    f"dim={dim} exceeds vector length {v_q.shape[1]} for LSH bucketing"
-                )
-            vb_q = v_q if dim is None else v_q[:, :dim]
-            W_q = np.array(
-                [[_hyperplane_weight(d, j) for d in range(vb_q.shape[1])] for j in range(n_bits)]
-            )
-            signs_q = np.empty((len(q_rows), n_bits), dtype=bool)
-            for j in range(n_bits):
-                signs_q[:, j] = _np_seq_dot(vb_q, W_q[j][None, :]) > 0
-            q_buckets = (signs_q * (1 << np.arange(n_bits))).sum(axis=1)
-            q_mat = _np_unit(v_q)
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType),
-                T.StructField("neighbor_id", corpus.schema[id_col].dataType),
-                T.StructField("_sim", T.DoubleType()),
-            ]
-        )
+    def batch(pdf):
+        v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
+        return pdf[id_col].to_numpy(), _np_unit(v), _hyperplane_buckets(v, n_bits, dim)[:, 0]
 
-        def scan(batches):
-            import pandas as pd
-
-            W = None
-            for pdf in batches:
-                if len(pdf) == 0 or not q_ids:
-                    continue
-                v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-                if dim is not None and dim > v.shape[1]:
-                    raise ValueError(
-                        f"dim={dim} exceeds vector length {v.shape[1]} for LSH bucketing"
-                    )
-                vb = v if dim is None else v[:, :dim]
-                if W is None:
-                    W = np.array(
-                        [
-                            [_hyperplane_weight(d, j) for d in range(vb.shape[1])]
-                            for j in range(n_bits)
-                        ]
-                    )
-                u = _np_unit(v)
-                signs = np.empty((len(pdf), n_bits), dtype=bool)
-                for j in range(n_bits):
-                    signs[:, j] = _np_seq_dot(vb, W[j][None, :]) > 0
-                buckets = (signs * (1 << np.arange(n_bits))).sum(axis=1)
-                ids = pdf[id_col].to_numpy()
-                out_q, out_n, out_s = [], [], []
-                for qi, qid in enumerate(q_ids):
-                    m = (buckets == q_buckets[qi]) & (ids != qid)
-                    if not m.any():
-                        continue
-                    sims = _np_seq_dot(u[m], q_mat[qi][None, :])
-                    pid, psim = _topk_prune(ids[m], sims, k)
-                    out_q.extend([qid] * len(pid))
-                    out_n.extend(pid.tolist())
-                    out_s.extend(psim.tolist())
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "_sim": out_s})
-
-        scored = (
-            corpus.select(id_col, vec_col)
-            .mapInPandas(scan, schema=out_schema)
-            .select("query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("similarity"))
-        )
-    else:
-        qb = with_unit_vector(lsh_bucket(queries, n_bits, dim, id_col, vec_col), vec_col).select(
-            F.col(id_col).alias("query_id"), F.col("_unit").alias("_qv"), "bucket"
-        )
-        cb = with_unit_vector(lsh_bucket(corpus, n_bits, dim, id_col, vec_col), vec_col).select(
-            F.col(id_col).alias("neighbor_id"), F.col("_unit").alias("_cv"), "bucket"
-        )
-        scored = (
-            cb.join(F.broadcast(qb), ["bucket"])
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id", F.round(dot(F.col("_qv"), F.col("_cv")), 6).alias("similarity"))
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
+    corpus = corpus.select(id_col, vec_col)
+    return _topk_scan(corpus, id_col, queries.schema[id_col].dataType, qs, batch, k)
 
 
 def _multi_table_keyed(
@@ -343,33 +260,12 @@ def _multi_table_keyed(
     dim: int | None = None,
 ) -> DataFrame:
     """One Arrow-batched pass over the corpus emitting, per row, the
-    L2-normalized vector plus ``n_tables`` LSH bucket keys ('t:bucket').
-
-    Table t uses hyperplanes j = t*n_bits .. t*n_bits+n_bits-1 of the shared
-    deterministic family (:func:`_hyperplane_sign_bits`), so table 0 is
-    byte-compatible with :func:`lsh_bucket` and every table is reproducible
-    in the SQL oracle. Buckets hash the RAW (double-cast) vector — the same
-    convention as :func:`lsh_bucket` — and all dots are sequential IEEE
-    scans (:func:`_np_seq_dot`), bit-identical to the Spark expression fold.
-
-    ``dim`` (optional) pins the hyperplane width like :func:`lsh_bucket`'s
-    parameter: with ``dim < len(vector)`` only the first ``dim`` components
-    enter the bucket dot (the zip_with truncation semantics of the fold
-    path); ``dim > len(vector)`` raises (the fold would yield nulls).
-    Default: the vectors' own width. The id column keeps its input type."""
+    L2-normalized vector plus ``n_tables`` LSH bucket keys ('t:bucket') from
+    :func:`_hyperplane_buckets` — table 0 is :func:`lsh_bucketed_topk`'s
+    plane set, and every table is reproducible in the SQL oracle. Buckets
+    hash the RAW (double-cast) vector. The id column keeps its input type."""
     import numpy as np
     from pyspark.sql import types as T
-
-    def _planes(width: int):
-        # hyperplane weights are a pure function of (j, d): any executor (and
-        # the SQL oracle) regenerates the identical family for its width
-        return np.array(
-            [
-                [_hyperplane_weight(d, j) for d in range(width)]
-                for j in range(n_bits * n_tables)
-            ],
-            dtype=np.float64,
-        )
 
     out_schema = T.StructType(
         [
@@ -382,34 +278,15 @@ def _multi_table_keyed(
     def keyer(batches):
         import pandas as pd
 
-        W = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-            if dim is not None and dim > v.shape[1]:
-                raise ValueError(
-                    f"dim={dim} exceeds vector length {v.shape[1]} for LSH bucketing"
-                )
-            vb = v if dim is None else v[:, :dim]
-            if W is None:
-                W = _planes(vb.shape[1])
-            u = _np_unit(v)
-            signs = np.empty((len(pdf), n_bits * n_tables), dtype=bool)
-            for j in range(n_bits * n_tables):
-                signs[:, j] = _np_seq_dot(vb, W[j][None, :]) > 0
-            keys = []
-            for t in range(n_tables):
-                b = (signs[:, t * n_bits : (t + 1) * n_bits] * (1 << np.arange(n_bits))).sum(axis=1)
-                keys.append(np.char.add(f"{t}:", b.astype(np.int64).astype(str)))
-            kmat = np.stack(keys, axis=1)
-            yield pd.DataFrame(
-                {
-                    "_id": pdf[id_col],
-                    "_unit": list(u),
-                    "_keys": list(kmat),
-                }
+            b = _hyperplane_buckets(v, n_bits, dim, n_tables)
+            kmat = np.stack(
+                [np.char.add(f"{t}:", b[:, t].astype(str)) for t in range(n_tables)], axis=1
             )
+            yield pd.DataFrame({"_id": pdf[id_col], "_unit": list(_np_unit(v)), "_keys": list(kmat)})
 
     return df.mapInPandas(keyer, schema=out_schema)
 
@@ -431,7 +308,7 @@ def lsh_config_for(
     threshold collide more often, so the model is a lower bound across the
     qualifying range.
 
-    **Calibration (round-5):** the independence model overestimates this
+    **Calibration:** the independence model overestimates this
     engine's family — the hyperplanes are deterministic integer
     pseudo-planes applied to raw non-centered vectors, so collisions
     correlate across tables (measured miss rate ≈ 1.8× the modeled one on
@@ -474,6 +351,34 @@ def lsh_config_for(
             stacklevel=2,
         )
     return n_bits, n_tables, recall
+
+
+# pairs per slab of the per-bucket near-dup kernel: bounds the cumsum
+# intermediate to ~0.5 GB however large the bucket
+_PAIR_SLAB = 1 << 20
+
+
+def _pair_slabs(n: int):
+    """The upper-triangle pairs (i, j), i < j, of ``n`` rows in row-major
+    order (the order of ``np.triu_indices(n, 1)``), yielded as index-array
+    slabs of whole rows holding at most ``_PAIR_SLAB`` pairs (a row whose
+    own pair count exceeds it is a slab alone). Only one slab exists at a
+    time, so memory is bounded by the slab, not by n²; a bucket that fits
+    in one slab yields exactly ``np.triu_indices(n, 1)``."""
+    import numpy as np
+
+    i0 = 0
+    while i0 < n - 1:
+        i1, size = i0 + 1, n - 1 - i0
+        while i1 < n - 1 and size + (n - 1 - i1) <= _PAIR_SLAB:
+            size += n - 1 - i1
+            i1 += 1
+        rows = np.arange(i0, i1)
+        cnt = n - 1 - rows
+        ii = np.repeat(rows, cnt)
+        start = np.repeat(np.cumsum(cnt) - cnt, cnt)  # slab offset of each row's first pair
+        yield ii, np.arange(size) - start + ii + 1
+        i0 = i1
 
 
 def embedding_near_dup_pairs(
@@ -531,10 +436,9 @@ def embedding_near_dup_pairs(
     ``n_blocks`` with corpus size (tasks = B(B+1)/2, replication factor = B;
     communication O(n·B) for the inherently O(n²) exact problem, with BLAS
     doing the flops instead of an interpreted fold).
-
-    ``method='fold'``: single-pass expression-only variant (no Python at
-    all) — the conservative fallback.
     """
+    if method not in ("lsh", "blocked"):
+        raise ValueError(f"unknown method {method!r} (lsh|blocked)")
     if method == "lsh":
         from .dedup_text import _small_relation
 
@@ -545,8 +449,8 @@ def embedding_near_dup_pairs(
         # materialize the keyed corpus ONCE (guide §3.3): its consumers
         # below (candidate sides a/b + the verify side) sit behind
         # differently-keyed joins, so without the checkpoint the Arrow
-        # normalize+hash pass over the corpus runs 4× (confirmed in the r6
-        # physical plan: four MapInPandas nodes over the same scan)
+        # normalize+hash pass over the corpus runs 4× (one MapInPandas
+        # node per consumer over the same scan)
         keyed = materialize(
             _multi_table_keyed(df, n_bits, n_tables, id_col, vec_col), "ann_keyed"
         )
@@ -557,7 +461,7 @@ def embedding_near_dup_pairs(
             .select(F.col("ka._id").alias("id_a"), F.col("kb._id").alias("id_b"))
         )
         if _small_relation(df, lut_threshold_bytes):
-            # Small-corpus pair path (r7): group the exploded index by
+            # Small-corpus pair path: group the exploded index by
             # (table, bucket) and generate + score + threshold-filter each
             # bucket's pairs INSIDE one vectorized kernel — the candidate
             # slots (Σ bucket², sf0.1: 4.5M for 2,000 vectors under the
@@ -569,10 +473,10 @@ def embedding_near_dup_pairs(
             # max 6-dp rounding perturbation) and the exact rounded filter
             # below decides membership, so the emitted set is identical to
             # the join-verify path's. Gated by the same plan-stats probe
-            # as the dedup broadcast hints: per-task memory is bounded by
-            # the largest bucket, which the gate caps at the corpus size;
-            # above the gate — the 100-TB case — the equi-join + pair
-            # verify below keeps the work spread across the cluster.
+            # as the dedup broadcast hints; pairs are scored in bounded
+            # slabs (:func:`_pair_slabs`), and above the gate — the 100-TB
+            # case — the equi-join + pair verify below keeps the work
+            # spread across the cluster.
             import numpy as np
             from pyspark.sql import types as T
 
@@ -595,11 +499,8 @@ def embedding_near_dup_pairs(
                 order = np.argsort(ids, kind="stable")
                 ids = ids[order]
                 mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf["_unit"]])[order]
-                ii, jj = np.triu_indices(len(ids), k=1)
                 out_a, out_b, out_s = [], [], []
-                step = 1 << 20  # bound the cumsum intermediate to ~0.5 GB
-                for s in range(0, len(ii), step):
-                    isl, jsl = ii[s : s + step], jj[s : s + step]
+                for isl, jsl in _pair_slabs(len(ids)):
                     sims = _np_seq_dot(mat[isl], mat[jsl])
                     m = sims >= threshold - margin
                     if m.any():
@@ -631,33 +532,21 @@ def embedding_near_dup_pairs(
             F.col("similarity") >= threshold
         )
 
-    u = with_unit_vector(df, vec_col)
-    if method == "fold":
-        a = u.select(F.col(id_col).alias("id_a"), F.col("_unit").alias("_va"))
-        b = u.select(F.col(id_col).alias("id_b"), F.col("_unit").alias("_vb"))
-        return (
-            a.join(b, F.col("id_a") < F.col("id_b"))
-            # opaque() keeps the similarity fold out of the join condition:
-            # without it the threshold filter is pushed into the nested-loop
-            # join and the fold runs for every candidate pair, twice
-            .select("id_a", "id_b", F.round(opaque(dot(F.col("_va"), F.col("_vb"))), 6).alias("similarity"))
-            .filter(F.col("similarity") >= threshold)
-        )
-
     import numpy as np
     from pyspark.sql import types as T
 
     # the blocked GEMM kernel runs ids through int64 numpy arrays — loud
-    # precondition instead of mangled UUIDs (lsh/fold preserve any id type)
+    # precondition instead of mangled UUIDs (lsh preserves any id type)
     if not isinstance(
         df.schema[id_col].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
     ):
         raise ValueError(
             f"method='blocked' requires an integer id column; {id_col} is "
-            f"{df.schema[id_col].dataType.simpleString()} (use method='lsh' or 'fold')"
+            f"{df.schema[id_col].dataType.simpleString()} (use method='lsh')"
         )
 
+    u = with_unit_vector(df, vec_col)
     spark = df.sparkSession
     margin = 1e-6
     block_pairs = spark.createDataFrame(
@@ -714,21 +603,10 @@ def embedding_near_dup_pairs(
 # IVF (inverted-file) ANN: the centroid-partitioned scale path
 # ---------------------------------------------------------------------------
 
-def ivf_centroid_array(
-    corpus: DataFrame, n_centroids: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """One-row LITERAL DataFrame holding the centroid table as a sorted
-    ``array<struct<cid, u>>`` of unit vectors — the build-once artifact of
-    the IVF index (eager: runs one TakeOrdered job of ``n_centroids`` rows).
-
-    Centroid choice is deliberately *training-free and deterministic* — the
-    ``n_centroids`` corpus rows with the smallest ids (a seeded-sample
-    stand-in, cross-engine reproducible). At scale you'd swap in offline
-    k-means centroids; :func:`ivf_assign`/:func:`ivf_topk` below are
-    agnostic to where the centroid rows came from. Normalization happens
-    driver-side over the k collected rows with the cumsum scan
-    (:func:`_np_unit`) — bit-identical to the Spark expression fold, so the
-    literal is byte-compatible with the previous in-plan construction."""
+def _seed_centroids(corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str):
+    """(ids, unit matrix) of the ``n_centroids`` corpus rows with the
+    smallest ids — one TakeOrdered job; normalization runs driver-side over
+    the collected rows with :func:`_np_unit`."""
     import numpy as np
 
     rows = (
@@ -738,11 +616,29 @@ def ivf_centroid_array(
         .collect()
     )
     mat = np.array([np.asarray(r["_cv"], dtype=np.float64) for r in rows])
-    units = _np_unit(mat) if len(rows) else mat
-    lit = [(int(r["cid"]), [float(x) for x in u]) for r, u in zip(rows, units)]
-    return corpus.sparkSession.createDataFrame(
-        [(lit,)], "_centroids array<struct<cid:bigint,u:array<double>>>"
-    )
+    return [int(r["cid"]) for r in rows], _np_unit(mat) if len(rows) else mat
+
+
+def _centroid_literal(spark, cids, units) -> DataFrame:
+    """The one-row centroid table: ``_centroids array<struct<cid, u>>``."""
+    lit = [(int(c), [float(x) for x in u]) for c, u in zip(cids, units)]
+    return spark.createDataFrame([(lit,)], "_centroids array<struct<cid:bigint,u:array<double>>>")
+
+
+def ivf_centroid_array(
+    corpus: DataFrame, n_centroids: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """One-row LITERAL DataFrame holding the centroid table as a sorted
+    ``array<struct<cid, u>>`` of unit vectors — the build-once artifact of
+    the IVF index (eager: runs one TakeOrdered job of ``n_centroids`` rows).
+
+    Centroid choice is deliberately *training-free and deterministic* — the
+    ``n_centroids`` corpus rows with the smallest ids (a seeded-sample
+    stand-in, cross-engine reproducible). :func:`ivf_train_centroids` is the
+    trained alternative; :func:`ivf_assign`/:func:`ivf_topk` are agnostic to
+    where the centroid rows came from. Normalization uses the cumsum scan
+    (:func:`_np_unit`), bit-identical to the Spark expression fold."""
+    return _centroid_literal(corpus.sparkSession, *_seed_centroids(corpus, n_centroids, id_col, vec_col))
 
 
 # unit-vector quantization scale for the k-means trainer: floor(u*1e9+0.5)
@@ -784,6 +680,17 @@ def _np_seq_dot(a, b):
     return np.cumsum(a * b, axis=1)[:, -1]
 
 
+def _np_centroid_sims(u, cmat):
+    """(rows × centroids) sequential-scan dots of unit rows ``u`` against
+    every centroid row of ``cmat``."""
+    import numpy as np
+
+    sims = np.empty((len(u), len(cmat)), dtype=np.float64)
+    for j in range(len(cmat)):
+        sims[:, j] = _np_seq_dot(u, cmat[j][None, :])
+    return sims
+
+
 def _topk_prune(ids, sims, k, margin=2e-6):
     """Per-batch candidate prune for a global (round6(sim) desc, id asc)
     top-k: keep every row whose RAW sim is within ``margin`` of the batch's
@@ -805,13 +712,52 @@ def _topk_prune(ids, sims, k, margin=2e-6):
 
 def _assignment_expr(censims_col, cids: list[int]):
     """argmax over the per-centroid sim array with (round6 desc, cid asc)
-    ties — the same discipline as the expression path, evaluated over 8
-    scalars per row (cheap) instead of 8 interpreted vector folds."""
+    ties — the discipline of the probe lists and the SQL oracles, evaluated
+    over k scalars per row."""
     zipped = F.arrays_zip(censims_col.alias("s"), F.array(*[F.lit(int(c)).cast("long") for c in cids]).alias("cid"))
     best = F.array_max(
         F.transform(zipped, lambda e: F.struct(F.round(e["s"], 6).alias("s"), (-e["cid"]).alias("negcid")))
     )
     return (-best["negcid"]).cast("long")
+
+
+def _lloyd_partials(u, cmat):
+    """One Lloyd assign + INT64 cluster-sum step over unit rows ``u``:
+    ``[(centroid, count, int64 sum vector)]`` for every non-empty cluster.
+
+    Assignment uses the quantized comparator (floor(s*1e6+0.5) desc, cid
+    asc) — round-half-up on BOTH engines, no half-even ambiguity; argmax
+    returns the FIRST max -> smallest centroid id. Each unit vector is
+    quantized per component to round-half-up INT64, so cluster sums are
+    exact integers — associative, commutative, invariant to Arrow batch
+    layout and reduce order, and replayable by any SQL engine."""
+    import numpy as np
+
+    assign = np.argmax(np.floor(_np_centroid_sims(u, cmat) * 1e6 + 0.5), axis=1)
+    q = np.floor(u * _IVF_QUANT + 0.5).astype(np.int64)
+    return [
+        (int(c), int((assign == c).sum()), q[assign == c].sum(axis=0)) for c in np.unique(assign)
+    ]
+
+
+def _lloyd_update(cmat, partials):
+    """Reduce ``(centroid, count, int64 sum)`` partials (integer sums:
+    order-free) into the next L2-renormalized centroid matrix; empty
+    clusters keep their previous centroid. The fixed op order
+    (sum/n)/SCALE is mirrored verbatim in the DuckDB oracle
+    (``__spark_entry__._ivf_trained_oracle_sql``)."""
+    import numpy as np
+
+    sums: dict[int, np.ndarray] = {}
+    counts: dict[int, int] = {}
+    for c, n, s in partials:
+        sums[c] = sums.get(c, 0) + np.asarray(s, dtype=np.int64)
+        counts[c] = counts.get(c, 0) + n
+    new = cmat.copy()
+    for c, s in sums.items():
+        if counts[c] > 0:
+            new[c] = (s.astype(np.float64) / counts[c]) / _IVF_QUANT
+    return _np_unit(new)
 
 
 def ivf_train_centroids(
@@ -823,85 +769,53 @@ def ivf_train_centroids(
     driver_threshold_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Offline spherical k-means training for the IVF index — the
-    quality upgrade over :func:`ivf_centroid_array`'s smallest-id seeding
-    (whose docstring reserves exactly this slot).
+    quality upgrade over :func:`ivf_centroid_array`'s smallest-id seeding,
+    which also provides the initial centroids.
 
-    Shape per Lloyd iteration (the 100-TB-honest layout):
+    Each Lloyd iteration is one :func:`_lloyd_partials` step (assign every
+    unit vector to its nearest centroid with the same cumsum kernels as
+    :func:`ivf_assign`, then INT64-quantized cluster sums) followed by one
+    :func:`_lloyd_update` reduce. The step runs in one of two places:
 
-    * **assign + partial sums, ONE Arrow pass**: every corpus partition
-      assigns its vectors to the nearest current centroid (same cumsum
-      kernels as :func:`ivf_assign` — bit-identical dots) and emits one
-      (centroid, count, sum-vector) row PER BATCH — the map-side combine.
-      The corpus never shuffles.
-    * **driver reduce over k·n_batches tiny rows.**
+    * **driver** — when Catalyst's plan-size estimate says the training
+      corpus fits comfortably on the driver (the plan-stats/file-size probe
+      the dedup broadcast hints use, threshold ``driver_threshold_bytes``),
+      the vectors are collected ONCE and all ``n_iter`` iterations run
+      locally: one job instead of ``n_iter`` (Arrow scan + collect) pairs.
+    * **distributed** — above the threshold (the 100-TB case) each
+      iteration is ONE Arrow pass emitting one (centroid, count, sum) row
+      per batch (the map-side combine; the corpus never shuffles) and a
+      driver reduce over k·n_batches tiny rows.
 
-    Cross-engine exactness (round 6 — the ``embed_ivf_trained`` oracle):
-    each row's unit vector is quantized per component to a scaled INT64
-    (``floor(u*1e9 + 0.5)``) before summation, so cluster partial sums are
-    exact integers — associative, commutative, independent of Arrow batch
-    boundaries and reduce order — and a SQL engine summing the identical
-    per-row integers reproduces the centroids bit-for-bit (the unquantized
-    kernels — sequential-fold norm and dot — already match DuckDB's
-    ``list_dot_product``, proven by the hash-green cosine queries; the
-    assignment comparator uses the same ``floor(s*1e6 + 0.5)`` rule both
-    sides). New centroid = mean of quantized units, L2-renormalized
-    (spherical k-means). Empty clusters keep their previous centroid.
+    Both exits are exactly equal: integer cluster sums are order-free and
+    every float op is the same numpy kernel in the same sequence
+    (``tests/test_text_clean_ivf.py::test_trainer_driver_and_distributed_agree``).
+
+    Cross-engine exactness (the ``embed_ivf_trained`` oracle): the
+    unquantized kernels — sequential-fold norm and dot — match DuckDB's
+    ``list_dot_product``, and a SQL engine summing the identical per-row
+    integers reproduces the centroids bit-for-bit. New centroid = mean of
+    quantized units, L2-renormalized (spherical k-means).
 
     Returns the same one-row literal shape as :func:`ivf_centroid_array`
     (``cid`` = 0..k-1), directly usable as ``ivf_topk(centroids=...)``.
     Iteration count is fixed (``n_iter``) rather than threshold-based —
-    deterministic wall-clock and output.
-
-    **Small-corpus fast path (r7):** when Catalyst's plan-size estimate says
-    the training corpus fits comfortably on the driver (the same
-    plan-stats/file-size probe the dedup broadcast hints use, threshold
-    ``driver_threshold_bytes``), the vectors are collected ONCE and all
-    ``n_iter`` Lloyd iterations run locally — replacing ``n_iter``
-    sequential (Arrow scan + collect) job pairs with one job. The INT64
-    quantization makes the two paths exactly equal (integer cluster sums
-    are order-free, and every float op is the identical numpy kernel in the
-    identical sequence), asserted by
-    ``tests/test_text_clean_ivf.py::test_trainer_driver_and_distributed_agree``.
-    Training corpora above the threshold — the 100-TB case — keep the
-    distributed map-side-combine layout unchanged."""
+    deterministic wall-clock and output."""
     import numpy as np
     from pyspark.sql import types as T
 
     from .dedup_text import _small_relation
 
-    seed_rows = (
-        corpus.select(F.col(id_col).cast("long").alias("cid"), F.col(vec_col).alias("_cv"))
-        .orderBy("cid")
-        .limit(n_centroids)
-        .collect()
-    )
-    if not seed_rows:
+    seed_ids, cmat = _seed_centroids(corpus, n_centroids, id_col, vec_col)
+    if not seed_ids:
         raise ValueError("cannot train centroids on an empty corpus")
-    cmat = _np_unit(np.array([np.asarray(r["_cv"], dtype=np.float64) for r in seed_rows]))
 
     if _small_relation(corpus, driver_threshold_bytes):
         rows = corpus.select(F.col(vec_col).alias("_v")).collect()
         u = _np_unit(np.array([np.asarray(r["_v"], dtype=np.float64) for r in rows]))
-        q = np.floor(u * _IVF_QUANT + 0.5).astype(np.int64)
         for _ in range(n_iter):
-            sims = np.empty((len(u), len(cmat)), dtype=np.float64)
-            for j in range(len(cmat)):
-                sims[:, j] = _np_seq_dot(u, cmat[j][None, :])
-            # same quantized comparator as the distributed partials below:
-            # argmax of floor(s*1e6+0.5), first max -> smallest centroid id
-            assign = np.argmax(np.floor(sims * 1e6 + 0.5), axis=1)
-            new = cmat.copy()
-            for c in np.unique(assign):
-                mask = assign == c
-                # exact INT64 cluster sum — identical to the distributed
-                # reduce over per-batch partials (integer addition is
-                # order-free), then the same (sum/n)/SCALE op order
-                new[c] = (q[mask].sum(axis=0).astype(np.float64) / int(mask.sum())) / _IVF_QUANT
-            cmat = _np_unit(new)
-        lit = [(int(c), [float(x) for x in cmat[c]]) for c in range(len(cmat))]
-        return corpus.sparkSession.createDataFrame(
-            [(lit,)], "_centroids array<struct<cid:bigint,u:array<double>>>"
-        )
+            cmat = _lloyd_update(cmat, _lloyd_partials(u, cmat))
+        return _centroid_literal(corpus.sparkSession, range(len(cmat)), cmat)
 
     out_schema = T.StructType(
         [
@@ -912,54 +826,23 @@ def ivf_train_centroids(
     )
 
     for _ in range(n_iter):
-        planes = cmat  # closure snapshot for this iteration
 
-        def partials(batches, planes=planes):
+        def partials(batches, planes=cmat):  # closure snapshot for this iteration
             import pandas as pd
 
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-                u = _np_unit(v)
-                sims = np.empty((len(pdf), len(planes)), dtype=np.float64)
-                for j in range(len(planes)):
-                    sims[:, j] = _np_seq_dot(u, planes[j][None, :])
-                # quantized comparator (floor(s*1e6+0.5) desc, cid asc) —
-                # round-half-up on BOTH engines, no half-even ambiguity;
-                # argmax returns the FIRST max -> smallest centroid id
-                assign = np.argmax(np.floor(sims * 1e6 + 0.5), axis=1)
-                # per-component round-half-up INT64 quantization of the unit
-                # vector: cluster sums become exact integers — associative,
-                # commutative, invariant to Arrow batch layout and reduce
-                # order, and replayable by any SQL engine
-                q = np.floor(u * _IVF_QUANT + 0.5).astype(np.int64)
-                rows = []
-                for cid in np.unique(assign):
-                    mask = assign == cid
-                    rows.append((int(cid), int(mask.sum()), [int(x) for x in q[mask].sum(axis=0)]))
-                yield pd.DataFrame(rows, columns=["_cid", "_n", "_sum"])
+                u = _np_unit(np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]))
+                yield pd.DataFrame(
+                    [(c, n, s.tolist()) for c, n, s in _lloyd_partials(u, planes)],
+                    columns=["_cid", "_n", "_sum"],
+                )
 
         parts = corpus.mapInPandas(partials, schema=out_schema).collect()
-        sums: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
-        for r in parts:  # integer sums: order-free
-            c = int(r["_cid"])
-            vec = np.asarray(r["_sum"], dtype=np.int64)
-            sums[c] = sums.get(c, 0) + vec
-            counts[c] = counts.get(c, 0) + int(r["_n"])
-        new = cmat.copy()
-        for c, s in sums.items():
-            if counts[c] > 0:
-                # fixed op order (sum/n)/SCALE, mirrored verbatim in the
-                # DuckDB oracle (__spark_entry__._ivf_trained_oracle_sql)
-                new[c] = (s.astype(np.float64) / counts[c]) / _IVF_QUANT
-        cmat = _np_unit(new)
+        cmat = _lloyd_update(cmat, [(int(r["_cid"]), int(r["_n"]), r["_sum"]) for r in parts])
 
-    lit = [(int(c), [float(x) for x in cmat[c]]) for c in range(len(cmat))]
-    return corpus.sparkSession.createDataFrame(
-        [(lit,)], "_centroids array<struct<cid:bigint,u:array<double>>>"
-    )
+    return _centroid_literal(corpus.sparkSession, range(len(cmat)), cmat)
 
 
 def ivf_assign(
@@ -967,33 +850,18 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "gemm",
 ) -> DataFrame:
     """Assign every corpus vector to its nearest centroid (max cosine, ties
     to the smallest cid) — the IVF list build. Output = corpus columns +
     ``_unit`` (the L2-normalized vector) + ``centroid_id``.
 
-    ``method='gemm'`` (default): Arrow-batched numpy kernel. Spark's
-    higher-order functions (aggregate/zip_with lambdas) are CodegenFallback —
-    interpreted, ~0.25 ms per 64-dim dot — so the 8-dots-per-row assignment
-    is 100× cheaper as a vectorized numpy scan. The scan uses cumsum
-    (sequential IEEE adds), which reproduces the Spark fold BIT-FOR-BIT, so
-    cross-engine parity is exact, not approximate. The centroid table (k
-    rows) ships in the UDF closure — the one deliberate driver materialization,
-    bounded by n_centroids, never by the corpus.
-
-    ``method='fold'``: pure-expression variant (one broadcast array row +
-    array_max fold) — zero Python, corpus partitioning untouched; right when
-    Python workers are unavailable. Same results.
-    """
-    if method == "fold":
-        out = corpus.crossJoin(F.broadcast(centroids))
-        u = with_unit_vector(out, vec_col)
-        best = F.array_max(_centroid_sims(F.col("_unit"), F.col("_centroids")))
-        return u.withColumn("centroid_id", (-best["negcid"]).cast("long")).drop("_centroids")
-    if method != "gemm":
-        raise ValueError(f"unknown method {method!r} (gemm|fold)")
-
+    An Arrow-batched numpy kernel: Spark's higher-order functions
+    (aggregate/zip_with lambdas) are CodegenFallback — interpreted, ~0.25 ms
+    per 64-dim dot — so the k-dots-per-row assignment is ~100× cheaper as a
+    vectorized scan. The cumsum scan reproduces the Spark fold BIT-FOR-BIT,
+    so cross-engine parity is exact, not approximate. The centroid table (k
+    rows) ships in the UDF closure — the one deliberate driver
+    materialization, bounded by n_centroids, never by the corpus."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -1013,19 +881,15 @@ def ivf_assign(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
-            u = _np_unit(v)
-            sims = np.empty((len(pdf), len(cids)), dtype=np.float64)
-            for j in range(len(cids)):
-                sims[:, j] = _np_seq_dot(u, cmat[j][None, :])
+            u = _np_unit(np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]))
             pdf = pdf.copy()
             pdf["_unit"] = list(u)
-            pdf["_censims"] = list(sims)
+            pdf["_censims"] = list(_np_centroid_sims(u, cmat))
             yield pdf
 
     scored = corpus.mapInPandas(score_batches, schema=out_schema)
     # round/tie semantics stay in Spark expressions (exact parity with the
-    # fold path and the SQL oracles)
+    # probe lists and the SQL oracles)
     return scored.withColumn("centroid_id", _assignment_expr(F.col("_censims"), cids)).drop("_censims")
 
 
@@ -1037,19 +901,19 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "gemm",
     centroids: DataFrame | None = None,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: score a query only against the inverted lists
-    of its ``nprobe`` nearest centroids.
+    of its ``nprobe`` nearest centroids. Recall < 1 by construction, rising
+    with ``nprobe``; candidates scored per query ≈ corpus · nprobe /
+    n_centroids.
 
-    The search is a centroid_id equi-join (corpus side hash-partitioned by
-    centroid at scale; skewed lists handled by AQE), never a cross join.
-    Recall < 1 by construction, rising with ``nprobe``; candidates scored
-    per query ≈ corpus · nprobe / n_centroids. ``method='gemm'`` runs the
-    candidate scoring as a vectorized numpy scan (bit-identical to the fold —
-    see :func:`ivf_assign`); ``method='fold'`` stays pure-expression.
+    The probe lists (queries × nprobe) are computed in Spark expressions
+    (exact round/tie parity with the assignment and the SQL oracles) and
+    collected; one :func:`_topk_scan` pass over the index scores each
+    batch's rows whose inverted list a query probes — the index crosses
+    once, no candidate × vector join.
 
     The centroid table and the assigned corpus ARE the IVF index — build
     them once, search many times (real IVF never re-partitions the corpus
@@ -1057,86 +921,37 @@ def ivf_topk(
     one-row frame; ``n_centroids`` is then ignored) to skip the centroid
     build, and ``assigned`` (the output of :func:`ivf_assign` on the same
     corpus + centroids, typically persisted or written to the lake) to skip
-    the assignment pass too — the call then runs ONLY the probe equi-join
-    search."""
+    the assignment pass too — the call then runs ONLY the probe search."""
+    import numpy as np
+    from pyspark.sql import types as T
+
     if centroids is None:
         centroids = ivf_centroid_array(corpus, n_centroids, id_col, vec_col)
-    cen = centroids
     if assigned is None:
-        assigned = ivf_assign(corpus, cen, id_col, vec_col, method=method)
+        assigned = ivf_assign(corpus, centroids, id_col, vec_col)
     c = assigned.select(
         F.col(id_col).cast("long").alias("neighbor_id"), F.col("_unit").alias("_cv"), "centroid_id"
     )
-    q = with_unit_vector(queries.crossJoin(F.broadcast(cen)), vec_col)
+    q = with_unit_vector(queries.crossJoin(F.broadcast(centroids)), vec_col)
     # top-nprobe probe lists per query: sort sims asc, reverse -> (s desc,
-    # cid asc) — the same tie discipline as assignment. Queries are few;
-    # the expression path is fine here.
+    # cid asc) — the same tie discipline as assignment
     probes = F.slice(F.reverse(F.array_sort(_centroid_sims(F.col("_unit"), F.col("_centroids")))), 1, nprobe)
-    qp = (
-        q.withColumn("_p", F.explode(probes))
-        .select(
-            F.col(id_col).cast("long").alias("query_id"),
-            F.col("_unit").alias("_qv"),
-            (-F.col("_p")["negcid"]).cast("long").alias("centroid_id"),
-        )
+    qp = q.withColumn("_p", F.explode(probes)).select(
+        F.col(id_col).cast("long").alias("query_id"),
+        F.col("_unit").alias("_qv"),
+        (-F.col("_p")["negcid"]).cast("long").alias("centroid_id"),
     )
-    if method == "gemm":
-        # r7 layout: the probe table (queries × nprobe — small by the same
-        # contract that let it be broadcast before) is collected, and ONE
-        # Arrow pass over the persisted index scores each batch's rows
-        # whose inverted list a query probes — the r6 shape materialized
-        # the (candidate × both-vectors) join through Arrow; now only the
-        # index crosses once and a margin-pruned per-batch top-k
-        # (:func:`_topk_prune`) reaches the window. The probe-list
-        # computation itself stays in Spark expressions (exact round/tie
-        # parity with the fold path and the SQL oracles).
-        import numpy as np
+    lists: dict = {}
+    for r in qp.collect():
+        qv, cids = lists.setdefault(int(r["query_id"]), (np.asarray(r["_qv"], dtype=np.float64), []))
+        cids.append(int(r["centroid_id"]))
+    qs = [(qid, qv, cids) for qid, (qv, cids) in lists.items()]
 
-        probes: dict = {}
-        for r in qp.collect():
-            ent = probes.setdefault(
-                int(r["query_id"]), (np.asarray(r["_qv"], dtype=np.float64), [])
-            )
-            ent[1].append(int(r["centroid_id"]))
+    def batch(pdf):
+        mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf["_cv"]])
+        return pdf["neighbor_id"].to_numpy(), mat, pdf["centroid_id"].to_numpy()
 
-        def scan(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0 or not probes:
-                    continue
-                mat = np.array([np.asarray(x, dtype=np.float64) for x in pdf["_cv"]])
-                ids = pdf["neighbor_id"].to_numpy()
-                cents = pdf["centroid_id"].to_numpy()
-                out_q, out_n, out_s = [], [], []
-                for qid, (qv, cids) in probes.items():
-                    m = np.isin(cents, cids) & (ids != qid)
-                    if not m.any():
-                        continue
-                    sims = _np_seq_dot(mat[m], qv[None, :])
-                    pid, psim = _topk_prune(ids[m], sims, k)
-                    out_q.extend([qid] * len(pid))
-                    out_n.extend(pid.tolist())
-                    out_s.extend(psim.tolist())
-                if out_q:
-                    yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "_sim": out_s})
-
-        scored = c.mapInPandas(
-            scan, schema="query_id long, neighbor_id long, _sim double"
-        ).select("query_id", "neighbor_id", F.round(F.col("_sim"), 6).alias("similarity"))
-    else:
-        pairs = c.join(F.broadcast(qp), ["centroid_id"]).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        scored = pairs.select(
-            "query_id", "neighbor_id", F.round(dot(F.col("_qv"), F.col("_cv")), 6).alias("similarity")
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("similarity"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "similarity", "rank")
-    )
+    return _topk_scan(c, "neighbor_id", T.LongType(), qs, batch, k)
 
 
 def ivf_config_for(

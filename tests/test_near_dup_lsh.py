@@ -134,18 +134,84 @@ def test_gemm_paths_preserve_string_ids(spark):
         ANN.embedding_near_dup_pairs(df, threshold=0.3, method="blocked")
 
 
-def test_lsh_topk_gemm_honors_dim_like_fold(spark):
+def _lsh_topk_reference(rows, qids, k, n_bits, dim):
+    """Pure-Python lsh_bucketed_topk: bucket = sign bits of the first
+    ``dim`` components against _hyperplane_weight planes, unit vectors and
+    cosine by left-to-right float sums, round half-up to 6dp, then
+    (similarity desc, neighbor_id asc) top-k among same-bucket rows."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def seq_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def bucket(v):
+        planes = [[ANN._hyperplane_weight(d, j) for d in range(dim)] for j in range(n_bits)]
+        return sum(1 << j for j in range(n_bits) if seq_dot(v[:dim], planes[j]) > 0)
+
+    def unit(v):
+        nrm = math.sqrt(seq_dot(v, v))
+        return [x / nrm for x in v]
+
+    def round6(x):
+        return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+    vecs = dict(rows)
+    buckets = {i: bucket(v) for i, v in rows}
+    out = []
+    for q in qids:
+        cands = sorted(
+            (-round6(seq_dot(unit(vecs[q]), unit(vecs[n]))), n)
+            for n in vecs
+            if n != q and buckets[n] == buckets[q]
+        )
+        out += [(q, n, -negs, r) for r, (negs, n) in enumerate(cands[:k], start=1)]
+    return sorted(out)
+
+
+def test_lsh_topk_honors_dim_like_python_reference(spark):
+    """Only the first ``dim`` components enter the bucket dot, and the
+    numpy scan reproduces a left-to-right pure-Python evaluation exactly.
+    k=5 reaches past each query's exact copies (period 17), so the two
+    widths bucket differently and return different neighbors."""
     rows = [(i, [float((i * 13 + d) % 17) - 8.0 for d in range(64)]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = df.filter("vec_id < 5")
+    got = {}
     for dim in (32, 64):
-        g = sorted(
-            ANN.lsh_bucketed_topk(q, df, k=3, n_bits=4, dim=dim, method="gemm").collect()
-        )
-        f = sorted(
-            ANN.lsh_bucketed_topk(q, df, k=3, n_bits=4, dim=dim, method="fold").collect()
-        )
-        assert g == f, f"gemm/fold disagree at dim={dim}"
+        got[dim] = sorted(tuple(r) for r in ANN.lsh_bucketed_topk(q, df, k=5, n_bits=4, dim=dim).collect())
+        assert got[dim] == _lsh_topk_reference(rows, range(5), 5, 4, dim), f"dim={dim}"
+    assert got[32] != got[64]
+    with pytest.raises(Exception, match="exceeds vector length"):
+        ANN.lsh_bucketed_topk(q, df, k=5, n_bits=4, dim=65).collect()
+
+
+def test_near_dup_pair_slabs_match_one_slab(monkeypatch):
+    """The per-bucket pair kernel's slabs: forcing many small slabs yields
+    exactly the pairs (and order) of the single-slab np.triu_indices, and
+    no multi-row slab exceeds the slab size."""
+    n = 50
+    one = list(ANN._pair_slabs(n))
+    assert len(one) == 1
+    ii, jj = np.triu_indices(n, k=1)
+    assert np.array_equal(one[0][0], ii) and np.array_equal(one[0][1], jj)
+    for slab in (1, 7, 100, 600):
+        monkeypatch.setattr(ANN, "_PAIR_SLAB", slab)
+        slabs = list(ANN._pair_slabs(n))
+        assert len(slabs) > 1
+        assert np.array_equal(np.concatenate([s[0] for s in slabs]), ii)
+        assert np.array_equal(np.concatenate([s[1] for s in slabs]), jj)
+        for si, _ in slabs:
+            assert len(si) <= slab or len(np.unique(si)) == 1
+    assert list(ANN._pair_slabs(1)) == [] and list(ANN._pair_slabs(0)) == []
+
+
+def test_near_dup_rejects_unknown_method(spark, emb):
+    with pytest.raises(ValueError, match="unknown method"):
+        ANN.embedding_near_dup_pairs(emb, threshold=0.4, method="fold")
 
 
 def test_ngram_broadcast_hint_auto_on_small_and_off_when_forced(spark, sf_dir):

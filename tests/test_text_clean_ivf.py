@@ -105,27 +105,15 @@ def test_ivf_topk_recall_vs_brute_force(spark, emb):
 def test_ivf_search_is_equi_join_not_cross(spark, emb):
     q = emb.filter(F.col("vec_id") < 20)
     plan = ANN.ivf_topk(q, emb, k=5)._jdf.queryExecution().executedPlan().toString()
-    # gemm (default, r7): a single probe SCAN over the index — no pair join
-    # at all; the only nested-loop join allowed is the 1-row centroid-array
-    # broadcast, and never a cross/pair-space scan.
-    import re
-
+    # a single probe SCAN over the index — no pair join at all; the only
+    # nested-loop join allowed is the 1-row centroid-array broadcast, and
+    # never a cross/pair-space scan.
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
-    # fold: the corpus-vs-query search must be a hash equi-join KEYED on
-    # centroid_id (either build side), never a cross/nested-loop pair scan.
-    planf = (
-        ANN.ivf_topk(q, emb, k=5, method="fold")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert re.search(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)\s*\[centroid_id", planf), planf
-    assert "CartesianProduct" not in planf
 
 
 def test_trainer_driver_and_distributed_agree(spark, emb):
-    """The r7 small-corpus driver trainer must reproduce the distributed
+    """The small-corpus driver trainer must reproduce the distributed
     map-side-combine trainer BIT-for-bit (integer cluster sums are
     order-free; every float op is the same kernel in the same sequence)."""
     local = ANN.ivf_train_centroids(emb, n_centroids=6, n_iter=3)
@@ -133,36 +121,31 @@ def test_trainer_driver_and_distributed_agree(spark, emb):
     assert local.collect() == dist.collect()
 
 
-def test_cosine_topk_gemm_matches_fold_bit_for_bit(spark, emb):
-    q = emb.filter(F.col("vec_id") < 10)
-    key = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.similarity, r.rank) for r in df.collect()
-    )
-    assert key(ANN.cosine_topk(q, emb, k=5, method="gemm")) == key(
-        ANN.cosine_topk(q, emb, k=5, method="fold")
-    )
+@pytest.mark.parametrize(
+    "name", ["embed_cosine_topk", "embed_lsh_ann", "embed_ivf_ann", "embed_near_dup"]
+)
+def test_embedding_query_matches_oracle(spark, sf_dir, name):
+    """Each embedding search kernel against its independent DuckDB twin:
+    same columns, row count, and order-insensitive value hash (the
+    correctness gate of tools/check_oracle.py, on the test data)."""
+    import duckdb
 
+    import __spark_entry__ as entry
+    from tools.check_oracle import TABLES, value_hash
 
-def test_lsh_topk_gemm_matches_fold_bit_for_bit(spark, emb):
-    q = emb.filter(F.col("vec_id") < 10)
-    key = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.similarity, r.rank) for r in df.collect()
-    )
-    assert key(ANN.lsh_bucketed_topk(q, emb, k=5, method="gemm")) == key(
-        ANN.lsh_bucketed_topk(q, emb, k=5, method="fold")
-    )
-
-
-def test_ivf_gemm_matches_fold_bit_for_bit(spark, emb):
-    """The numpy scan (cumsum = sequential IEEE adds) must reproduce the
-    Spark expression fold EXACTLY — same sims, same ranks, same ties."""
-    q = emb.filter(F.col("vec_id") < 10)
-    key = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.similarity, r.rank) for r in df.collect()
-    )
-    g = ANN.ivf_topk(q, emb, k=5, n_centroids=8, nprobe=2, method="gemm")
-    f = ANN.ivf_topk(q, emb, k=5, n_centroids=8, nprobe=2, method="fold")
-    assert key(g) == key(f)
+    sdf = entry.queries()[name](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"create view {t} as select * from '{sf_dir}/{t}.parquet'")
+    res = con.execute(entry.oracle_sql()[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert len(srows) == len(drows) > 0
+    assert value_hash(sdf.columns, srows) == value_hash(dcols, drows)
+    for key in [k for k in entry._IVF_INDEX if k[1] == sf_dir]:
+        entry._IVF_INDEX.pop(key)[1].unpersist(False)
 
 
 def test_ivf_train_centroids_improves_objective_and_is_deterministic(spark, emb):
