@@ -26,7 +26,7 @@ from geopetl_spark.operators.sample import split_by_hash
 from geopetl_spark.operators import ann as ANN
 from geopetl_spark.operators import dedup_text as DD
 from geopetl_spark.operators.asof import asof_join
-from geopetl_spark.operators.dedup_cdc import latest_per_key
+from geopetl_spark.operators.dedup_cdc import event_order, latest_per_key
 from geopetl_spark.operators.range_join import range_join
 from geopetl_spark.sources.readers import from_parquet
 
@@ -43,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: CDC latest-state reduction (salted two-phase max-LSN dedup,
+    """Flagship: CDC latest-state reduction (one-exchange max-LSN dedup,
     the engine's core operator) over the sf0.001 events stream."""
     return _q_cdc_latest_state(spark, "/root/testdata/sf0.001")
 
@@ -83,7 +83,9 @@ def _q_payload_stats(spark, sf):
 
 def _q_cdc_latest_state(spark, sf):
     ev = _t(spark, sf, "events")
-    latest = latest_per_key(ev, key_col="user_id", lsn_col="event_id", ts_col="ts", op_col="event_type")
+    latest = latest_per_key(
+        ev, "user_id", event_order(ev, lsn_col="event_id", ts_col="ts", op_col="event_type")
+    )
     return latest.select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("event_id").cast("long").alias("event_id"),

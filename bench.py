@@ -1,7 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the engine's primary
 metric — CDC MERGE-apply throughput (change-events/sec) on a synthetic
-change log ingested through the full pipeline (generate → sanitize → salted
+change log ingested through the full pipeline (generate → sanitize → per-key
 dedup → exactly-once MERGE → lineage).
 
 Prints ONE JSON line:

@@ -400,7 +400,7 @@ def write_report(result: dict, r_n: dict, r_xn: dict) -> None:
         fh.write(f"""# BENCH — scaling-efficiency evidence (two-cluster-size criterion)
 
 Per `BASELINE.md §3`: no real multi-node cluster exists in this sandbox, so
-the identical CDC ingest job (generate→sanitize→salted dedup→exactly-once
+the identical CDC ingest job (generate→sanitize→per-key dedup→exactly-once
 MERGE→lineage) ran on the SAME pre-generated input at two local parallelism
 levels, each in a fresh JVM, first epoch untimed (warmup), remaining epochs
 timed.

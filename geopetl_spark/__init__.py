@@ -30,7 +30,7 @@ from .sources.readers import from_parquet, from_csv, from_json, from_table
 from .sources.registry import read_source, write_sink
 from .sources.cdc_gen import generate_cdc_events, write_cdc_log
 from .lake.table import CommitConflict, LakeTable
-from .operators.dedup_cdc import latest_per_key, latest_per_key_window, dedup_exact_events
+from .operators.dedup_cdc import event_order, latest_per_key
 from .operators.dedup_text import (
     exact_dup_groups,
     minhash_lsh_pairs,
@@ -79,7 +79,7 @@ __all__ = [
     "read_source", "write_sink",
     "generate_cdc_events", "write_cdc_log",
     "LakeTable", "extract_table_schema",
-    "latest_per_key", "latest_per_key_window", "dedup_exact_events",
+    "event_order", "latest_per_key",
     "sanitize_tokens", "normalize_strings", "reproject_tokens",
     "tag_payload", "strip_payload_tag",
     "from_jdbc", "to_jdbc", "compile_jdbc_options",

@@ -14,8 +14,10 @@ implemented on parquet + JSON manifests:
   reference's commit-per-1000-rows at-least-once loads
   (``/root/reference/geopetl/oracle_sde.py:1050-1074``) to idempotent
   exactly-once.
-* **Hash-bucket layout** — rows are bucketed by ``pmod(xxhash64(key), N)``;
-  each snapshot keeps one parquet directory per touched bucket, and the
+* **Hash-bucket layout** — rows are bucketed by ``pmod(hash(key), N)``,
+  Spark's own shuffle hash (manifest ``"bucket_hash": "murmur3"``; older
+  tables keep ``pmod(xxhash64(key), N)`` until :meth:`LakeTable.rebucket`).
+  Each snapshot keeps one parquet directory per touched bucket, and the
   manifest carries forward untouched buckets' directories from the parent
   snapshot. MERGE therefore costs O(changed buckets), not O(table) — the
   same copy-on-write economics as Iceberg's.
@@ -58,11 +60,12 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schema as schema_mod
+from ..operators.dedup_cdc import event_order, latest_per_key
 
 BUCKET_COL = "_bucket"
 LSN_COL = "_lsn"
@@ -74,6 +77,7 @@ SEQ_COL = "_seq"  # commit-order tiebreak for merge-on-read: rows written by a
 # later commit win _lsn ties (mirrors the CoW merge's src_lsn >= tgt_lsn rule).
 # Files from before this column existed read as NULL -> sorts below any commit.
 _PART_COL = "_bucket_p"  # physical partition dir column (duplicated from _bucket)
+MURMUR3 = "murmur3"  # manifest "bucket_hash" of pmod(hash(key), N) tables
 _SYSTEM_COLS = (BUCKET_COL, LSN_COL, DELETED_COL, SEQ_COL)
 
 
@@ -129,6 +133,7 @@ class LakeTable:
             "committed_epochs": [],
             "key_col": key_col,
             "n_buckets": int(n_buckets),
+            "bucket_hash": MURMUR3,
             "schema": json.loads(user_schema.json()),
             "buckets": {},  # bucket id (str) -> list of data dirs
             "summary": {"total_rows": 0, "operation": "create"},
@@ -490,7 +495,7 @@ class LakeTable:
                 delta_dirs.extend(dlist)
         df = self._scan(m, [*dirs, *delta_dirs])
         if delta_dirs:
-            df = _reduce_latest(df, m["key_col"])
+            df = latest_per_key(df, m["key_col"], _stored_order())
         if not include_system:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(*_SYSTEM_COLS)
         if where:
@@ -619,7 +624,7 @@ class LakeTable:
         # "Cost model" above for why that returns the same rows)
         df = df.filter(F.col(LSN_COL).isNotNull() if wm is None else F.col(LSN_COL) > int(wm))
         if m_to.get("deltas"):
-            df = _reduce_latest(df, m_to["key_col"])
+            df = latest_per_key(df, m_to["key_col"], _stored_order())
         return df.drop(BUCKET_COL, SEQ_COL)
 
     def iter_changes(
@@ -676,8 +681,24 @@ class LakeTable:
 
     # --------------------------------------------------------------- writes
 
-    def _bucket_expr(self, key_col: str, n_buckets: int):
-        return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
+    @staticmethod
+    def _bucket_sql(key_sql: str, n_buckets: int, bucket_hash: str | None) -> str:
+        # bucket_hash: the manifest's field (None on pre-Murmur3 tables)
+        if bucket_hash == MURMUR3:
+            return f"pmod(hash({key_sql}), {n_buckets})"
+        return f"pmod(xxhash64(cast({key_sql} as string)), {n_buckets})"
+
+    @classmethod
+    def _bucket_expr(cls, key_col: str, n_buckets: int, bucket_hash: str | None = MURMUR3) -> Column:
+        return F.expr(cls._bucket_sql(f"`{key_col}`", n_buckets, bucket_hash)).cast("int")
+
+    def _shuffle_partitions(self) -> int:
+        """P of a shuffle Spark plans itself (``SQLConf.numShufflePartitions``)."""
+        get = self.spark.conf.get
+        coalesce = "spark.sql.adaptive.coalescePartitions"
+        aqe = get("spark.sql.adaptive.enabled") == get(f"{coalesce}.enabled") == "true"
+        initial = aqe and get(f"{coalesce}.initialPartitionNum", None)
+        return int(initial or get("spark.sql.shuffle.partitions"))
 
     def _snapshot_dir(self, version: int) -> str:
         # Unique per commit ATTEMPT, not per version: two writers racing to
@@ -689,7 +710,7 @@ class LakeTable:
         return os.path.join(self.path, "data", f"snap-{version:08d}-{uuid.uuid4().hex[:8]}")
 
     def _write_snapshot_data(
-        self, df: DataFrame, version: int, n_buckets: int
+        self, df: DataFrame, version: int, n_buckets: int, key_partitioned: bool = False
     ) -> tuple[dict[str, list[str]], dict[str, dict], int, int]:
         """Write df (already carrying _bucket and _lsn) into one dir per
         bucket under the snapshot dir; returns (bucket->dirs map,
@@ -698,15 +719,19 @@ class LakeTable:
         ``_bucket`` is duplicated into a partition-dir column so bucket
         separation is physical (file pruning) while the value also stays
         inside the files (row-group stats + no basePath gymnastics on read).
-        """
+
+        ``key_partitioned``: df's partitions are :func:`latest_per_key`'s,
+        ``pmod(hash(key), P)``, and ``_bucket`` is ``pmod(hash(key), N)``.
+        If P divides N, each task holds whole buckets (AQE coalescing only
+        merges adjacent partitions), so no write shuffle is needed. The path
+        changes only a bucket dir's file count, never a row's dir."""
         snapdir = self._snapshot_dir(version)
         out = df.withColumn(_PART_COL, F.col(BUCKET_COL))
-        # One shuffle, keyed by bucket: co-locates each bucket's rows so each
-        # bucket dir gets few files. Sorting within partitions by key gives
-        # clustered files (better row-group pruning on key lookups).
-        out = out.repartition(n_buckets, F.col(BUCKET_COL)).sortWithinPartitions(
-            self.key_col if self.exists() else out.columns[0]
-        )
+        key = self.key_col if self.exists() else out.columns[0]
+        if not (key_partitioned and n_buckets % self._shuffle_partitions() == 0):
+            out = out.repartition(n_buckets, F.col(BUCKET_COL))  # one task per bucket
+        # clustered files by key: better row-group pruning on key lookups
+        out = out.sortWithinPartitions(_PART_COL, key)
         out.write.mode("overwrite").partitionBy(_PART_COL).parquet(snapdir)
         written: dict[str, list[str]] = {}
         for name in os.listdir(snapdir):
@@ -854,7 +879,7 @@ class LakeTable:
                 )
         n_buckets = m["n_buckets"]
         key = m["key_col"]
-        staged = df.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets))
+        staged = df.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, m.get("bucket_hash")))
         if lsn_synthesized:
             staged = staged.withColumn(LSN_COL, F.lit(None).cast("long"))
         staged = staged.withColumn(DELETED_COL, F.lit(False))
@@ -960,7 +985,6 @@ class LakeTable:
         epoch_id: Any,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        assume_deduped: bool = False,
         lineage: list[dict] | None = None,
         strategy: str | None = None,
     ) -> dict:
@@ -994,19 +1018,17 @@ class LakeTable:
         key = m["key_col"]
         n_buckets = m["n_buckets"]
 
-        if not assume_deduped:
-            from ..operators.dedup_cdc import latest_per_key
-
-            changes = latest_per_key(changes, key_col=key, lsn_col=lsn_col, op_col=op_col)
-
         payload_cols = [c for c in changes.columns if c not in (op_col, lsn_col, "commit_ts", "epoch")]
         incoming_schema = T.StructType([f for f in changes.schema.fields if f.name in payload_cols])
         new_schema = schema_mod.evolve_schema(self.schema(), incoming_schema)
+        # the key typed as stored: shuffle partition and bucket hash one value
+        changes = changes.withColumn(key, F.col(key).cast(new_schema[key].dataType))
+        changes = latest_per_key(changes, key, event_order(changes, lsn_col=lsn_col, op_col=op_col))
 
         if mode == "mor":
             return self._merge_mor(changes, epoch_id, m, new_schema, lsn_col, op_col, lineage, _t0)
 
-        src = changes.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets))
+        src = changes.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, m.get("bucket_hash")))
         src = src.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
         # The deduped batch is consumed twice (affected-bucket discovery +
         # the MERGE join). Persisting it avoids re-running the upstream
@@ -1131,21 +1153,25 @@ class LakeTable:
     ) -> dict:
         """Merge-on-read apply: write the deduped batch as per-bucket delta
         files — O(batch) work regardless of how many buckets the keys touch,
-        no target read, no join. Deletes become tombstone delta rows; the
+        no target read, no join, no shuffle but the dedup's (Murmur3
+        buckets). Deletes become tombstone delta rows; the
         read-time ``max_by(_lsn, _seq)`` reduce makes LSN-last-wins hold and
         replayed old events lose exactly as in the CoW join."""
         key = m["key_col"]
         n_buckets = m["n_buckets"]
+        bucket_hash = m.get("bucket_hash")
         version = m["version"] + 1
         src = changes.withColumn(LSN_COL, F.col(lsn_col).cast("long")).withColumn(
             DELETED_COL, F.col(op_col) == "D"
         )
         staged = (
             _conform(src, new_schema, keep_system=True)
-            .withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets))
+            .withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, bucket_hash))
             .withColumn(SEQ_COL, F.lit(version).cast("long"))
         )
-        written, wstats, n_rows, n_live = self._write_snapshot_data(staged, version, n_buckets)
+        written, wstats, n_rows, n_live = self._write_snapshot_data(
+            staged, version, n_buckets, key_partitioned=bucket_hash == MURMUR3
+        )
         _t_write = time.time()
 
         deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
@@ -1344,7 +1370,7 @@ class LakeTable:
             "columns": [f["name"] for f in m["schema"]["fields"]],
             "layout": {
                 "type": "hash-bucket copy-on-write",
-                "bucket_expr": f"pmod(xxhash64(cast({m['key_col']} as string)), {m['n_buckets']})",
+                "bucket_expr": self._bucket_sql(m["key_col"], m["n_buckets"], m.get("bucket_hash")),
                 "n_buckets": m["n_buckets"],
                 "sort_within_buckets": m["key_col"],
             },
@@ -1384,7 +1410,8 @@ class LakeTable:
         10^10 rows the create-time bucket count is wrong by definition —
         CoW rewrite cost per epoch is O(table/n_buckets · touched buckets),
         so the count must grow with the table. One full rewrite under the
-        new ``pmod(xxhash64(key), n)`` layout; logical state (and therefore
+        Murmur3 ``pmod(hash(key), n)`` layout (the migration path of
+        ``pmod(xxhash64(key), n)`` tables); logical state (and therefore
         ``checksum()``) is unchanged, all zone/dir stats are rebuilt for
         the new layout, and subsequent merges route by the new count.
         Run it like compaction: between epochs, versioned, replay-safe."""
@@ -1394,13 +1421,16 @@ class LakeTable:
         df = self.read(include_system=True).drop(BUCKET_COL)
         df = df.withColumn(BUCKET_COL, self._bucket_expr(m["key_col"], n_buckets))
         version = m["version"] + 1
-        written, wstats, n, n_live = self._write_snapshot_data(df, version, n_buckets)
+        written, wstats, n, n_live = self._write_snapshot_data(
+            df, version, n_buckets, key_partitioned=any(m.get("deltas", {}).values())
+        )
         new_m = dict(m)
         new_m.update(
             version=version,
             snapshot_id=uuid.uuid4().hex,
             parent=m["snapshot_id"],
             n_buckets=int(n_buckets),
+            bucket_hash=MURMUR3,
             buckets=written,
             deltas={},  # the read above reduced any deltas into the rewrite
             delta_stats={},
@@ -1432,7 +1462,9 @@ class LakeTable:
         if drop_tombstones:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         version = m["version"] + 1
-        written, wstats, n, n_live = self._write_snapshot_data(df, version, m["n_buckets"])
+        # a read() of a table with deltas ran the per-key reduction
+        aligned = any(m.get("deltas", {}).values()) and m.get("bucket_hash") == MURMUR3
+        written, wstats, n, n_live = self._write_snapshot_data(df, version, m["n_buckets"], aligned)
         new_m = dict(m)
         if drop_tombstones:
             new_m["changelog_min_version"] = version
@@ -1529,19 +1561,14 @@ def _combine_file_stats(file_stats: list[dict]) -> dict:
     return {"rows": rows, "live": rows - deleted, "zones": zones}
 
 
-def _reduce_latest(df: DataFrame, key: str) -> DataFrame:
-    """Merge-on-read reconciliation: one row per key — the max of
-    (_lsn, _seq), so the highest LSN wins and, on equal LSNs, the later
-    commit (exactly the CoW join's ``src_lsn >= tgt_lsn`` rule). NULL _lsn
-    (plain writes) and NULL _seq (pre-MoR files) sort below everything.
-    Compiles to a partial+final max_by aggregation — map-side combinable,
-    no window sort, same skew profile as the CDC dedup."""
-    order = F.struct(
+def _stored_order() -> Column:
+    """The merge-on-read reduce's order, (_lsn, _seq): on equal LSNs the
+    later commit wins (the CoW join's ``src_lsn >= tgt_lsn`` rule). NULL
+    _lsn (plain writes) and NULL _seq (pre-MoR files) sort lowest."""
+    return F.struct(
         F.coalesce(F.col(LSN_COL), F.lit(-(1 << 62)).cast("long")).alias("l"),
         F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long")).alias("s"),
     )
-    row = F.max_by(F.struct(*[F.col(c) for c in df.columns]), order)
-    return df.groupBy(key).agg(row.alias("_row")).select("_row.*")
 
 
 def _merge_epochs(old: list, epoch_id) -> list:

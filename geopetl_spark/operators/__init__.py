@@ -10,7 +10,7 @@ from .ann import (
     lsh_bucketed_topk,
 )
 from .components import component_stats, dup_components
-from .dedup_cdc import dedup_exact_events, latest_per_key, latest_per_key_window
+from .dedup_cdc import event_order, latest_per_key
 from .range_join import range_join
 from .sample import deterministic_sample, hash_bucket, pack_sequences, split_by_hash
 from .dedup_text import (
@@ -28,7 +28,7 @@ __all__ = [
     "component_stats", "dup_components",
     "cosine_topk", "embedding_near_dup_pairs", "lsh_bucketed_topk", "lsh_config_for",
     "ivf_assign", "ivf_centroid_array", "ivf_topk", "ivf_train_centroids",
-    "dedup_exact_events", "latest_per_key", "latest_per_key_window",
+    "event_order", "latest_per_key",
     "exact_dup_groups", "ngram_jaccard_pairs", "minhash_lsh_pairs",
     "simhash", "simhash_pairs",
 ]

@@ -21,9 +21,8 @@ Python:
 
 At scale this is strictly cheaper than the windowed-equi-join alternative
 (bucketize ts + equi-join + filter): one shuffle of |L|+|R| rows on the key,
-sort amortized by Spark's shuffle sort machinery. Skewed keys fall under the
-same salting rules as the CDC dedup (hot keys = many rows per key partition,
-handled by AQE local sorts).
+sort amortized by Spark's shuffle sort machinery. A skewed key means many
+rows in one key partition, handled by AQE local sorts.
 """
 
 from __future__ import annotations

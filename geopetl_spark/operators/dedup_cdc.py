@@ -9,30 +9,33 @@ is what makes checkpointed replay byte-identical (the reference's first-row
 payload sniffing, ``oracle_sde.py:872-889``, is the cautionary tale for
 order-dependent nondeterminism).
 
-Two physical strategies, same semantics:
+:func:`latest_per_key` is the one reduction: ``groupBy(key).agg(max_by(row,
+order))``. Ingest dedup (ordered by :func:`event_order`), the
+``cdc_latest_state`` query and the lake's merge-on-read reduce (ordered by
+``(_lsn, _seq)``) all use it.
 
-* :func:`latest_per_key` — ``max_by`` over a struct ordering key with a
-  **salted two-phase reduction**: phase 1 reduces (key, salt) groups
-  map-side-combinable, phase 2 reduces keys. A hot key that would pin one
-  reducer in a window/row_number plan is spread over ``n_salts`` partial
-  groups first. This is an aggregation (partial combine on the map side),
-  strictly cheaper than the window variant's full sort-shuffle.
-* :func:`latest_per_key_window` — the classic
-  ``row_number() over (partition by key order by lsn desc ...) = 1`` plan,
-  kept for parity testing and for callers that need the loser rows too.
+Why a hot key cannot pin one reducer: ``max_by`` is an aggregate, so Spark
+plans a partial ``max_by`` below the single hash exchange. Each map task
+folds all rows of a key it holds into one, so a key crosses the shuffle as
+at most one row per map task, however many events it has — its reducer
+merges a handful of partials, not the key's events. A
+``row_number()``-over-window plan has no such combine: it ships and sorts
+every event of the hot key in one task.
+
+The exchange is ``hashpartitioning(key, P)``: a row lands in partition
+``pmod(hash(key), P)``, which is what lets the lake write bucket-aligned
+files straight from the reduction (see ``LakeTable._write_snapshot_data``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# op priority breaks exact (lsn, ts) ties deterministically: a delete at the
-# same LSN as an upsert wins (matches "tombstone last" binlog convention).
-_OP_RANK = {"D": 2, "U": 1, "I": 0}
 
 
 def _op_rank_col(op_col: str):
+    # op priority breaks exact (lsn, ts) ties deterministically: a delete at
+    # the same LSN as an upsert wins (matches "tombstone last" binlog convention)
     return (
         F.when(F.col(op_col) == "D", F.lit(2))
         .when(F.col(op_col) == "U", F.lit(1))
@@ -40,22 +43,15 @@ def _op_rank_col(op_col: str):
     )
 
 
-def latest_per_key(
+def event_order(
     df: DataFrame,
-    key_col: str = "doc_id",
     lsn_col: str = "lsn",
     ts_col: str = "commit_ts",
     op_col: str = "op",
-    n_salts: int = 32,
-) -> DataFrame:
-    """Salted two-phase max-LSN reduction to one row per key.
-
-    Phase 1 groups by (key, salt) — duplicates of a hot key are combined
-    map-side and across ``n_salts`` reducers; phase 2 groups by key alone on
-    the already-reduced (≤ n_salts rows/key) stream. Output schema == input
-    schema, one row per key.
-    """
-    order_key = F.struct(
+) -> Column:
+    """The change-event total order: ``(lsn, commit_ts, op_rank)``. A
+    missing ts or op column contributes a constant."""
+    return F.struct(
         F.col(lsn_col).cast("long").alias("lsn"),
         (
             # unix_micros needs TIMESTAMP; cast handles TIMESTAMP_NTZ inputs
@@ -64,40 +60,16 @@ def latest_per_key(
         ).alias("ts"),
         (_op_rank_col(op_col) if op_col in df.columns else F.lit(0)).alias("op_rank"),
     )
-    row = F.struct(*[F.col(c) for c in df.columns])
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns if c == lsn_col]), F.lit(n_salts))
 
-    phase1 = (
-        df.withColumn("_salt", salt)
-        .groupBy(key_col, "_salt")
-        .agg(F.max_by(row, order_key).alias("_row"), F.max(order_key).alias("_ord"))
+
+def latest_per_key(df: DataFrame, key_col: str, order: Column) -> DataFrame:
+    """One row per ``key_col``: the row with the greatest ``order``. One
+    hash exchange on the key, with a partial aggregate beneath it. Output
+    schema == input schema (column order kept)."""
+    rest = [c for c in df.columns if c != key_col]
+    latest = df.groupBy(key_col).agg(
+        F.max_by(F.struct(*[F.col(c) for c in rest]), order).alias("_row")
     )
-    phase2 = phase1.groupBy(key_col).agg(F.max_by(F.col("_row"), F.col("_ord")).alias("_row"))
-    return phase2.select("_row.*")
-
-
-def latest_per_key_window(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    lsn_col: str = "lsn",
-    ts_col: str = "commit_ts",
-    op_col: str = "op",
-) -> DataFrame:
-    """Window/row_number formulation (single shuffle + per-key sort)."""
-    order = [F.col(lsn_col).desc()]
-    if ts_col in df.columns:
-        order.append(F.col(ts_col).desc())
-    if op_col in df.columns:
-        order.append(_op_rank_col(op_col).desc())
-    w = Window.partitionBy(key_col).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    return latest.select(
+        *[F.col(c) if c == key_col else F.col("_row").getField(c).alias(c) for c in df.columns]
     )
-
-
-def dedup_exact_events(df: DataFrame, lsn_col: str = "lsn") -> DataFrame:
-    """Drop duplicate deliveries of the same change (identical LSN) — the
-    at-least-once-transport cleanup that precedes per-key reduction."""
-    return df.dropDuplicates([lsn_col])

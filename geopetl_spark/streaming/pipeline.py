@@ -2,14 +2,15 @@
 
 This is the engine's driver program (SURVEY §7 step 9). Each epoch:
 
-1. read the epoch's slice of the change log (partition-pruned parquet scan —
-   the log is written partitioned by epoch, see
+1. read the epoch's dir of the change log with the schema its parquet
+   footers carry — no schema-inference job (the log is written
+   partitioned by epoch, see
    :func:`geopetl_spark.sources.cdc_gen.write_cdc_log`);
 2. sanitize payloads (vectorized, JVM-side);
-3. salted two-phase per-key max-LSN dedup;
-4. idempotent MERGE into the lake table (epoch-keyed snapshot commit);
-5. append per-partition lineage + throughput metrics;
-6. advance the checkpoint.
+3. idempotent MERGE into the lake table (epoch-keyed snapshot commit),
+   which reduces the batch to one row per key by max (lsn, ts, op) first;
+4. append per-partition lineage + throughput metrics;
+5. advance the checkpoint.
 
 Crash anywhere and rerun: epochs up to the checkpoint are skipped by the
 checkpoint, the possibly-in-flight epoch is skipped by the sink's
@@ -25,15 +26,16 @@ because the sandbox's change log is a static parquet dir.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
-from ..operators.dedup_cdc import latest_per_key
 from ..transforms import sanitize_tokens
 from .checkpoint import Checkpoint
 from .lineage import LineageLog, partition_lineage
@@ -48,7 +50,6 @@ class IngestConfig:
     lsn_col: str = "lsn"
     op_col: str = "op"
     vocab_size: int | None = None
-    n_salts: int = 32
     sanitize: bool = True
     quarantine: bool = True  # split events with null key/LSN into a
     # side-channel instead of poisoning the MERGE (a null key would
@@ -65,6 +66,14 @@ class EpochResult:
 
 
 _EPOCH_DIR = "_epoch_part="
+# where Spark's parquet writer stores the file's Spark schema (JSON)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _is_data_file(name: str) -> bool:
+    # Spark's file index rule: names starting "_" or "." and in-flight
+    # "._COPYING_" copies are not data
+    return not name.startswith(("_", ".")) and not name.endswith("._COPYING_")
 
 
 def _discover_epochs(log_path: str) -> list[int]:
@@ -83,22 +92,57 @@ def _discover_epochs(log_path: str) -> list[int]:
                 epoch = int(entry.name[len(_EPOCH_DIR):])
             except ValueError:
                 continue  # not an epoch partition value
-            # Spark's file index rule: names starting "_" or "." and
-            # in-flight "._COPYING_" copies are not data
             with os.scandir(entry.path) as files:
-                if any(
-                    f.is_file()
-                    and not f.name.startswith(("_", "."))
-                    and not f.name.endswith("._COPYING_")
-                    for f in files
-                ):
+                if any(f.is_file() and _is_data_file(f.name) for f in files):
                     epochs.append(epoch)
     return sorted(epochs)
 
 
+def _nullable(node):
+    """A Spark schema JSON with every field, array element and map value
+    nullable — what Spark's own parquet schema inference yields."""
+    if isinstance(node, dict):
+        out = {k: _nullable(v) for k, v in node.items()}
+        for flag in ("nullable", "containsNull", "valueContainsNull"):
+            if flag in out:
+                out[flag] = True
+        return out
+    if isinstance(node, list):
+        return [_nullable(v) for v in node]
+    return node
+
+
+def _files_schema(spark: SparkSession, files: list[str]) -> T.StructType:
+    """The Spark schema the files' writer recorded in their parquet footers,
+    as nullable as inference would make it, with fields unioned by name in
+    first-seen order. Only files without that footer key cost an inference
+    job."""
+    import pyarrow.parquet as pq
+
+    fields: dict[str, dict] = {}
+    unlabeled = []
+    for path in files:
+        meta = pq.read_metadata(path).metadata or {}
+        if _SPARK_SCHEMA_KEY not in meta:
+            unlabeled.append(path)
+            continue
+        for f in json.loads(meta[_SPARK_SCHEMA_KEY])["fields"]:
+            fields.setdefault(f["name"], _nullable(f))
+    if unlabeled:
+        inferred = spark.read.option("mergeSchema", "true").parquet(*unlabeled).schema
+        for f in inferred.jsonValue()["fields"]:
+            fields.setdefault(f["name"], f)
+    return T.StructType.fromJson({"type": "struct", "fields": list(fields.values())})
+
+
 def read_epoch(spark: SparkSession, log_path: str, epoch: int) -> DataFrame:
-    """Partition-pruned read of one epoch of the change log."""
-    return spark.read.parquet(log_path).filter(F.col("_epoch_part") == epoch).drop("_epoch_part")
+    """One epoch of the change log: a scan of its ``_epoch_part=<n>`` dir
+    only, under the schema of that dir's own files. The schema comes from
+    the parquet footers, so the read runs no Spark job."""
+    path = os.path.join(log_path, f"{_EPOCH_DIR}{epoch}")
+    with os.scandir(path) as entries:
+        files = sorted(f.path for f in entries if f.is_file() and _is_data_file(f.name))
+    return spark.read.schema(_files_schema(spark, files)).parquet(path)
 
 
 def apply_epoch(
@@ -127,19 +171,11 @@ def apply_epoch(
         metrics.append(F.sum(F.when(~valid_pred, 1).otherwise(0)).alias("invalid_rows"))
     observed = batch.observe(obs, *metrics)
     to_merge = observed.filter(valid_pred) if cfg.quarantine else observed
-    deduped = latest_per_key(
-        to_merge,
-        key_col=cfg.key_col,
-        lsn_col=cfg.lsn_col,
-        op_col=cfg.op_col,
-        n_salts=cfg.n_salts,
-    )
     summary = table.merge(
-        deduped,
+        to_merge,
         epoch_id=epoch,
         lsn_col=cfg.lsn_col,
         op_col=cfg.op_col,
-        assume_deduped=True,
         strategy=cfg.merge_strategy,
     )
     t1 = time.time()

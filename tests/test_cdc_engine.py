@@ -3,7 +3,7 @@
 Carry-overs from the reference's test strategy (SURVEY §5: round-trip
 fidelity, write-without-key, null handling, idempotent re-read) plus the
 CDC-specific cases the north rule adds: out-of-order LSN dedup, exactly-once
-re-commit of the same epoch, additive schema evolution, skew salting
+re-commit of the same epoch, additive schema evolution, hot-key dedup
 correctness, checkpointed replay reproducing byte-identical state.
 """
 
@@ -11,19 +11,16 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from geopetl_spark import LakeTable, generate_cdc_events
-from geopetl_spark.operators.dedup_cdc import (
-    dedup_exact_events,
-    latest_per_key,
-    latest_per_key_window,
-)
+from geopetl_spark.operators.dedup_cdc import event_order, latest_per_key
 from geopetl_spark.sources.cdc_gen import write_cdc_log
 from geopetl_spark.streaming.checkpoint import Checkpoint
 from geopetl_spark.streaming.lineage import LineageLog
-from geopetl_spark.streaming.pipeline import IngestConfig, run_ingest
+from geopetl_spark.streaming.pipeline import IngestConfig, read_epoch, run_ingest
 
 DOC_SCHEMA = T.StructType(
     [
@@ -49,10 +46,22 @@ def events(spark):
     df.unpersist()
 
 
+def reference_latest(events):
+    """The latest event per key the 'obvious' way, independent of the
+    engine's reduction: a ``row_number`` window ordered by lsn, commit_ts,
+    then op rank (D > U > I), all descending. Duplicate deliveries are
+    identical rows, so whichever copy ranks first is the same row."""
+    op_rank = F.when(F.col("op") == "D", 2).when(F.col("op") == "U", 1).otherwise(0)
+    w = Window.partitionBy("doc_id").orderBy(
+        F.col("lsn").desc(), F.col("commit_ts").desc(), op_rank.desc()
+    )
+    return events.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
 def expected_final_state(events):
-    """Oracle final state computed the 'obvious' way: drop duplicate
-    deliveries, take the max-LSN event per key, drop deletes."""
-    latest = latest_per_key_window(dedup_exact_events(events))
+    """Oracle final state: the reference latest event per key, deletes
+    dropped."""
+    latest = reference_latest(events)
     return latest.filter(F.col("op") != "D").select("doc_id", "tokens", "n_tok", "source")
 
 
@@ -82,12 +91,37 @@ def test_generator_planted_properties(spark, events):
     assert lsns != sorted(lsns)
 
 
-def test_salted_dedup_matches_window_dedup(events):
-    a = rows_by_key(latest_per_key(events).select("doc_id", "tokens", "n_tok", "source"))
-    b = rows_by_key(
-        latest_per_key_window(dedup_exact_events(events)).select("doc_id", "tokens", "n_tok", "source")
+def test_latest_per_key_matches_row_number_reference(events):
+    cols = ["doc_id", "tokens", "n_tok", "source", "op", "lsn"]
+    a = latest_per_key(events, "doc_id", event_order(events)).select(*cols)
+    b = reference_latest(events).select(*cols)
+    assert a.count() == b.count() == N_KEYS
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_latest_per_key_hot_key_matches_reference(spark):
+    """One key carries half of 400k events; the other half spreads over
+    5,000 keys. (lsn, commit_ts, op) is unique per event but arrives out of
+    order, and each LSN is shared by 4 events, so the ts and op levels of
+    the order decide too. The one-exchange reduction must pick exactly the
+    reference's row for every key, the hot one included."""
+    n = 400_000
+    p = F.pmod(F.col("id") * 7919, F.lit(n))  # a permutation of 0..n-1
+    events = spark.range(n).select(
+        F.when(F.col("id") % 2 == 0, F.lit("hot"))
+        .otherwise(F.concat(F.lit("k"), ((F.col("id") / 2).cast("long") % 5000).cast("string")))
+        .alias("doc_id"),
+        (p / 4).cast("long").alias("lsn"),
+        F.timestamp_seconds(p % 2).alias("commit_ts"),
+        F.when((p / 2).cast("long") % 2 == 1, F.lit("D")).otherwise(F.lit("U")).alias("op"),
+        F.col("id").alias("payload"),
     )
-    assert a == b
+    a = latest_per_key(events, "doc_id", event_order(events))
+    b = reference_latest(events)
+    assert a.count() == b.count() == 5001
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    hot = a.filter("doc_id = 'hot'").first()
+    assert hot["lsn"] == (n - 1) // 4
 
 
 def test_merge_final_state_token_equality(spark, events, tmp_lake):
@@ -269,6 +303,66 @@ def test_pipeline_with_schema_drift(spark, tmp_path):
     assert "quality" in t.schema().fieldNames()
     q = t.read().select("quality").where(F.col("quality").isNotNull()).count()
     assert q > 0
+
+
+def test_pipeline_reads_each_epoch_with_its_own_columns(spark, tmp_path):
+    """Two writers: epoch 0's files have no ``quality`` column, epoch 1's
+    do. Each epoch is read under its own files' schema, so epoch 1 brings
+    ``quality`` in and the table schema evolves (a read of the whole log
+    root takes one file's schema and can drop it)."""
+    log = tmp_path / "log"
+    ev = generate_cdc_events(spark, 2000, n_keys=100, events_per_epoch=1000, drift_epoch=1)
+    ev.filter("epoch = 0").drop("quality").write.parquet(str(log / "_epoch_part=0"))
+    ev.filter("epoch = 1").write.parquet(str(log / "_epoch_part=1"))
+    tp = str(tmp_path / "lake")
+    LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    cfg = IngestConfig(log_path=str(log), table_path=tp, checkpoint_path=str(tmp_path / "ck"))
+    assert [r.epoch for r in run_ingest(spark, cfg)] == [0, 1]
+    t = LakeTable(spark, tp)
+    assert "quality" in t.schema().fieldNames()
+    want = {
+        r["doc_id"]: r["quality"]
+        for r in reference_latest(ev).filter(F.col("op") != "D").collect()
+    }
+    got = {r["doc_id"]: r["quality"] for r in t.read().collect()}
+    assert got == want
+    assert any(q is not None for q in got.values())
+
+
+def test_read_epoch_runs_no_spark_job(spark, tmp_path):
+    """The epoch's schema comes from its parquet footers: building the
+    epoch's DataFrame adds no job to a fresh job group."""
+    log = str(tmp_path / "log")
+    write_cdc_log(spark, log, 2000, n_keys=100, events_per_epoch=1000)
+    sc = spark.sparkContext
+    group = f"read-epoch-{os.getpid()}"
+    sc.setJobGroup(group, "read_epoch")
+    try:
+        df = read_epoch(spark, log, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "_epoch_part" not in df.columns
+    assert set(df.select("epoch").distinct().toPandas()["epoch"]) == {1}
+
+
+def test_read_epoch_infers_files_without_spark_schema(spark, tmp_path):
+    """A file written outside Spark carries no Spark schema in its footer:
+    only that file's schema is inferred, unioned with the labelled ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log = tmp_path / "log"
+    spark.createDataFrame([("k1", 1)], "doc_id string, lsn long").write.parquet(
+        str(log / "_epoch_part=0")
+    )
+    pq.write_table(
+        pa.table({"doc_id": ["k2"], "lsn": pa.array([2], pa.int64()), "lang": ["fr"]}),
+        str(log / "_epoch_part=0" / "part-foreign.parquet"),
+    )
+    df = read_epoch(spark, str(log), 0)
+    assert df.columns == ["doc_id", "lsn", "lang"]
+    assert sorted(map(tuple, df.collect())) == [("k1", 1, None), ("k2", 2, "fr")]
 
 
 def test_pipeline_epoch_discovery_ignores_non_epoch_entries(spark, tmp_path):

@@ -72,10 +72,10 @@ def test_dedup_stream_foreachbatch_into_lake(spark, tmp_path):
     q.awaitTermination()
 
     # batch truth: latest lsn per key over the distinct event set
-    from geopetl_spark.operators.dedup_cdc import latest_per_key
+    from geopetl_spark.operators.dedup_cdc import event_order, latest_per_key
 
     distinct = spark.read.parquet(src).dropDuplicates(["doc_id", "lsn"])
-    truth = latest_per_key(distinct, key_col="doc_id", lsn_col="lsn", op_col="op")
+    truth = latest_per_key(distinct, "doc_id", event_order(distinct, lsn_col="lsn", op_col="op"))
     got = {r.doc_id: r.tokens for r in table.read().collect()}
     want = {r.doc_id: r.tokens for r in truth.collect()}
     assert got == want and len(got) == 20

@@ -141,11 +141,50 @@ def test_describe_layout_surface(merged_table):
     d = merged_table.describe()
     assert d["key_col"] == "doc_id"
     assert d["layout"]["n_buckets"] == 8
-    assert "xxhash64" in d["layout"]["bucket_expr"]
+    assert d["layout"]["bucket_expr"] == "pmod(hash(doc_id), 8)"
     assert d["total_rows"] == merged_table.read().count()
     assert d["tombstones"] is not None and d["tombstones"] >= 0
     assert d["committed_epochs"] == 3
     assert set(d["columns"]) == {"doc_id", "tokens", "n_tok", "source"}
+
+
+def _upsert(spark, key, lsn):
+    return spark.createDataFrame(
+        [(key, [lsn], 1, "s", "U", lsn)],
+        "doc_id string, tokens array<int>, n_tok int, source string, op string, lsn long",
+    )
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_table_without_bucket_hash_keeps_xxhash_until_rebucket(spark, tmp_path, strategy):
+    """A manifest from before Murmur3 buckets (no ``bucket_hash``) keeps
+    routing by ``pmod(xxhash64(cast(key as string)), n)``: merging an
+    existing key updates it in place, with no duplicate in another bucket.
+    ``rebucket()`` migrates it to Murmur3 with the checksum unchanged."""
+    t = LakeTable(spark, str(tmp_path / "lake")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=8)
+    m = t.manifest()
+    del m["bucket_hash"]
+    t._publish(dict(m, version=m["version"] + 1))
+    xx = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(8))
+    ev = generate_cdc_events(spark, 2000, n_keys=100, events_per_epoch=1000)
+    for e in range(2):
+        t.merge(ev.filter(F.col("epoch") == e), epoch_id=e, strategy=strategy)
+    key = t.read().orderBy("doc_id").first()["doc_id"]
+    t.merge(_upsert(spark, key, 10_000_000), epoch_id="up", strategy=strategy)
+    rows = t.read(include_system=True).filter(F.col("doc_id") == key).collect()
+    assert len(rows) == 1 and rows[0]["_lsn"] == 10_000_000
+    assert t.read(include_system=True).filter(F.col("_bucket") != xx).count() == 0
+    assert "xxhash64" in t.describe()["layout"]["bucket_expr"]
+
+    before = t.checksum()
+    t.rebucket(8)
+    assert t.manifest()["bucket_hash"] == "murmur3"
+    assert t.describe()["layout"]["bucket_expr"] == "pmod(hash(doc_id), 8)"
+    assert t.checksum() == before
+    stored = t.read(include_system=True)
+    assert stored.filter(F.col("_bucket") != F.pmod(F.hash("doc_id"), F.lit(8))).count() == 0
+    t.merge(_upsert(spark, key, 10_000_001), epoch_id="up2", strategy=strategy)
+    assert t.read().filter(F.col("doc_id") == key).count() == 1
 
 
 def test_concurrent_writers_do_not_clobber_data(spark, tmp_path):

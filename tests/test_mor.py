@@ -8,6 +8,9 @@ uniform-key big-epoch regime that is a full-table rewrite per epoch. MoR
 writes O(batch) delta files and defers reconciliation to read/compact.
 """
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,6 +44,62 @@ def events(spark):
     df = generate_cdc_events(spark, 3000, n_keys=150, events_per_epoch=1000).cache()
     yield df
     df.unpersist()  # session-scoped SparkSession: don't leak storage into later modules
+
+
+def _count_repartitions(spark, monkeypatch) -> list:
+    """Record every ``DataFrame.repartition`` call from here on."""
+    calls = []
+    cls = type(spark.range(1))
+    original = cls.repartition
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "repartition", spy)
+    return calls
+
+
+def _files_per_delta_dir(t) -> list[int]:
+    return [
+        len(glob.glob(os.path.join(d, "*.parquet")))
+        for dirs in t.manifest()["deltas"].values()
+        for d in dirs
+    ]
+
+
+def test_mor_merge_writes_whole_buckets_with_no_write_shuffle(spark, tmp_path, events, monkeypatch):
+    """16 Murmur3 buckets at the session's P=8 shuffle partitions: the
+    dedup's exchange already holds whole buckets per task, so the delta
+    write adds no repartition and every delta bucket dir holds exactly one
+    parquet file, with every row in its own bucket."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    t = LakeTable(spark, str(tmp_path / "mor16")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=16)
+    assert t.manifest()["bucket_hash"] == "murmur3"
+    calls = _count_repartitions(spark, monkeypatch)
+    for e in range(3):
+        t.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy="mor")
+    assert calls == []
+    files = _files_per_delta_dir(t)
+    assert len(files) > 16 and set(files) == {1}
+    stored = t.read(include_system=True)
+    assert stored.filter(F.col("_bucket") != F.pmod(F.hash("doc_id"), F.lit(16))).count() == 0
+
+
+def test_mor_merge_repartitions_when_p_does_not_divide_buckets(spark, tmp_path, events, monkeypatch):
+    """12 buckets at P=8: tasks would split buckets, so the write keeps its
+    repartition — still one file per bucket dir, same state as CoW."""
+    mor = LakeTable(spark, str(tmp_path / "mor12")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=12)
+    cow = LakeTable(spark, str(tmp_path / "cow12")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=12)
+    calls = _count_repartitions(spark, monkeypatch)
+    for e in range(3):
+        mor.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy="mor")
+    assert len(calls) == 3
+    for e in range(3):
+        cow.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy="cow")
+    assert mor.checksum() == cow.checksum()
+    files = _files_per_delta_dir(mor)
+    assert len(files) > 12 and set(files) == {1}
 
 
 def test_mor_equals_cow_final_state(spark, tmp_path, events):
