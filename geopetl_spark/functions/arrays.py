@@ -37,14 +37,6 @@ def cosine(a: Column, b: Column, decimals: int = 6) -> Column:
     return F.round(dot(a, b) / (norm(a) * norm(b)), decimals)
 
 
-def token_ngrams(tokens: Column, n: int) -> Column:
-    """n-gram shingles over a token array as 'a|b|c' strings."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(tokens) - n),
-        lambda i: F.concat_ws("|", *[F.element_at(tokens, i + j + 1).cast("string") for j in range(n)]),
-    )
-
-
 def word_ngrams(text: Column, n: int) -> Column:
     """n-gram shingles over whitespace words."""
     ws = F.split(F.trim(text), r"\s+")

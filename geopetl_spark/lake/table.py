@@ -73,8 +73,8 @@ DELETED_COL = "_deleted"  # tombstone flag: deletes persist so a late replay of
 # an older event for the key compares against the tombstone's LSN and cannot
 # resurrect it (classic log-compaction semantics). compact(drop_tombstones=
 # True) reclaims them once the replay horizon has passed.
-SEQ_COL = "_seq"  # commit-order tiebreak for merge-on-read: rows written by a
-# later commit win _lsn ties (mirrors the CoW merge's src_lsn >= tgt_lsn rule).
+SEQ_COL = "_seq"  # commit-order tiebreak of the merge order (_stored_order):
+# on equal _lsn the row a later commit wrote wins, in both merge strategies.
 # Files from before this column existed read as NULL -> sorts below any commit.
 _PART_COL = "_bucket_p"  # physical partition dir column (duplicated from _bucket)
 MURMUR3 = "murmur3"  # manifest "bucket_hash" of pmod(hash(key), N) tables
@@ -198,6 +198,22 @@ class LakeTable:
         with open(ptr_tmp, "w") as fh:
             fh.write(os.path.basename(mpath))
         os.replace(ptr_tmp, self.current_ptr)  # atomic pointer swap = commit
+
+    def _commit(self, m: dict, summary: dict, **fields: Any) -> dict:
+        """Publish the version after ``m``: ``m`` with ``fields`` replaced,
+        a new snapshot id, ``m`` as parent and ``summary``. Returns
+        ``summary``."""
+        self._publish(
+            {
+                **m,
+                **fields,
+                "version": m["version"] + 1,
+                "snapshot_id": uuid.uuid4().hex,
+                "parent": m["snapshot_id"],
+                "summary": summary,
+            }
+        )
+        return summary
 
     def manifest(self, version: int | None = None) -> dict:
         if version is None:
@@ -710,10 +726,11 @@ class LakeTable:
         return os.path.join(self.path, "data", f"snap-{version:08d}-{uuid.uuid4().hex[:8]}")
 
     def _write_snapshot_data(
-        self, df: DataFrame, version: int, n_buckets: int, key_partitioned: bool = False
+        self, df: DataFrame, version: int, n_buckets: int, key: str, key_partitioned: bool = False
     ) -> tuple[dict[str, list[str]], dict[str, dict], int, int]:
         """Write df (already carrying _bucket and _lsn) into one dir per
-        bucket under the snapshot dir; returns (bucket->dirs map,
+        bucket under the snapshot dir, sorted by ``key`` within each
+        bucket; returns (bucket->dirs map,
         bucket->{rows,live} stats, total rows, total live).
 
         ``_bucket`` is duplicated into a partition-dir column so bucket
@@ -727,7 +744,6 @@ class LakeTable:
         changes only a bucket dir's file count, never a row's dir."""
         snapdir = self._snapshot_dir(version)
         out = df.withColumn(_PART_COL, F.col(BUCKET_COL))
-        key = self.key_col if self.exists() else out.columns[0]
         if not (key_partitioned and n_buckets % self._shuffle_partitions() == 0):
             out = out.repartition(n_buckets, F.col(BUCKET_COL))  # one task per bucket
         # clustered files by key: better row-group pruning on key lookups
@@ -884,7 +900,7 @@ class LakeTable:
             staged = staged.withColumn(LSN_COL, F.lit(None).cast("long"))
         staged = staged.withColumn(DELETED_COL, F.lit(False))
         version = m["version"] + 1
-        written, wstats, n_new, _live_new = self._write_snapshot_data(staged, version, n_buckets)
+        written, wstats, n_new, _live_new = self._write_snapshot_data(staged, version, n_buckets, key)
 
         if mode == "overwrite":
             buckets = written
@@ -919,27 +935,27 @@ class LakeTable:
         else:
             raise ValueError(f"unknown write mode {mode!r}")
 
-        new_m = dict(m)
         # changelog-retention bookkeeping (see read_changes): an overwrite
         # breaks incremental history entirely; an append adds LSN-less rows
         # the changelog can never surface — record which, so read_changes
         # can refuse to be silently wrong
+        history: dict[str, Any] = {}
         if mode == "overwrite":
-            new_m["changelog_min_version"] = version
-            new_m["changelog_min_reason"] = "write(mode='overwrite') full refresh"
+            history["changelog_min_version"] = version
+            history["changelog_min_reason"] = "write(mode='overwrite') full refresh"
         elif lsn_synthesized:
             # Only LSN-less appends are invisible to the changelog.  When the
             # caller's DataFrame already carries _lsn the appended rows DO
             # surface in read_changes (and advance the watermark), so marking
             # the version bulk would raise a false-positive on a window that
             # is actually complete.
-            new_m["bulk_write_versions"] = sorted(
+            history["bulk_write_versions"] = sorted(
                 set(int(v) for v in m.get("bulk_write_versions", [])) | {version}
             )
-        new_m.update(
-            version=version,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
+        return self._commit(
+            m,
+            {"total_rows": total, "operation": mode, "rows_written": n_new},
+            **history,
             epoch_id=epoch_id,
             committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
             schema=json.loads(new_schema.json()),
@@ -948,21 +964,16 @@ class LakeTable:
             delta_stats=delta_stats,
             bucket_stats=bucket_stats,
             lsn_watermark=self._advance_watermark(m, wstats),
-            summary={"total_rows": total, "operation": mode, "rows_written": n_new},
             lineage=(lineage or []),
         )
-        self._publish(new_m)
-        return new_m["summary"]
 
     def truncate(self) -> None:
         """W1: full-refresh reset including 'RESTART IDENTITY' — the
         committed-epoch bookkeeping resets with the data."""
         m = self.manifest()
-        new_m = dict(m)
-        new_m.update(
-            version=m["version"] + 1,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
+        self._commit(
+            m,
+            {"total_rows": 0, "operation": "truncate"},
             epoch_id=None,
             committed_epochs=[],
             buckets={},
@@ -972,10 +983,8 @@ class LakeTable:
             lsn_watermark=None,
             changelog_min_version=m["version"] + 1,
             changelog_min_reason="truncate()",
-            summary={"total_rows": 0, "operation": "truncate"},
             lineage=[],
         )
-        self._publish(new_m)
 
     # ---------------------------------------------------------------- MERGE
 
@@ -996,14 +1005,21 @@ class LakeTable:
         any suffix of history is a no-op — combined with epoch-id skip this
         is the exactly-once contract.
 
-        ``strategy``: 'cow' (default) rewrites affected buckets — right when
-        epochs touch few buckets. 'mor' (merge-on-read) appends the deduped
-        batch as per-bucket DELTA files with a commit-sequence tiebreak and
-        defers reconciliation to read time / compaction — right for the
-        uniform-key big-epoch regime where CoW would rewrite the full table
-        every epoch. Defaults to the table property ``write.merge-mode``.
-        Both strategies produce identical logical state (LSN-last-wins with
-        later-commit tiebreak on equal LSNs, tombstoned deletes).
+        One rule resolves every strategy: per key, the stored row with the
+        greatest ``(_lsn, _seq)`` wins (:func:`_stored_order`). The deduped
+        batch is staged once with ``_lsn``, ``_deleted`` (op D: deletes are
+        tombstones), ``_bucket`` and ``_seq`` = this commit's version, so on
+        an equal LSN the later commit wins, and a NULL ``_lsn`` (rows loaded
+        by :meth:`write`) loses to any merged row.
+
+        ``strategy``: 'cow' (default) rewrites the affected buckets: their
+        base and delta rows plus the batch, reduced per key — right when
+        epochs touch few buckets. 'mor' (merge-on-read) appends the batch
+        as per-bucket DELTA files and leaves the reduce to read time /
+        compaction — right for the uniform-key big-epoch regime where CoW
+        would rewrite the full table every epoch. Defaults to the table
+        property ``write.merge-mode``. Both strategies produce identical
+        logical state.
         """
         if not self.exists():
             raise ValueError(f"no lake table at {self.path}")
@@ -1017,150 +1033,16 @@ class LakeTable:
 
         key = m["key_col"]
         n_buckets = m["n_buckets"]
+        bucket_hash = m.get("bucket_hash")
+        version = m["version"] + 1
 
         payload_cols = [c for c in changes.columns if c not in (op_col, lsn_col, "commit_ts", "epoch")]
         incoming_schema = T.StructType([f for f in changes.schema.fields if f.name in payload_cols])
         new_schema = schema_mod.evolve_schema(self.schema(), incoming_schema)
+        schema_json = json.loads(new_schema.json())
         # the key typed as stored: shuffle partition and bucket hash one value
         changes = changes.withColumn(key, F.col(key).cast(new_schema[key].dataType))
         changes = latest_per_key(changes, key, event_order(changes, lsn_col=lsn_col, op_col=op_col))
-
-        if mode == "mor":
-            return self._merge_mor(changes, epoch_id, m, new_schema, lsn_col, op_col, lineage, _t0)
-
-        src = changes.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, m.get("bucket_hash")))
-        src = src.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
-        # The deduped batch is consumed twice (affected-bucket discovery +
-        # the MERGE join). Persisting it avoids re-running the upstream
-        # dedup aggregation over the raw batch — the deduped set is at most
-        # one row per key, far smaller than the batch.
-        src = src.persist()
-
-        # Affected-bucket pruning: only buckets containing changed keys are
-        # read and rewritten. The distinct-bucket list is tiny (≤ n_buckets
-        # ints) — the one deliberate collect in the merge path.
-        affected = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
-        _t_dedup = time.time()
-        target = self.read(buckets=affected, include_system=True)
-        target = _conform(target, new_schema, keep_system=True)
-
-        data_cols = [f.name for f in new_schema.fields]
-        src_sel = src.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType) if f.name in src.columns else F.lit(None).cast(f.dataType)
-                ).alias(f"_src_{f.name}")
-                for f in new_schema.fields
-            ],
-            F.col(BUCKET_COL).alias(f"_src_{BUCKET_COL}"),
-            F.col(LSN_COL).alias(f"_src_{LSN_COL}"),
-            F.col(op_col).alias("_src_op"),
-        )
-
-        # Key-partitioned full-outer MERGE: both sides shuffle on the key;
-        # AQE skew-join splits any residual hot partitions (source side is
-        # already deduped to unique keys, so skew lives in the target only
-        # if key distribution is pathological).
-        joined = target.join(src_sel, target[key] == src_sel[f"_src_{key}"], "full_outer")
-
-        src_present = F.col(f"_src_{key}").isNotNull()
-        tgt_present = F.col(key).isNotNull()
-        src_newer = src_present & (
-            ~tgt_present | F.col(LSN_COL).isNull() | (F.col(f"_src_{LSN_COL}") >= F.col(LSN_COL))
-        )
-
-        # Deletes become tombstones (not row removal): a later replay of an
-        # older upsert for the key sees the tombstone's _lsn and loses.
-        resolved = joined.select(
-            *[
-                F.when(src_newer, F.col(f"_src_{c}")).otherwise(F.col(c)).alias(c)
-                for c in data_cols
-            ],
-            F.when(src_newer, F.col(f"_src_{BUCKET_COL}")).otherwise(F.col(BUCKET_COL)).alias(BUCKET_COL),
-            F.when(src_newer, F.col(f"_src_{LSN_COL}")).otherwise(F.col(LSN_COL)).alias(LSN_COL),
-            F.when(src_newer, F.col("_src_op") == "D")
-            .otherwise(F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            .alias(DELETED_COL),
-        )
-
-        version = m["version"] + 1
-        written, wstats, n_affected_rows, n_affected_live = self._write_snapshot_data(resolved, version, n_buckets)
-        _t_write = time.time()
-
-        buckets = {k: list(v) for k, v in m["buckets"].items() if int(k) not in set(affected)}
-        buckets.update(written)  # carry forward untouched buckets, swap affected
-        # a key's delta rows share its bucket, so rewriting a bucket FOLDS its
-        # deltas (the target read above already reduced them in); drop them
-        # and their zone stats
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items() if int(k) not in set(affected)}
-        delta_stats = {
-            k: dict(v) for k, v in m.get("delta_stats", {}).items() if k in deltas
-        }
-
-        # incremental live-row accounting from manifest bucket stats — no
-        # scan of historical data (fallback scan only for pre-stats tables)
-        prev_stats = m.get("bucket_stats")
-        if prev_stats is None:
-            prev_stats = self._recompute_bucket_stats(m)
-        bucket_stats = {k: dict(v) for k, v in prev_stats.items() if int(k) not in set(affected)}
-        bucket_stats.update(wstats)
-        # with unfolded deltas on other buckets the exact live total is
-        # data-dependent (key overlap) — leave it unknown until compaction
-        total = sum(v["live"] for v in bucket_stats.values()) if not deltas else None
-
-        new_m = dict(m)
-        new_m.update(
-            version=version,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
-            epoch_id=epoch_id,
-            committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
-            schema=json.loads(new_schema.json()),
-            buckets=buckets,
-            deltas=deltas,
-            delta_stats=delta_stats,
-            bucket_stats=bucket_stats,
-            lsn_watermark=self._advance_watermark(m, wstats),
-            summary={
-                "operation": "merge",
-                "total_rows": total,
-                "rows_written": n_affected_rows,
-                "live_rows_written": n_affected_live,
-                "buckets_affected": len(affected),
-                "epoch_id": epoch_id,
-                "merge_phase_sec": {
-                    "dedup_and_bucket_discovery": round(_t_dedup - _t0, 2),
-                    "join_and_write": round(_t_write - _t_dedup, 2),
-                    "count_bookkeeping": round(time.time() - _t_write, 2),
-                },
-            },
-            lineage=(lineage or []),
-        )
-        src.unpersist()
-        self._publish(new_m)
-        return new_m["summary"]
-
-    def _merge_mor(
-        self,
-        changes: DataFrame,
-        epoch_id: Any,
-        m: dict,
-        new_schema: T.StructType,
-        lsn_col: str,
-        op_col: str,
-        lineage: list[dict] | None,
-        _t0: float,
-    ) -> dict:
-        """Merge-on-read apply: write the deduped batch as per-bucket delta
-        files — O(batch) work regardless of how many buckets the keys touch,
-        no target read, no join, no shuffle but the dedup's (Murmur3
-        buckets). Deletes become tombstone delta rows; the
-        read-time ``max_by(_lsn, _seq)`` reduce makes LSN-last-wins hold and
-        replayed old events lose exactly as in the CoW join."""
-        key = m["key_col"]
-        n_buckets = m["n_buckets"]
-        bucket_hash = m.get("bucket_hash")
-        version = m["version"] + 1
         src = changes.withColumn(LSN_COL, F.col(lsn_col).cast("long")).withColumn(
             DELETED_COL, F.col(op_col) == "D"
         )
@@ -1169,11 +1051,99 @@ class LakeTable:
             .withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, bucket_hash))
             .withColumn(SEQ_COL, F.lit(version).cast("long"))
         )
-        written, wstats, n_rows, n_live = self._write_snapshot_data(
-            staged, version, n_buckets, key_partitioned=bucket_hash == MURMUR3
-        )
-        _t_write = time.time()
+        # the write's input is always a per-key reduce (the dedup, or the
+        # fold below), so Murmur3 buckets need no write shuffle when P | N
+        aligned = bucket_hash == MURMUR3
 
+        if mode == "mor":
+            written, wstats, n_rows, n_live = self._write_snapshot_data(
+                staged, version, n_buckets, key, key_partitioned=aligned
+            )
+            _t_write = time.time()
+            fields = self._merge_mor(m, written, wstats)
+            summary = {
+                "operation": "merge",
+                "mode": "mor",
+                "total_rows": None,  # exact only after compaction (see count())
+                "rows_written": n_rows,
+                "live_rows_written": n_live,
+                "buckets_affected": len(written),
+                "delta_dirs": sum(len(v) for v in fields["deltas"].values()),
+                "epoch_id": epoch_id,
+                "merge_phase_sec": {"dedup_and_delta_write": round(_t_write - _t0, 2)},
+            }
+        else:
+            # The staged batch is consumed twice (affected-bucket discovery +
+            # the fold). Persisting it avoids re-running the dedup
+            # aggregation over the raw batch — the deduped set is at most
+            # one row per key, far smaller than the batch.
+            staged = staged.persist()
+            # Affected-bucket pruning: only buckets containing changed keys
+            # are read and rewritten. The distinct-bucket list is tiny
+            # (≤ n_buckets ints) — the one deliberate collect in the merge.
+            affected = {str(r[0]) for r in staged.select(BUCKET_COL).distinct().collect()}
+            _t_dedup = time.time()
+            # Fold: a key's base rows, delta rows and batch row share its
+            # bucket, so one reduce over the affected buckets' dirs plus the
+            # batch resolves the MERGE and folds those buckets' deltas.
+            old = m.get("deltas", {})
+            dirs = [d for b in sorted(affected) for d in (*m["buckets"].get(b, []), *old.get(b, []))]
+            target = self._scan({**m, "schema": schema_json}, dirs)
+            resolved = latest_per_key(target.unionByName(staged), key, _stored_order())
+            written, wstats, n_rows, n_live = self._write_snapshot_data(
+                resolved, version, n_buckets, key, key_partitioned=aligned
+            )
+            _t_write = time.time()
+            staged.unpersist()
+
+            buckets = {k: list(v) for k, v in m["buckets"].items() if k not in affected}
+            buckets.update(written)  # carry forward untouched buckets, swap affected
+            deltas = {k: list(v) for k, v in old.items() if k not in affected}
+            delta_stats = {
+                k: dict(v) for k, v in m.get("delta_stats", {}).items() if k in deltas
+            }
+            # incremental live-row accounting from manifest bucket stats — no
+            # scan of historical data (fallback scan only for pre-stats tables)
+            prev_stats = m.get("bucket_stats")
+            if prev_stats is None:
+                prev_stats = self._recompute_bucket_stats(m)
+            bucket_stats = {k: dict(v) for k, v in prev_stats.items() if k not in affected}
+            bucket_stats.update(wstats)
+            fields = dict(
+                buckets=buckets, deltas=deltas, delta_stats=delta_stats, bucket_stats=bucket_stats
+            )
+            summary = {
+                "operation": "merge",
+                # with unfolded deltas on other buckets the exact live total
+                # is data-dependent (key overlap) — unknown until compaction
+                "total_rows": sum(v["live"] for v in bucket_stats.values()) if not deltas else None,
+                "rows_written": n_rows,
+                "live_rows_written": n_live,
+                "buckets_affected": len(affected),
+                "epoch_id": epoch_id,
+                "merge_phase_sec": {
+                    "dedup_and_bucket_discovery": round(_t_dedup - _t0, 2),
+                    "reduce_and_write": round(_t_write - _t_dedup, 2),
+                },
+            }
+        summary["merge_phase_sec"]["count_bookkeeping"] = round(time.time() - _t_write, 2)
+        return self._commit(
+            m,
+            summary,
+            epoch_id=epoch_id,
+            committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
+            schema=schema_json,
+            lsn_watermark=self._advance_watermark(m, wstats),
+            lineage=(lineage or []),
+            **fields,
+        )
+
+    def _merge_mor(self, m: dict, written: dict[str, list[str]], wstats: dict[str, dict]) -> dict:
+        """Merge-on-read bookkeeping: the manifest ``deltas`` and
+        ``delta_stats`` after the batch was written as per-bucket delta
+        dirs — O(batch) work regardless of how many buckets the keys touch,
+        no target read. The read-time reduce by :func:`_stored_order`
+        resolves them exactly as a CoW merge would have."""
         deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
         # delta zone maps widen across delta commits exactly like append's
         # base zones; a bucket whose existing deltas predate delta_stats
@@ -1191,36 +1161,7 @@ class LakeTable:
             if LSN_COL in nz:
                 dirs.update({d: {LSN_COL: nz[LSN_COL]} for d in dlist})
             delta_stats[b] = {"zones": zones, "dirs": dirs}
-
-        new_m = dict(m)
-        new_m.update(
-            version=version,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
-            epoch_id=epoch_id,
-            committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
-            schema=json.loads(new_schema.json()),
-            deltas=deltas,
-            delta_stats=delta_stats,
-            lsn_watermark=self._advance_watermark(m, wstats),
-            summary={
-                "operation": "merge",
-                "mode": "mor",
-                "total_rows": None,  # exact only after compaction (see count())
-                "rows_written": n_rows,
-                "live_rows_written": n_live,
-                "buckets_affected": len(written),
-                "delta_dirs": sum(len(v) for v in deltas.values()),
-                "epoch_id": epoch_id,
-                "merge_phase_sec": {
-                    "dedup_and_delta_write": round(_t_write - _t0, 2),
-                    "count_bookkeeping": round(time.time() - _t_write, 2),
-                },
-            },
-            lineage=(lineage or []),
-        )
-        self._publish(new_m)
-        return new_m["summary"]
+        return {"deltas": deltas, "delta_stats": delta_stats}
 
     def vacuum(self, keep_last_versions: int = 1) -> dict:
         """Delete snapshot data directories not referenced by the last
@@ -1309,7 +1250,9 @@ class LakeTable:
         acl = {k: list(v) for k, v in m.get("acl", {}).items()}
         merged = set(acl.get(principal, [])) | {o.upper() for o in ops}
         acl[principal] = sorted(merged if "ALL" not in merged else {"ALL"})
-        return self._publish_acl(m, acl, f"grant {ops} to {principal}")
+        note = f"grant {ops} to {principal}"
+        return self._commit(m, {"operation": "alter-acl", "note": note,
+                                "total_rows": m["summary"].get("total_rows")}, acl=acl)
 
     def revoke(self, principal: str, ops: list[str] | str | None = None) -> dict:
         """Remove privileges (all of them when ``ops`` is None). Revoking
@@ -1336,20 +1279,9 @@ class LakeTable:
                     acl[principal] = sorted(remaining)
                 else:
                     del acl[principal]
-        return self._publish_acl(m, acl, f"revoke {ops or 'ALL'} from {principal}")
-
-    def _publish_acl(self, m: dict, acl: dict, note: str) -> dict:
-        new_m = dict(m)
-        new_m.update(
-            version=m["version"] + 1,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
-            acl=acl,
-            summary={"operation": "alter-acl", "note": note,
-                     "total_rows": m["summary"].get("total_rows")},
-        )
-        self._publish(new_m)
-        return new_m["summary"]
+        note = f"revoke {ops or 'ALL'} from {principal}"
+        return self._commit(m, {"operation": "alter-acl", "note": note,
+                                "total_rows": m["summary"].get("total_rows")}, acl=acl)
 
     def privileges(self) -> dict:
         """{principal: [ops]} — the grants surface (informational)."""
@@ -1422,13 +1354,16 @@ class LakeTable:
         df = df.withColumn(BUCKET_COL, self._bucket_expr(m["key_col"], n_buckets))
         version = m["version"] + 1
         written, wstats, n, n_live = self._write_snapshot_data(
-            df, version, n_buckets, key_partitioned=any(m.get("deltas", {}).values())
+            df, version, n_buckets, m["key_col"], key_partitioned=any(m.get("deltas", {}).values())
         )
-        new_m = dict(m)
-        new_m.update(
-            version=version,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
+        return self._commit(
+            m,
+            {
+                "operation": "rebucket",
+                "total_rows": n_live,
+                "rows_written": n,
+                "n_buckets": int(n_buckets),
+            },
             n_buckets=int(n_buckets),
             bucket_hash=MURMUR3,
             buckets=written,
@@ -1436,15 +1371,7 @@ class LakeTable:
             delta_stats={},
             bucket_stats=wstats,
             lsn_watermark=self._advance_watermark(m, wstats),
-            summary={
-                "operation": "rebucket",
-                "total_rows": n_live,
-                "rows_written": n,
-                "n_buckets": int(n_buckets),
-            },
         )
-        self._publish(new_m)
-        return new_m["summary"]
 
     def compact(self, drop_tombstones: bool = False) -> dict:
         """Rewrite every bucket's dirs into one snapshot (small-file cleanup).
@@ -1464,24 +1391,23 @@ class LakeTable:
         version = m["version"] + 1
         # a read() of a table with deltas ran the per-key reduction
         aligned = any(m.get("deltas", {}).values()) and m.get("bucket_hash") == MURMUR3
-        written, wstats, n, n_live = self._write_snapshot_data(df, version, m["n_buckets"], aligned)
-        new_m = dict(m)
+        written, wstats, n, n_live = self._write_snapshot_data(
+            df, version, m["n_buckets"], m["key_col"], aligned
+        )
+        history: dict[str, Any] = {}
         if drop_tombstones:
-            new_m["changelog_min_version"] = version
-            new_m["changelog_min_reason"] = "compact(drop_tombstones=True) removed delete events"
-        new_m.update(
-            version=version,
-            snapshot_id=uuid.uuid4().hex,
-            parent=m["snapshot_id"],
+            history["changelog_min_version"] = version
+            history["changelog_min_reason"] = "compact(drop_tombstones=True) removed delete events"
+        return self._commit(
+            m,
+            {"operation": "compact", "total_rows": n_live, "rows_written": n},
+            **history,
             buckets=written,
             deltas={},  # the read above reduced deltas into the rewrite
             delta_stats={},
             bucket_stats=wstats,
             lsn_watermark=self._advance_watermark(m, wstats),
-            summary={"operation": "compact", "total_rows": n_live, "rows_written": n},
         )
-        self._publish(new_m)
-        return new_m["summary"]
 
 
 def _stat_parquet_file(path: str) -> dict:
@@ -1562,9 +1488,10 @@ def _combine_file_stats(file_stats: list[dict]) -> dict:
 
 
 def _stored_order() -> Column:
-    """The merge-on-read reduce's order, (_lsn, _seq): on equal LSNs the
-    later commit wins (the CoW join's ``src_lsn >= tgt_lsn`` rule). NULL
-    _lsn (plain writes) and NULL _seq (pre-MoR files) sort lowest."""
+    """The one MERGE rule, (_lsn, _seq): per key the greatest stored row
+    wins — in the MoR read, compact, and the CoW merge's fold alike. On
+    equal LSNs the later commit wins. NULL _lsn (plain writes) and NULL
+    _seq (files from before the column) sort lowest."""
     return F.struct(
         F.coalesce(F.col(LSN_COL), F.lit(-(1 << 62)).cast("long")).alias("l"),
         F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long")).alias("s"),

@@ -3,8 +3,8 @@
 The reference's transaction unit is a 1000-row buffer commit
 (``/root/reference/geopetl/oracle_sde.py:1050-1074``) with no resume state:
 a crash mid-load leaves partial data and no record of progress. Here the
-checkpoint is a tiny JSON file (atomic ``os.replace``) recording the last
-completed epoch plus source offsets; combined with the lake's epoch-keyed
+checkpoint is a tiny JSON file (fsync + atomic ``os.replace``) recording the
+last completed epoch plus source offsets; combined with the lake's epoch-keyed
 commits, resume-from-checkpoint replays at most one epoch, and that replay
 is skipped by the sink's idempotency check — exactly-once end to end.
 """
@@ -41,6 +41,8 @@ class Checkpoint:
         tmp = self.file + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as fh:
             json.dump(state, fh)
+            fh.flush()
+            os.fsync(fh.fileno())  # durable before the rename publishes it
         os.replace(tmp, self.file)
 
     def next_epoch_after(self, default_start: int = 0) -> int:

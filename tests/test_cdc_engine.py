@@ -292,6 +292,28 @@ def test_pipeline_resume_from_checkpoint(spark, events, tmp_path):
     assert all(e["snapshot_id"] for e in lin)
 
 
+def test_checkpoint_save_fsyncs_before_replace(tmp_path, monkeypatch):
+    """The checkpoint's temp file is fsynced before the rename publishes it,
+    so a crash cannot leave a renamed but empty or torn checkpoint."""
+    calls = []
+    fsync, replace = os.fsync, os.replace
+
+    def spy_fsync(fd):
+        calls.append("fsync")
+        fsync(fd)
+
+    def spy_replace(src, dst):
+        calls.append("replace")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    ck = Checkpoint(str(tmp_path / "ck"))
+    ck.save(3, {"p": 7})
+    assert calls == ["fsync", "replace"]
+    assert ck.load()["last_epoch"] == 3
+
+
 def test_pipeline_with_schema_drift(spark, tmp_path):
     log = str(tmp_path / "log")
     write_cdc_log(spark, log, 3000, n_keys=100, events_per_epoch=1000, drift_epoch=2)

@@ -201,8 +201,8 @@ def test_concurrent_writers_do_not_clobber_data(spark, tmp_path):
     staged_b = spark.createDataFrame([("b", [2], 1, "s")], DOC_SCHEMA)
     staged_b = staged_b.withColumn("_bucket", t._bucket_expr("doc_id", 4)).withColumn(
         "_lsn", F.lit(1).cast("long")).withColumn("_deleted", F.lit(False))
-    written_a, _, n_a, _ = t._write_snapshot_data(staged_a, v, 4)
-    written_b, _, n_b, _ = t._write_snapshot_data(staged_b, v, 4)  # same version!
+    written_a, _, n_a, _ = t._write_snapshot_data(staged_a, v, 4, "doc_id")
+    written_b, _, n_b, _ = t._write_snapshot_data(staged_b, v, 4, "doc_id")  # same version!
     dirs_a = {d for dl in written_a.values() for d in dl}
     dirs_b = {d for dl in written_b.values() for d in dl}
     assert dirs_a.isdisjoint(dirs_b)

@@ -60,28 +60,40 @@ def _count_repartitions(spark, monkeypatch) -> list:
     return calls
 
 
-def _files_per_delta_dir(t) -> list[int]:
+def _files_per_dir(t, dirs_by_bucket: str = "deltas") -> list[int]:
     return [
         len(glob.glob(os.path.join(d, "*.parquet")))
-        for dirs in t.manifest()["deltas"].values()
+        for dirs in t.manifest()[dirs_by_bucket].values()
         for d in dirs
     ]
 
 
-def test_mor_merge_writes_whole_buckets_with_no_write_shuffle(spark, tmp_path, events, monkeypatch):
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_writes_whole_buckets_with_no_write_shuffle(spark, tmp_path, events, monkeypatch, strategy):
     """16 Murmur3 buckets at the session's P=8 shuffle partitions: the
-    dedup's exchange already holds whole buckets per task, so the delta
-    write adds no repartition and every delta bucket dir holds exactly one
-    parquet file, with every row in its own bucket."""
+    per-key reduce's exchange (the dedup for MoR, the bucket fold for CoW)
+    already holds whole buckets per task, so the write adds no repartition
+    and no join, every bucket dir it writes holds exactly one parquet file,
+    and every row is in its own bucket."""
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    t = LakeTable(spark, str(tmp_path / "mor16")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=16)
+    t = LakeTable(spark, str(tmp_path / strategy)).create(DOC_SCHEMA, key_col="doc_id", n_buckets=16)
     assert t.manifest()["bucket_hash"] == "murmur3"
     calls = _count_repartitions(spark, monkeypatch)
+    plans = []
+    write = LakeTable._write_snapshot_data
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return write(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_snapshot_data", spy)
     for e in range(3):
-        t.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy="mor")
+        t.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy=strategy)
     assert calls == []
-    files = _files_per_delta_dir(t)
-    assert len(files) > 16 and set(files) == {1}
+    assert len(plans) == 3 and not any("Join" in p for p in plans)
+    # MoR adds a delta dir per touched bucket per epoch; CoW keeps one per bucket
+    files = _files_per_dir(t, "deltas" if strategy == "mor" else "buckets")
+    assert (len(files) > 16 if strategy == "mor" else len(files) == 16) and set(files) == {1}
     stored = t.read(include_system=True)
     assert stored.filter(F.col("_bucket") != F.pmod(F.hash("doc_id"), F.lit(16))).count() == 0
 
@@ -98,8 +110,68 @@ def test_mor_merge_repartitions_when_p_does_not_divide_buckets(spark, tmp_path, 
     for e in range(3):
         cow.merge(events.filter(F.col("epoch") == e), epoch_id=e, strategy="cow")
     assert mor.checksum() == cow.checksum()
-    files = _files_per_delta_dir(mor)
+    files = _files_per_dir(mor)
     assert len(files) > 12 and set(files) == {1}
+
+
+# One MERGE rule, table-driven: (steps, expected live state). A step is
+# ("write", [(key, tokens)]) or (strategy, [(key, tokens, op, lsn)]); a None
+# strategy takes the test's parameter. Expected states are written by hand.
+_TIE_CASES = {
+    "write_rows_lose_to_any_merge": (
+        [
+            ("write", [("a", [1]), ("b", [2]), ("c", [3])]),
+            (None, [("a", [9], "U", 1), ("b", None, "D", 1)]),
+        ],
+        {"a": [9], "c": [3]},
+    ),
+    "equal_lsn_later_commit_wins": (
+        [(None, [("a", [1], "I", 5)]), (None, [("a", [2], "U", 5)])],
+        {"a": [2]},
+    ),
+    "late_replay_loses": (
+        [
+            (None, [("a", [1], "I", 10)]),
+            (None, [("a", [2], "U", 20)]),
+            (None, [("a", [3], "U", 15)]),
+        ],
+        {"a": [2]},
+    ),
+    "delete_then_late_older_upsert_stays_deleted": (
+        [
+            (None, [("a", [1], "I", 1), ("b", [2], "I", 2)]),
+            (None, [("a", None, "D", 3)]),
+            (None, [("a", [7], "U", 2)]),
+        ],
+        {"b": [2]},
+    ),
+    "mor_then_cow": (
+        [
+            ("mor", [("a", [1], "I", 1), ("b", [2], "I", 2), ("c", [3], "I", 3)]),
+            ("cow", [("a", [4], "U", 5), ("c", None, "D", 6)]),
+            ("mor", [("b", [5], "U", 2)]),  # equal LSN: later commit wins
+            ("cow", [("a", [6], "U", 4), ("c", [7], "U", 5)]),  # late replays lose
+        ],
+        {"a": [4], "b": [5]},
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "case,strategy",
+    [(c, s) for c in _TIE_CASES if c != "mor_then_cow" for s in ("cow", "mor")]
+    + [("mor_then_cow", None)],
+)
+def test_one_merge_rule_for_both_strategies(spark, tmp_path, case, strategy):
+    steps, expected = _TIE_CASES[case]
+    t = _mk(spark, tmp_path, "tie")
+    for epoch, (how, rows) in enumerate(steps):
+        if how == "write":
+            t.write(spark.createDataFrame([(k, tok, len(tok), "s") for k, tok in rows], DOC_SCHEMA))
+        else:
+            batch = _batch(spark, [(k, tok, tok and len(tok), "s", op, lsn) for k, tok, op, lsn in rows])
+            t.merge(batch, epoch_id=epoch, strategy=how or strategy)
+    assert {r["doc_id"]: r["tokens"] for r in t.read().collect()} == expected
 
 
 def test_mor_equals_cow_final_state(spark, tmp_path, events):

@@ -1,9 +1,9 @@
 """Per-epoch phase profile of the CDC ingest loop.
 
 Runs one ingest at a chosen parallelism / epoch size and prints each epoch's
-phase timings (lineage pre-scan, dedup+bucket-discovery, join+write, count
-bookkeeping) from the lineage log — the measurement that decides which
-per-epoch fixed cost to fuse next.
+copy-on-write merge phase timings (``merge_phase_sec``: dedup+bucket-
+discovery, reduce+write, count bookkeeping) from the lineage log — the
+measurement that decides which per-epoch fixed cost to fuse next.
 
 Usage: python tools/profile_epochs.py [--events 4000000] [--cores 16] [--epochs 4]
 """
