@@ -66,6 +66,7 @@ from pyspark.sql import types as T
 
 from .. import schema as schema_mod
 from ..operators.dedup_cdc import event_order, latest_per_key
+from ..sqltext import cast, quote, select_sql
 
 BUCKET_COL = "_bucket"
 LSN_COL = "_lsn"
@@ -79,6 +80,7 @@ SEQ_COL = "_seq"  # commit-order tiebreak of the merge order (_stored_order):
 _PART_COL = "_bucket_p"  # physical partition dir column (duplicated from _bucket)
 MURMUR3 = "murmur3"  # manifest "bucket_hash" of pmod(hash(key), N) tables
 _SYSTEM_COLS = (BUCKET_COL, LSN_COL, DELETED_COL, SEQ_COL)
+_LIVE = f"NOT coalesce({DELETED_COL}, false)"  # the filter that drops tombstones
 
 
 class CommitConflict(Exception):
@@ -513,9 +515,9 @@ class LakeTable:
         if delta_dirs:
             df = latest_per_key(df, m["key_col"], _stored_order())
         if not include_system:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(*_SYSTEM_COLS)
+            df = df.filter(_LIVE).drop(*_SYSTEM_COLS)
         if where:
-            df = df.filter(F.expr(where))
+            df = df.filter(where)
         if fields:
             df = df.select(*fields)
         if limit is not None:
@@ -529,23 +531,30 @@ class LakeTable:
             return self.spark.createDataFrame([], read_schema)
         return self.spark.read.schema(read_schema).parquet(*dirs)
 
-    def _changelog_dirs(self, m: dict, wm: int | None) -> list[str]:
+    def _changelog_dirs(self, m: dict, wm: int | None) -> tuple[list[str], bool]:
         """Every base and delta dir of ``m`` that may hold a row with
-        ``_lsn > wm``. A dir whose recorded ``_lsn`` max is at or below the
+        ``_lsn > wm``, and whether those dirs are one merge-on-read commit's
+        deltas. A dir whose recorded ``_lsn`` max is at or below the
         watermark holds only rows that filter drops, so it is not read; a
-        dir with no recorded range is always read (conservative)."""
+        dir with no recorded range is always read (conservative) and never
+        counts as one commit's delta."""
         preds = [] if wm is None else [(LSN_COL, ">", int(wm))]
         out: list[str] = []
-        for dirs_by_bucket, stats in (
-            (m["buckets"], m.get("bucket_stats")),
-            (m.get("deltas") or {}, m.get("delta_stats")),
+        one_commit = True
+        for is_delta, dirs_by_bucket, stats in (
+            (False, m["buckets"], m.get("bucket_stats")),
+            (True, m.get("deltas") or {}, m.get("delta_stats")),
         ):
             for b, dlist in dirs_by_bucket.items():
                 zones = ((stats or {}).get(b) or {}).get("dirs") or {}
-                out.extend(
-                    d for d in dlist if not zones.get(d) or self._zones_may_match(zones[d], preds)
-                )
-        return out
+                for d in dlist:
+                    if zones.get(d) and not self._zones_may_match(zones[d], preds):
+                        continue
+                    out.append(d)
+                    one_commit = one_commit and is_delta and bool(zones.get(d))
+        # a commit writes one dir per bucket, all in its one snapshot dir
+        one_commit = one_commit and len({os.path.dirname(d) for d in out}) <= 1
+        return out, one_commit
 
     def read_changes(
         self,
@@ -580,6 +589,24 @@ class LakeTable:
         CDC-derived state. Spark lists more than 32 dirs with a parallel
         listing job, so a window over a wide bucket count (over 32 delta
         dirs per commit) still pays that job.
+
+        **One-commit rule:** when every dir left after that pruning is a
+        delta dir with a recorded range and all of them sit in one
+        snapshot dir (one merge-on-read commit), the reduce is skipped and
+        the read runs no shuffle. The filtered rows are then already the
+        reduce's output:
+
+        * a MoR merge writes the deduped batch — at most one row per key,
+          and a key never spans buckets, so the commit's dirs hold at most
+          one row per key;
+        * every other row of such a key is in a pruned dir, so its
+          ``_lsn`` is at or below ``wm`` — below the surviving row's, which
+          is therefore the key's max, exactly what the reduce keeps
+          (the argument above, with the pruned dirs as the rest of the
+          table).
+
+        Every other window reduces: one holding a base dir, a dir with no
+        recorded range, or the dirs of two or more commits.
 
         **Changelog-retention contract** (enforced, not advisory):
 
@@ -635,11 +662,12 @@ class LakeTable:
                 f"keep_last_versions above the oldest consumer's lag). "
                 f"Resync from a full snapshot read()."
             ) from None
-        df = self._scan(m_to, self._changelog_dirs(m_to, wm))
+        dirs, one_commit = self._changelog_dirs(m_to, wm)
+        df = self._scan(m_to, dirs)
         # the watermark filter runs BEFORE the merge-on-read reduce (see
         # "Cost model" above for why that returns the same rows)
-        df = df.filter(F.col(LSN_COL).isNotNull() if wm is None else F.col(LSN_COL) > int(wm))
-        if m_to.get("deltas"):
+        df = df.filter(f"{LSN_COL} IS NOT NULL" if wm is None else f"{LSN_COL} > {int(wm)}")
+        if m_to.get("deltas") and not one_commit:
             df = latest_per_key(df, m_to["key_col"], _stored_order())
         return df.drop(BUCKET_COL, SEQ_COL)
 
@@ -705,8 +733,10 @@ class LakeTable:
         return f"pmod(xxhash64(cast({key_sql} as string)), {n_buckets})"
 
     @classmethod
-    def _bucket_expr(cls, key_col: str, n_buckets: int, bucket_hash: str | None = MURMUR3) -> Column:
-        return F.expr(cls._bucket_sql(f"`{key_col}`", n_buckets, bucket_hash)).cast("int")
+    def _bucket_int_sql(cls, key_col: str, n_buckets: int, bucket_hash: str | None = MURMUR3) -> str:
+        """The ``_bucket`` of a row, as SQL text over ``key_col``. Hash the
+        key as stored: Spark hashes an int and the same bigint differently."""
+        return f"CAST({cls._bucket_sql(quote(key_col), n_buckets, bucket_hash)} AS INT)"
 
     def _shuffle_partitions(self) -> int:
         """P of a shuffle Spark plans itself (``SQLConf.numShufflePartitions``)."""
@@ -861,12 +891,21 @@ class LakeTable:
         # it is NOT recorded as a bulk-blind version below. Other system
         # columns are always re-derived.
         lsn_synthesized = LSN_COL not in df.columns
-        if not lsn_synthesized:
-            df = df.select(
-                *[c for c in df.columns if c not in _SYSTEM_COLS],
-                F.col(LSN_COL).cast("long").alias(LSN_COL),
-            )
-        df = _conform(df, new_schema, keep_system=not lsn_synthesized)
+        n_buckets = m["n_buckets"]
+        key = m["key_col"]
+        staged = _conform(
+            df,
+            new_schema,
+            extra={
+                LSN_COL: f"CAST({'NULL' if lsn_synthesized else quote(LSN_COL)} AS BIGINT)",
+                DELETED_COL: "false",
+            },
+        )
+        # the bucket of the conformed key: an incoming int key hashes apart
+        # from the stored bigint of the same value
+        staged = staged.withColumn(
+            BUCKET_COL, F.expr(self._bucket_int_sql(key, n_buckets, m.get("bucket_hash")))
+        )
         if not lsn_synthesized and mode == "append":
             # Guard (advisor r6): an LSN-carrying append is exempted from the
             # bulk-blind marker below ONLY because its rows surface in
@@ -876,7 +915,7 @@ class LakeTable:
             # refuse them loudly before any data is written. This job and
             # the write each evaluate df (see the docstring).
             wm = m.get("lsn_watermark")
-            chk = df.agg(
+            chk = staged.agg(
                 F.count(F.when(F.col(LSN_COL).isNull(), 1)).alias("n_null"),
                 F.min(LSN_COL).alias("mn"),
             ).collect()[0]
@@ -893,12 +932,6 @@ class LakeTable:
                     "invisible to every changelog window. Supply LSNs above the "
                     "watermark or drop the _lsn column"
                 )
-        n_buckets = m["n_buckets"]
-        key = m["key_col"]
-        staged = df.withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, m.get("bucket_hash")))
-        if lsn_synthesized:
-            staged = staged.withColumn(LSN_COL, F.lit(None).cast("long"))
-        staged = staged.withColumn(DELETED_COL, F.lit(False))
         version = m["version"] + 1
         written, wstats, n_new, _live_new = self._write_snapshot_data(staged, version, n_buckets, key)
 
@@ -1033,27 +1066,14 @@ class LakeTable:
 
         key = m["key_col"]
         n_buckets = m["n_buckets"]
-        bucket_hash = m.get("bucket_hash")
         version = m["version"] + 1
 
-        payload_cols = [c for c in changes.columns if c not in (op_col, lsn_col, "commit_ts", "epoch")]
-        incoming_schema = T.StructType([f for f in changes.schema.fields if f.name in payload_cols])
-        new_schema = schema_mod.evolve_schema(self.schema(), incoming_schema)
+        new_schema = self._evolved_schema(m, changes, lsn_col, op_col)
         schema_json = json.loads(new_schema.json())
-        # the key typed as stored: shuffle partition and bucket hash one value
-        changes = changes.withColumn(key, F.col(key).cast(new_schema[key].dataType))
-        changes = latest_per_key(changes, key, event_order(changes, lsn_col=lsn_col, op_col=op_col))
-        src = changes.withColumn(LSN_COL, F.col(lsn_col).cast("long")).withColumn(
-            DELETED_COL, F.col(op_col) == "D"
-        )
-        staged = (
-            _conform(src, new_schema, keep_system=True)
-            .withColumn(BUCKET_COL, self._bucket_expr(key, n_buckets, bucket_hash))
-            .withColumn(SEQ_COL, F.lit(version).cast("long"))
-        )
+        staged = self._stage(m, changes, new_schema, lsn_col, op_col)
         # the write's input is always a per-key reduce (the dedup, or the
         # fold below), so Murmur3 buckets need no write shuffle when P | N
-        aligned = bucket_hash == MURMUR3
+        aligned = m.get("bucket_hash") == MURMUR3
 
         if mode == "mor":
             written, wstats, n_rows, n_live = self._write_snapshot_data(
@@ -1137,6 +1157,44 @@ class LakeTable:
             lineage=(lineage or []),
             **fields,
         )
+
+    @staticmethod
+    def _evolved_schema(m: dict, changes: DataFrame, lsn_col: str, op_col: str) -> T.StructType:
+        """``m``'s schema evolved by the payload columns of a change batch
+        (every column but the op, LSN, commit-ts and epoch ones)."""
+        meta = (op_col, lsn_col, "commit_ts", "epoch")
+        incoming = T.StructType([f for f in changes.schema.fields if f.name not in meta])
+        return schema_mod.evolve_schema(T.StructType.fromJson(m["schema"]), incoming)
+
+    def _stage(
+        self,
+        m: dict,
+        changes: DataFrame,
+        new_schema: T.StructType,
+        lsn_col: str,
+        op_col: str,
+    ) -> DataFrame:
+        """A change batch as the commit after ``m`` stores it: one row per
+        key (:func:`latest_per_key` by :func:`event_order`), conformed to
+        ``new_schema``, plus ``_lsn``, ``_deleted`` (op D), ``_bucket`` and
+        ``_seq`` = the commit's version. The key is first cast to its stored
+        type, so the shuffle partition and the bucket hash see one value.
+        Each projection is SQL text, so no Column-API call is made per
+        column."""
+        key = m["key_col"]
+        key_type = new_schema[key].dataType
+        changes = select_sql(
+            changes, [cast(quote(c), key_type, c) if c == key else quote(c) for c in changes.columns]
+        )
+        deduped = latest_per_key(changes, key, event_order(changes, lsn_col=lsn_col, op_col=op_col))
+        bucket = self._bucket_int_sql(key, m["n_buckets"], m.get("bucket_hash"))
+        system = {
+            LSN_COL: f"CAST({quote(lsn_col)} AS BIGINT)",
+            DELETED_COL: f"{quote(op_col)} = 'D'",
+            BUCKET_COL: bucket,
+            SEQ_COL: f"CAST({m['version'] + 1} AS BIGINT)",
+        }
+        return _conform(deduped, new_schema, extra=system)
 
     def _merge_mor(self, m: dict, written: dict[str, list[str]], wstats: dict[str, dict]) -> dict:
         """Merge-on-read bookkeeping: the manifest ``deltas`` and
@@ -1329,9 +1387,9 @@ class LakeTable:
         canonical (key, payload) encoding — the 'byte-identical replay'
         equality check from the north rule."""
         df = self.read()
-        cols = [F.col(c).cast("string") for c in sorted(df.columns)]
+        cols = ", ".join(f"CAST({quote(c)} AS STRING)" for c in sorted(df.columns))
         return (
-            df.select(F.xxhash64(*cols).alias("h"))
+            df.selectExpr(f"xxhash64({cols}) AS h")
             .agg(F.sum(F.col("h").cast("decimal(38,0)")).alias("s"))
             .collect()[0]["s"]
             or 0
@@ -1351,7 +1409,7 @@ class LakeTable:
             raise ValueError("n_buckets must be >= 1")
         m = self.manifest()
         df = self.read(include_system=True).drop(BUCKET_COL)
-        df = df.withColumn(BUCKET_COL, self._bucket_expr(m["key_col"], n_buckets))
+        df = df.withColumn(BUCKET_COL, F.expr(self._bucket_int_sql(m["key_col"], n_buckets)))
         version = m["version"] + 1
         written, wstats, n, n_live = self._write_snapshot_data(
             df, version, n_buckets, m["key_col"], key_partitioned=any(m.get("deltas", {}).values())
@@ -1387,7 +1445,7 @@ class LakeTable:
         m = self.manifest()
         df = self.read(include_system=True)
         if drop_tombstones:
-            df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            df = df.filter(_LIVE)
         version = m["version"] + 1
         # a read() of a table with deltas ran the per-key reduction
         aligned = any(m.get("deltas", {}).values()) and m.get("bucket_hash") == MURMUR3
@@ -1492,9 +1550,8 @@ def _stored_order() -> Column:
     wins — in the MoR read, compact, and the CoW merge's fold alike. On
     equal LSNs the later commit wins. NULL _lsn (plain writes) and NULL
     _seq (files from before the column) sort lowest."""
-    return F.struct(
-        F.coalesce(F.col(LSN_COL), F.lit(-(1 << 62)).cast("long")).alias("l"),
-        F.coalesce(F.col(SEQ_COL), F.lit(-1).cast("long")).alias("s"),
+    return F.expr(
+        f"named_struct('l', coalesce({LSN_COL}, {-(1 << 62)}L), 's', coalesce({SEQ_COL}, -1L))"
     )
 
 
@@ -1511,17 +1568,17 @@ def _user_schema(df: DataFrame) -> T.StructType:
     return T.StructType([f for f in df.schema.fields if f.name not in _SYSTEM_COLS])
 
 
-def _conform(df: DataFrame, schema: T.StructType, keep_system: bool = False) -> DataFrame:
-    """Project df onto schema: missing columns become typed NULLs, column
-    order normalized (W4 analog — order normalization before merge)."""
-    cols = []
+def _conform(df: DataFrame, schema: T.StructType, extra: dict[str, str]) -> DataFrame:
+    """Project df onto schema in one SQL-text projection (W4 analog —
+    order normalization before merge): a column of the schema's type
+    passes through, one of another type is cast, a missing one becomes a
+    typed NULL. ``extra`` appends columns as SQL text (name -> expression)."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    cols: list[str | Column] = []
     for f in schema.fields:
-        if f.name in df.columns:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        if have.get(f.name) == f.dataType:
+            cols.append(quote(f.name))
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    if keep_system:
-        for s in _SYSTEM_COLS:
-            if s in df.columns:
-                cols.append(F.col(s))
-    return df.select(*cols)
+            cols.append(cast(quote(f.name) if f.name in have else "NULL", f.dataType, f.name))
+    cols += [f"{e} AS {quote(n)}" for n, e in extra.items()]
+    return select_sql(df, cols)

@@ -183,7 +183,8 @@ def dup_components(
     def _ckpt(df: DataFrame, name: str) -> tuple[DataFrame, int]:
         path = os.path.join(work, name)
         df.write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
+        # under df's schema: no schema-inference job (see plans.ckpt.materialize)
+        out = spark.read.schema(df.schema).parquet(path)
         return out, out.count()
 
     def _finish(labels_df: DataFrame) -> DataFrame:

@@ -37,9 +37,20 @@ __all__ = ["materialize"]
 def materialize(df: DataFrame, label: str = "ckpt") -> DataFrame:
     """Write ``df`` to a session-temp parquet directory and return the
     read-back (lazy, columnar) frame. One evaluation of the producer plan,
-    arbitrarily many cheap consumers."""
+    arbitrarily many cheap consumers.
+
+    The write is **eager**: the producer plan runs inside this call, not
+    when a consumer first acts, so merely building a plan on the result
+    (``.explain()``, a plan-shape test, a pipeline never executed) pays
+    for it, and errors in the producer raise here. The files stay until
+    the process exits, so a long session that calls it repeatedly
+    accumulates disk.
+
+    The read-back is under ``df.schema``, so it runs no schema-inference
+    job; a file source reads a given schema as nullable, so the schema
+    equals what inference from the files would give."""
     work = tempfile.mkdtemp(prefix=f"geopetl_{label}_")
     atexit.register(shutil.rmtree, work, True)
     path = os.path.join(work, "data")
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

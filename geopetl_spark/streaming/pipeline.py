@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
+from ..sqltext import quote
 from ..transforms import sanitize_tokens
 from .checkpoint import Checkpoint
 from .lineage import LineageLog, partition_lineage
@@ -160,17 +161,16 @@ def apply_epoch(
     # Lineage + poison accounting ride the dedup job as observed metrics
     # (CollectMetrics): the epoch is scanned exactly ONCE on the clean path —
     # no separate lineage pre-scan job, no extra job when the batch is clean.
-    valid_pred = F.col(cfg.key_col).isNotNull() & F.col(cfg.lsn_col).isNotNull()
+    # Predicate and metrics are SQL text: one py4j call each.
+    lsn = quote(cfg.lsn_col)
+    valid_sql = f"{quote(cfg.key_col)} IS NOT NULL AND {lsn} IS NOT NULL"
+    invalid_sql = f"NOT ({valid_sql})"
     obs = Observation()
-    metrics = [
-        F.count(F.lit(1)).alias("rows"),
-        F.min(cfg.lsn_col).alias("min_lsn"),
-        F.max(cfg.lsn_col).alias("max_lsn"),
-    ]
+    metrics = ["count(1) AS rows", f"min({lsn}) AS min_lsn", f"max({lsn}) AS max_lsn"]
     if cfg.quarantine:
-        metrics.append(F.sum(F.when(~valid_pred, 1).otherwise(0)).alias("invalid_rows"))
-    observed = batch.observe(obs, *metrics)
-    to_merge = observed.filter(valid_pred) if cfg.quarantine else observed
+        metrics.append(f"sum(CASE WHEN {invalid_sql} THEN 1 ELSE 0 END) AS invalid_rows")
+    observed = batch.observe(obs, *[F.expr(m) for m in metrics])
+    to_merge = observed.filter(valid_sql) if cfg.quarantine else observed
     summary = table.merge(
         to_merge,
         epoch_id=epoch,
@@ -185,7 +185,7 @@ def apply_epoch(
         # a deliberate re-apply still records what arrived (rare path), with
         # the same poison-row accounting as the normal path
         plineage = partition_lineage(
-            batch, lsn_col=cfg.lsn_col, invalid_pred=(~valid_pred) if cfg.quarantine else None
+            batch, lsn_col=cfg.lsn_col, invalid_pred=F.expr(invalid_sql) if cfg.quarantine else None
         )
         n_quarantined = sum(int(p.pop("invalid_rows", 0) or 0) for p in plineage)
     else:
@@ -203,7 +203,7 @@ def apply_epoch(
             # quarantined rows preserved verbatim for replay/forensics; the
             # write job exists only on the poison path
             qdir = f"{cfg.checkpoint_path}/quarantine/epoch={epoch}"
-            batch.filter(~valid_pred).write.mode("overwrite").parquet(qdir)
+            batch.filter(invalid_sql).write.mode("overwrite").parquet(qdir)
             plineage[0]["rows_note"] = "pre-quarantine counts"
     t2 = time.time()
     summary = dict(summary)

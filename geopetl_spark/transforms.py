@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sqltext import quote
+
 
 def sanitize_tokens(
     df: DataFrame,
@@ -37,15 +39,16 @@ def sanitize_tokens(
     * NULL elements     -> dropped (≈ NaN->0 repair, oracle_sde.py:763-767)
     * out-of-vocab ids  -> clamped into [0, vocab_size) (≈ ST_Force_2D clamp)
     * n_tok             -> recomputed from the sanitized array
+
+    The expressions are SQL text (with ``x -> ...`` lambdas): it runs on
+    every ingest epoch, and a SQL string costs one py4j call where the
+    Column API pays several per function (see ``operators/dedup_cdc``).
     """
-    toks = F.coalesce(F.col(tokens_col), F.array().cast("array<int>"))
-    toks = F.filter(toks, lambda x: x.isNotNull())
+    toks = f"filter(coalesce({quote(tokens_col)}, CAST(array() AS ARRAY<INT>)), x -> x IS NOT NULL)"
     if vocab_size is not None:
-        toks = F.transform(
-            toks, lambda x: F.least(F.greatest(x, F.lit(0)), F.lit(vocab_size - 1)).cast("int")
-        )
-    out = df.withColumn(tokens_col, toks.cast("array<int>"))
-    return out.withColumn(n_tok_col, F.size(F.col(tokens_col)).cast("int"))
+        toks = f"transform({toks}, x -> CAST(least(greatest(x, 0), {vocab_size - 1}) AS INT))"
+    out = df.withColumn(tokens_col, F.expr(f"CAST({toks} AS ARRAY<INT>)"))
+    return out.withColumn(n_tok_col, F.expr(f"CAST(size({quote(tokens_col)}) AS INT)"))
 
 
 def normalize_strings(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -187,6 +187,27 @@ def test_table_without_bucket_hash_keeps_xxhash_until_rebucket(spark, tmp_path, 
     assert t.read().filter(F.col("doc_id") == key).count() == 1
 
 
+def test_write_buckets_a_narrower_key_by_its_stored_type(spark, tmp_path):
+    """``write()`` of an int-keyed frame into a bigint-keyed table buckets
+    each row by the stored bigint (Spark hashes an int and the same bigint
+    apart), so a later merge of one of those keys finds its row and the
+    key stays one row."""
+    schema = T.StructType(
+        [T.StructField("id", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    t = LakeTable(spark, str(tmp_path / "lake")).create(schema, key_col="id", n_buckets=8)
+    t.write(spark.range(50).selectExpr("CAST(id AS INT) AS id", "'w' AS v"), mode="append")
+    stored = t.read(include_system=True).withColumn("f", F.input_file_name())
+    want = F.pmod(F.hash(F.col("id").cast("long")), F.lit(8))
+    assert stored.filter(F.col("_bucket") != want).count() == 0
+    in_dir = F.col("f").contains(F.concat(F.lit("_bucket_p="), want.cast("string"), F.lit("/")))
+    assert stored.filter(~in_dir).count() == 0
+    upd = spark.createDataFrame([(7, "m", "U", 1)], "id long, v string, op string, lsn long")
+    t.merge(upd, epoch_id=0, strategy="cow")
+    assert [tuple(r) for r in t.read().filter("id = 7").collect()] == [(7, "m")]
+    assert t.read().count() == 50
+
+
 def test_concurrent_writers_do_not_clobber_data(spark, tmp_path):
     """Two writers racing to the same next VERSION write disjoint data dirs:
     the loser's mode-overwrite parquet write must never delete the winner's
@@ -196,10 +217,10 @@ def test_concurrent_writers_do_not_clobber_data(spark, tmp_path):
     m = t.manifest()
     v = m["version"] + 1
     staged_a = spark.createDataFrame([("a", [1], 1, "s")], DOC_SCHEMA)
-    staged_a = staged_a.withColumn("_bucket", t._bucket_expr("doc_id", 4)).withColumn(
+    staged_a = staged_a.withColumn("_bucket", F.expr(t._bucket_int_sql("doc_id", 4))).withColumn(
         "_lsn", F.lit(1).cast("long")).withColumn("_deleted", F.lit(False))
     staged_b = spark.createDataFrame([("b", [2], 1, "s")], DOC_SCHEMA)
-    staged_b = staged_b.withColumn("_bucket", t._bucket_expr("doc_id", 4)).withColumn(
+    staged_b = staged_b.withColumn("_bucket", F.expr(t._bucket_int_sql("doc_id", 4))).withColumn(
         "_lsn", F.lit(1).cast("long")).withColumn("_deleted", F.lit(False))
     written_a, _, n_a, _ = t._write_snapshot_data(staged_a, v, 4, "doc_id")
     written_b, _, n_b, _ = t._write_snapshot_data(staged_b, v, 4, "doc_id")  # same version!

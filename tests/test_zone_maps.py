@@ -438,3 +438,39 @@ def test_one_commit_changelog_scans_only_that_commit(spark, tmp_path):
     stripped = t.read_changes(v - 1, v)
     assert _rowset(stripped) == want
     assert len(stripped.inputFiles()) > len(files)
+    # every dir is read, base dirs included: the per-key reduce runs again
+    assert _reduces(stripped)
+
+
+def _reduces(df) -> bool:
+    return "Aggregate" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_one_commit_mor_changelog_skips_the_reduce(spark, tmp_path):
+    """A window whose surviving dirs are one merge-on-read commit's deltas
+    reads them with no per-key reduce (no ``Aggregate`` in the optimized
+    plan); a window over two MoR commits, or over a copy-on-write commit
+    of a table that still holds deltas, keeps the reduce. Every window
+    returns the reduce-then-filter rows."""
+    t = LakeTable(spark, str(tmp_path / "short")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    t.merge(_batch(spark, [(f"k{i}", [i], i, "s", "I", i + 1) for i in range(40)]),
+            epoch_id=0, lsn_col="lsn", op_col="op")
+    for e in range(1, 4):
+        # updates of overlapping keys, a delete, and a late replay that loses
+        rows = [(f"k{i}", [e], e, "s", "U", 100 * e + i) for i in range(e, 40, 3)]
+        rows += [(f"k{e + 20}", None, None, "s", "D", 100 * e + 99), ("k0", [0], 0, "s", "U", 0)]
+        v = _mor(t, spark, rows, e)
+    one = t.read_changes(v - 1, v)
+    assert not _reduces(one)
+    assert _rowset(one) == _rowset(_reduce_then_filter(t, v - 1, v))
+    assert "k0" not in {r.doc_id for r in one.collect()}
+    two = t.read_changes(v - 2, v)
+    assert _reduces(two)
+    assert _rowset(two) == _rowset(_reduce_then_filter(t, v - 2, v))
+    t.merge(_batch(spark, [("k1", [7], 7, "s", "U", 500)]), epoch_id=4,
+            lsn_col="lsn", op_col="op", strategy="cow")
+    vc = t.manifest()["version"]
+    assert t.manifest()["deltas"]  # the buckets k1 does not hash to keep theirs
+    cow = t.read_changes(vc - 1, vc)
+    assert _reduces(cow)
+    assert _rowset(cow) == _rowset(_reduce_then_filter(t, vc - 1, vc))

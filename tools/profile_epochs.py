@@ -1,9 +1,19 @@
-"""Per-epoch phase profile of the CDC ingest loop.
+"""Per-epoch profile of the CDC ingest loop.
 
-Runs one ingest at a chosen parallelism / epoch size and prints each epoch's
-copy-on-write merge phase timings (``merge_phase_sec``: dedup+bucket-
-discovery, reduce+write, count bookkeeping) from the lineage log — the
-measurement that decides which per-epoch fixed cost to fuse next.
+Runs one ingest at a chosen parallelism / epoch size, one epoch per
+``run_ingest(max_epochs=1)`` call, and prints for each epoch:
+
+* the copy-on-write merge phase timings (``merge_phase_sec``: dedup+bucket-
+  discovery, reduce+write, count bookkeeping) from the lineage log;
+* ``py4j_calls``: Python -> JVM round trips the driver thread made,
+  counted at py4j's ``ClientServerConnection.send_command`` — the
+  plan-construction fixed cost;
+* ``jobs``: Spark jobs the epoch ran (one job group per epoch);
+* ``changelog``: the same two counts, plus seconds, for a consumer's
+  ``read_changes(prev, v).count()`` of that epoch's commit.
+
+These are the measurements that decide which per-epoch fixed cost to cut
+next.
 
 Usage: python tools/profile_epochs.py [--events 4000000] [--cores 16] [--epochs 4]
 """
@@ -16,9 +26,12 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from py4j import clientserver  # noqa: E402
 
 from geopetl_spark import LakeTable, get_spark  # noqa: E402
 from geopetl_spark.run import DOC_SCHEMA  # noqa: E402
@@ -45,11 +58,55 @@ def main() -> None:
             n_hot=7, hot_fraction=0.15, max_tokens=128,
         )
         tp, ck = os.path.join(work, "lake"), os.path.join(work, "ck")
-        LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=64)
+        table = LakeTable(spark, tp).create(DOC_SCHEMA, key_col="doc_id", n_buckets=64)
         cfg = IngestConfig(log_path=log, table_path=tp, checkpoint_path=ck)
-        t0 = time.time()
-        results = run_ingest(spark, cfg)
-        elapsed = time.time() - t0
+        sc = spark.sparkContext
+        calls = [0]
+        send = clientserver.ClientServerConnection.send_command
+        me = threading.get_ident()
+
+        def counting(self, command):
+            # py4j's finalizer thread releases collected proxies on its own
+            # schedule: count only this thread's commands
+            calls[0] += threading.get_ident() == me
+            return send(self, command)
+
+        def measured(group, fn):
+            """``fn()`` run in job group ``group``: (result, {py4j_calls, jobs, sec})."""
+            sc.setJobGroup(group, group)
+            before, t = calls[0], time.time()
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, {
+                "py4j_calls": calls[0] - before,
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                "sec": round(time.time() - t, 3),
+            }
+
+        clientserver.ClientServerConnection.send_command = counting
+        results, counts = [], {}
+        prev = table.manifest()["version"]
+        elapsed = 0.0
+        try:
+            while True:
+                n = len(results)
+                res, ingest = measured(
+                    f"profile-epoch-{n}", lambda: run_ingest(spark, cfg, max_epochs=1)
+                )
+                if not res:
+                    break
+                elapsed += ingest.pop("sec")
+                v = table.manifest()["version"]
+                _, read = measured(
+                    f"profile-changelog-{n}", lambda: table.read_changes(prev, v).count()
+                )
+                counts[str(res[0].epoch)] = {**ingest, "changelog": read}
+                results += res
+                prev = v
+        finally:
+            clientserver.ClientServerConnection.send_command = send
         per_epoch = []
         for e in sorted(LineageLog(ck).read(), key=lambda e: str(e["epoch"])):
             cs = e.get("commit") or {}
@@ -60,6 +117,7 @@ def main() -> None:
                     "events_per_sec": round(e["events_per_sec"], 1),
                     "elapsed_sec": round(e["elapsed_sec"], 2),
                     "phases": cs.get("merge_phase_sec"),
+                    **counts.get(str(e["epoch"]), {}),
                 }
             )
         total_events = sum(r.rows for r in results)
