@@ -28,6 +28,7 @@ from geopetl_spark.operators import dedup_text as DD
 from geopetl_spark.operators.asof import asof_join
 from geopetl_spark.operators.dedup_cdc import event_order, latest_per_key
 from geopetl_spark.operators.range_join import range_join
+from geopetl_spark.plans import gates
 from geopetl_spark.sources.readers import from_parquet
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -122,12 +123,10 @@ def _q_top_revenue_orders(spark, sf):
     # (guide §3.2: reduce the big side before shuffling it) — per-orderkey
     # revenue is unaffected because the semi filter keeps or drops WHOLE
     # orderkeys, and dropped keys could never survive the inner join. The
-    # pre-filter broadcast is gated by the same plan-stats probe as the
-    # dedup hints: at a scale where the BUILDING order-key list cannot
-    # broadcast, the plan falls back to the r6 aggregate-then-join (that
-    # regime is runtime-Bloom-filter territory, guide §3.2).
-    from geopetl_spark.operators.dedup_text import _small_relation
-
+    # pre-filter broadcast is gated by the ``top_revenue_prefilter`` size
+    # gate: at a scale where the BUILDING order-key list cannot broadcast,
+    # the plan falls back to the r6 aggregate-then-join (that regime is
+    # runtime-Bloom-filter territory, guide §3.2).
     li = _t(spark, sf, "lineitem")
     o = _t(spark, sf, "orders")
     c = _t(spark, sf, "customer")
@@ -137,7 +136,7 @@ def _q_top_revenue_orders(spark, sf):
     ).select("o_orderkey", "c_custkey")
     li_f = (
         li.join(F.broadcast(bo.select("o_orderkey")), li.l_orderkey == bo.o_orderkey, "left_semi")
-        if _small_relation(o, 64 << 20)
+        if gates.small_bytes(o, "top_revenue_prefilter")
         else li
     )
     rev = (

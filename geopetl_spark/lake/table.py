@@ -56,8 +56,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -66,6 +68,7 @@ from pyspark.sql import types as T
 
 from .. import schema as schema_mod
 from ..operators.dedup_cdc import event_order, latest_per_key
+from ..plans import gates
 from ..sqltext import cast, quote, select_sql
 
 BUCKET_COL = "_bucket"
@@ -756,7 +759,8 @@ class LakeTable:
         return os.path.join(self.path, "data", f"snap-{version:08d}-{uuid.uuid4().hex[:8]}")
 
     def _write_snapshot_data(
-        self, df: DataFrame, version: int, n_buckets: int, key: str, key_partitioned: bool = False
+        self, df: DataFrame, version: int, n_buckets: int, key: str, key_partitioned: bool = False,
+        check: Callable[[list[dict]], None] | None = None,
     ) -> tuple[dict[str, list[str]], dict[str, dict], int, int]:
         """Write df (already carrying _bucket and _lsn) into one dir per
         bucket under the snapshot dir, sorted by ``key`` within each
@@ -771,7 +775,11 @@ class LakeTable:
         ``pmod(hash(key), P)``, and ``_bucket`` is ``pmod(hash(key), N)``.
         If P divides N, each task holds whole buckets (AQE coalescing only
         merges adjacent partitions), so no write shuffle is needed. The path
-        changes only a bucket dir's file count, never a row's dir."""
+        changes only a bucket dir's file count, never a row's dir.
+
+        ``check`` judges what was written (the per-file footer stats) before
+        anything is returned; if it raises, the snapshot dir is removed, so
+        a refused write leaves nothing behind."""
         snapdir = self._snapshot_dir(version)
         out = df.withColumn(_PART_COL, F.col(BUCKET_COL))
         if not (key_partitioned and n_buckets % self._shuffle_partitions() == 0):
@@ -792,7 +800,11 @@ class LakeTable:
         # on the driver (no job-launch overhead); large commits fan the
         # footer reads out across executors so the commit path never
         # serializes O(files) metadata reads (see _harvest_stats).
-        stats = self._harvest_stats(written)
+        try:
+            stats = self._harvest_stats(written, check)
+        except Exception:
+            shutil.rmtree(snapdir, ignore_errors=True)
+            raise
         # each snapshot write produces exactly ONE dir per bucket, so the
         # bucket's harvested zones are also that dir's zones — recorded
         # per-dir for within-bucket pruning on append-accumulated buckets
@@ -801,15 +813,6 @@ class LakeTable:
         n_rows = sum(v["rows"] for v in stats.values())
         n_live = sum(v["live"] for v in stats.values())
         return written, stats, n_rows, n_live
-
-    # distributed-harvest crossover: below this many files the driver loop
-    # beats the fixed cost of one Spark job. Local-FS footer reads are
-    # ~0.5 ms so the measured crossover here is ~2k files (the distributed
-    # curve stays FLAT at ~1.2 s from 256 to 4096 files while serial grows
-    # linearly — tools/bench_harvest.py); on an object store a footer is
-    # 1-2 GETs (~20-80 ms) and the crossover drops to tens of files, so
-    # the default splits the difference. Tunable per deployment.
-    _HARVEST_DRIVER_MAX_FILES = 512
 
     @staticmethod
     def _file_stats(dirs: list[str]) -> dict:
@@ -825,26 +828,28 @@ class LakeTable:
                     files.append(os.path.join(d, fn))
         return _combine_file_stats([_stat_parquet_file(p) for p in files])
 
-    def _harvest_stats(self, written: dict[str, list[str]]) -> dict[str, dict]:
+    def _harvest_stats(
+        self, written: dict[str, list[str]], check: Callable[[list[dict]], None] | None = None
+    ) -> dict[str, dict]:
         """Bucket → (rows, live, zones) for a just-written snapshot.
 
         The footer reads are the commit path's only O(files) work; at real
         epoch sizes (10³–10⁴ files across thousands of buckets) a serial
-        driver loop would serialize that into every commit. Above
-        ``_HARVEST_DRIVER_MAX_FILES`` the per-file extraction fans out as
+        driver loop would serialize that into every commit. Above the
+        ``harvest_driver_files`` gate the per-file extraction fans out as
         one tiny Spark job over the file list (executors read footers in
         parallel, return one small stats dict per file — manifest-style
         metadata, never data), and only the per-bucket combine runs on the
         driver. The combine is order-independent (sums + min/max widening +
         no-stats-column union), so both paths are byte-identical — asserted
-        by ``tests/test_zone_maps.py``."""
+        by ``tests/test_zone_maps.py``. ``check`` sees the per-file stats."""
         pairs: list[tuple[str, str]] = []
         for b, dirs in written.items():
             for d in dirs:
                 for fn in sorted(os.listdir(d)):
                     if not fn.startswith((".", "_")) and fn.endswith(".parquet"):
                         pairs.append((b, os.path.join(d, fn)))
-        if len(pairs) <= self._HARVEST_DRIVER_MAX_FILES:
+        if gates.small_count(len(pairs), "harvest_driver_files"):
             per_file = [(b, _stat_parquet_file(p)) for b, p in pairs]
         else:
             sc = self.spark.sparkContext
@@ -854,6 +859,8 @@ class LakeTable:
                 .map(lambda bp: (bp[0], _stat_parquet_file(bp[1])))
                 .collect()
             )
+        if check is not None:
+            check([st for _, st in per_file])
         grouped: dict[str, list[dict]] = {b: [] for b in written}
         for b, st in per_file:
             grouped[b].append(st)
@@ -869,12 +876,11 @@ class LakeTable:
     ) -> dict:
         """Full refresh (``overwrite`` ≈ truncate+load) or blind ``append``.
 
-        An ``append`` whose ``df`` carries ``_lsn`` is checked (no NULL
-        ``_lsn``, all above the watermark) by a separate job before the
-        write job, so ``df`` is evaluated twice: its ``_lsn`` must be
-        deterministic (not derived from ``rand()`` or
-        ``monotonically_increasing_id()``), or the rows written can differ
-        from the rows checked."""
+        An ``append`` whose ``df`` carries ``_lsn`` must carry no NULL
+        ``_lsn`` and none at or below the watermark. The check reads the
+        written files' footer stats, so it judges exactly the rows that
+        would be committed; a refused append publishes no version and
+        leaves no data behind."""
         if not self.exists():
             raise ValueError(
                 f"no lake table at {self.path}; create() it first "
@@ -906,34 +912,18 @@ class LakeTable:
         staged = staged.withColumn(
             BUCKET_COL, F.expr(self._bucket_int_sql(key, n_buckets, m.get("bucket_hash")))
         )
-        if not lsn_synthesized and mode == "append":
-            # Guard (advisor r6): an LSN-carrying append is exempted from the
-            # bulk-blind marker below ONLY because its rows surface in
-            # read_changes — which filters _lsn > watermark. Null LSNs or
-            # LSNs at/below the current watermark would be silently invisible
-            # to every changelog window while the version looks complete, so
-            # refuse them loudly before any data is written. This job and
-            # the write each evaluate df (see the docstring).
-            wm = m.get("lsn_watermark")
-            chk = staged.agg(
-                F.count(F.when(F.col(LSN_COL).isNull(), 1)).alias("n_null"),
-                F.min(LSN_COL).alias("mn"),
-            ).collect()[0]
-            if chk["n_null"]:
-                raise ValueError(
-                    f"append with _lsn: {chk['n_null']} null-_lsn row(s) would never "
-                    "surface in read_changes; supply non-null LSNs or drop the _lsn "
-                    "column (the version is then recorded bulk-blind)"
-                )
-            if wm is not None and chk["mn"] is not None and int(chk["mn"]) <= int(wm):
-                raise ValueError(
-                    f"append with _lsn: min(_lsn)={chk['mn']} <= lsn_watermark={wm}; "
-                    "read_changes filters _lsn > watermark, so these rows would be "
-                    "invisible to every changelog window. Supply LSNs above the "
-                    "watermark or drop the _lsn column"
-                )
+        # Guard (advisor r6): an LSN-carrying append is exempted from the
+        # bulk-blind marker below ONLY because its rows surface in
+        # read_changes — which filters _lsn > watermark. Null LSNs or LSNs
+        # at/below the current watermark would be silently invisible to
+        # every changelog window while the version looks complete, so the
+        # written files' footer stats are judged before the commit.
+        wm = m.get("lsn_watermark")
+        check = None if lsn_synthesized or mode != "append" else lambda st: _refuse_invisible_lsns(st, wm)
         version = m["version"] + 1
-        written, wstats, n_new, _live_new = self._write_snapshot_data(staged, version, n_buckets, key)
+        written, wstats, n_new, _live_new = self._write_snapshot_data(
+            staged, version, n_buckets, key, check=check
+        )
 
         if mode == "overwrite":
             buckets = written
@@ -1226,8 +1216,6 @@ class LakeTable:
         ``keep_last_versions`` manifests (and drop the older manifests).
         Reclaims copy-on-write garbage + orphans from crashed commits.
         Time travel remains possible only within the kept window."""
-        import shutil
-
         current = self.manifest()
         keep_versions = set(range(max(current["version"] - keep_last_versions + 1, 0), current["version"] + 1))
         referenced: set[str] = set()
@@ -1471,11 +1459,12 @@ class LakeTable:
 def _stat_parquet_file(path: str) -> dict:
     """Footer stats for ONE parquet file: row count from metadata, delete
     count from a read of only the ``_deleted`` column (RLE booleans,
-    ~KBs/file), and per-column zone min/max over every row group for scalar
-    int/float/bool/string columns. Columns with missing/unusable statistics
-    are returned in ``nostat`` so the combiner can drop them table-wide
-    (conservative: no pruning on them). Module-level + self-contained so it
-    ships cleanly to executors for the distributed harvest."""
+    ~KBs/file), the ``_lsn`` NULL count, and per-column zone min/max over
+    every row group for scalar int/float/bool/string columns. Columns with
+    missing/unusable statistics are returned in ``nostat`` so the combiner
+    can drop them table-wide (conservative: no pruning on them). Module-
+    level + self-contained so it ships cleanly to executors for the
+    distributed harvest."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1483,6 +1472,7 @@ def _stat_parquet_file(path: str) -> dict:
     md = pf.metadata
     rows = md.num_rows
     deleted = 0
+    lsn_nulls = 0
     zones: dict[str, list] = {}
     nostat: set[str] = set()
     for rg in range(md.num_row_groups):
@@ -1490,6 +1480,9 @@ def _stat_parquet_file(path: str) -> dict:
         for ci in range(g.num_columns):
             col = g.column(ci)
             name = col.path_in_schema
+            if name == LSN_COL:  # no null count kept: every row may be NULL
+                st = col.statistics
+                lsn_nulls += st.null_count if st is not None and st.has_null_count else g.num_rows
             if "." in name or name in nostat or (
                 name.startswith("_") and name != LSN_COL
             ):
@@ -1516,7 +1509,30 @@ def _stat_parquet_file(path: str) -> dict:
     if rows and DELETED_COL in pf.schema_arrow.names:
         col = pf.read(columns=[DELETED_COL]).column(DELETED_COL)
         deleted = int(pc.sum(pc.cast(pc.fill_null(col, False), "int64")).as_py() or 0)
-    return {"rows": rows, "deleted": deleted, "zones": zones, "nostat": sorted(nostat)}
+    return {"rows": rows, "deleted": deleted, "lsn_nulls": lsn_nulls, "zones": zones, "nostat": sorted(nostat)}
+
+
+def _refuse_invisible_lsns(file_stats: list[dict], wm: int | None) -> None:
+    """Raise unless every written row carries an ``_lsn`` above ``wm`` —
+    the rows ``read_changes`` can surface. Judged from footer stats: the
+    NULL count, and the ``_lsn`` zone minimum."""
+    lsn_nulls = sum(s["lsn_nulls"] for s in file_stats)
+    if lsn_nulls:
+        raise ValueError(
+            f"append with _lsn: {lsn_nulls} null-_lsn row(s) would never "
+            "surface in read_changes; supply non-null LSNs or drop the _lsn "
+            "column (the version is then recorded bulk-blind)"
+        )
+    if wm is None:
+        return
+    mn = min((s["zones"][LSN_COL][0] for s in file_stats if LSN_COL in s["zones"]), default=None)
+    if mn is not None and int(mn) <= int(wm):
+        raise ValueError(
+            f"append with _lsn: min(_lsn)={mn} <= lsn_watermark={wm}; "
+            "read_changes filters _lsn > watermark, so these rows would be "
+            "invisible to every changelog window. Supply LSNs above the "
+            "watermark or drop the _lsn column"
+        )
 
 
 def _combine_file_stats(file_stats: list[dict]) -> dict:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrays import dot, to_double_array
+from ..plans import gates
 from ..plans.barriers import opaque
 from ..plans.ckpt import materialize
 
@@ -391,7 +392,6 @@ def embedding_near_dup_pairs(
     n_bits: int | None = None,
     n_tables: int | None = None,
     recall_target: float = 0.9,
-    lut_threshold_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, sim ≥ threshold).
 
@@ -440,8 +440,6 @@ def embedding_near_dup_pairs(
     if method not in ("lsh", "blocked"):
         raise ValueError(f"unknown method {method!r} (lsh|blocked)")
     if method == "lsh":
-        from .dedup_text import _small_relation
-
         if n_bits is None:
             n_bits = 4
         if n_tables is None:
@@ -460,7 +458,7 @@ def embedding_near_dup_pairs(
             ka.join(kb, (F.col("ka._tb") == F.col("kb._tb")) & (F.col("ka._id") < F.col("kb._id")))
             .select(F.col("ka._id").alias("id_a"), F.col("kb._id").alias("id_b"))
         )
-        if _small_relation(df, lut_threshold_bytes):
+        if gates.small_bytes(df, "near_dup_kernel"):
             # Small-corpus pair path: group the exploded index by
             # (table, bucket) and generate + score + threshold-filter each
             # bucket's pairs INSIDE one vectorized kernel — the candidate
@@ -472,11 +470,11 @@ def embedding_near_dup_pairs(
             # pair; the kernel keeps raw sims ≥ threshold − 1e-6 (2× the
             # max 6-dp rounding perturbation) and the exact rounded filter
             # below decides membership, so the emitted set is identical to
-            # the join-verify path's. Gated by the same plan-stats probe
-            # as the dedup broadcast hints; pairs are scored in bounded
-            # slabs (:func:`_pair_slabs`), and above the gate — the 100-TB
-            # case — the equi-join + pair verify below keeps the work
-            # spread across the cluster.
+            # the join-verify path's. Gated by the ``near_dup_kernel``
+            # size gate; pairs are scored in bounded slabs
+            # (:func:`_pair_slabs`), and above the gate — the 100-TB case —
+            # the equi-join + pair verify below keeps the work spread
+            # across the cluster.
             import numpy as np
             from pyspark.sql import types as T
 
@@ -766,7 +764,6 @@ def ivf_train_centroids(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    driver_threshold_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Offline spherical k-means training for the IVF index — the
     quality upgrade over :func:`ivf_centroid_array`'s smallest-id seeding,
@@ -777,12 +774,12 @@ def ivf_train_centroids(
     :func:`ivf_assign`, then INT64-quantized cluster sums) followed by one
     :func:`_lloyd_update` reduce. The step runs in one of two places:
 
-    * **driver** — when Catalyst's plan-size estimate says the training
-      corpus fits comfortably on the driver (the plan-stats/file-size probe
-      the dedup broadcast hints use, threshold ``driver_threshold_bytes``),
-      the vectors are collected ONCE and all ``n_iter`` iterations run
-      locally: one job instead of ``n_iter`` (Arrow scan + collect) pairs.
-    * **distributed** — above the threshold (the 100-TB case) each
+    * **driver** — when the ``ivf_driver_train`` size gate
+      (:mod:`geopetl_spark.plans.gates`) says the training corpus fits
+      comfortably on the driver, the vectors are collected ONCE and all
+      ``n_iter`` iterations run locally: one job instead of ``n_iter``
+      (Arrow scan + collect) pairs.
+    * **distributed** — above the gate's limit (the 100-TB case) each
       iteration is ONE Arrow pass emitting one (centroid, count, sum) row
       per batch (the map-side combine; the corpus never shuffles) and a
       driver reduce over k·n_batches tiny rows.
@@ -804,13 +801,11 @@ def ivf_train_centroids(
     import numpy as np
     from pyspark.sql import types as T
 
-    from .dedup_text import _small_relation
-
     seed_ids, cmat = _seed_centroids(corpus, n_centroids, id_col, vec_col)
     if not seed_ids:
         raise ValueError("cannot train centroids on an empty corpus")
 
-    if _small_relation(corpus, driver_threshold_bytes):
+    if gates.small_bytes(corpus, "ivf_driver_train"):
         rows = corpus.select(F.col(vec_col).alias("_v")).collect()
         u = _np_unit(np.array([np.asarray(r["_v"], dtype=np.float64) for r in rows]))
         for _ in range(n_iter):

@@ -60,6 +60,8 @@ import tempfile
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans import gates
+
 __all__ = ["dup_components", "component_stats"]
 
 
@@ -92,17 +94,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
     hub = mins.select("src", F.col("_m").alias("dst"))
     return rewired.union(hub).distinct()
-
-
-# Below this many (raw) pairs the star alternation's per-round distributed
-# jobs cost more than simply solving the graph on the driver: collect the
-# checkpointed edge list, run union-find (O(E α(E)) — microseconds per edge),
-# and ship the labels back. The same economics as a broadcast join (the guide
-# §3.1 small-side collect), with the same safety: the decision is made AFTER
-# the pair chain is materialized, against its EXACT row count, so a 100-TB
-# pair graph always takes the distributed path. Overridable per call and via
-# env for ops tuning.
-_DRIVER_MAX_EDGES = int(os.environ.get("GEOPETL_COMPONENTS_DRIVER_MAX_EDGES", "1000000"))
 
 
 def _driver_union_find(rows) -> dict:
@@ -152,19 +143,20 @@ def dup_components(
     max_iter: int = 25,
     work_dir: str | None = None,
     stats: dict | None = None,
-    driver_max_edges: int | None = None,
 ) -> DataFrame:
     """Label every node of the undirected pair graph with its component id
     (the MINIMUM node id in the component — deterministic and stable under
     pair-order changes). Returns ``(doc_id, component_id)``, persisted —
     see the module docstring's lifetime contract.
 
-    Graphs whose materialized pair count is at most ``driver_max_edges``
-    (default ``$GEOPETL_COMPONENTS_DRIVER_MAX_EDGES`` = 1M; pass 0 to force
-    the distributed path) are solved with driver-side union-find instead of
-    the distributed star alternation — a bounded collect with broadcast-join
-    economics that replaces ~4 Spark jobs PER ROUND with one, measured
-    2.5→0.6 s on the sf0.1 near-dedup graphs. Labels are bit-identical
+    Below the ``components_driver_edges`` count gate
+    (:mod:`geopetl_spark.plans.gates`) the graph is solved with driver-side
+    union-find instead of the distributed star alternation — a bounded
+    collect with broadcast-join economics that replaces ~4 Spark jobs PER
+    ROUND with one, measured 2.5→0.6 s on the sf0.1 near-dedup graphs
+    (O(E α(E)), microseconds per edge). The gate judges the EXACT row count
+    of the materialized pair chain, so a 100-TB pair graph always takes the
+    distributed path. Labels are bit-identical
     (``tests/test_components.py::test_driver_and_distributed_paths_agree``).
 
     ``stats`` (optional dict) receives ``{"rounds": k}`` — the number of
@@ -177,8 +169,6 @@ def dup_components(
     work = work_dir or tempfile.mkdtemp(prefix="geopetl_components_")
     if work_dir is None:
         atexit.register(shutil.rmtree, work, True)
-    if driver_max_edges is None:
-        driver_max_edges = _DRIVER_MAX_EDGES
 
     def _ckpt(df: DataFrame, name: str) -> tuple[DataFrame, int]:
         path = os.path.join(work, name)
@@ -203,7 +193,7 @@ def dup_components(
     a, b = F.col(id_a), F.col(id_b)
     raw, n_raw = _ckpt(pairs.select(a.alias("_pa"), b.alias("_pb")), "pairs")
 
-    if n_raw <= driver_max_edges:
+    if gates.small_count(n_raw, "components_driver_edges"):
         from pyspark.sql import types as T
 
         labels = _driver_union_find(raw.collect())

@@ -3,14 +3,12 @@ SimHash. The training-data-pipeline extension of the engine (SURVEY §2.7 gap
 fill) — all pure DataFrame compositions, no UDFs, designed to scale:
 
 * exact dedup      — one hash-groupBy (map-side combinable);
-* n-gram Jaccard   — inverted-index self-join on shingles (never a cross
-                     join) with a document-frequency cap: a shingle present
-                     in f docs emits O(f²) candidate rows, so shingles with
-                     df above ``max_shingle_df`` are dropped from candidate
-                     generation (they carry ~no signal for high-Jaccard
-                     decisions); Jaccard itself is then computed EXACTLY on
-                     the full per-doc shingle sets, so the cap affects only
-                     recall of pairs whose every shared shingle is frequent.
+* n-gram Jaccard   — inverted-index self-join on each doc's rarest-first
+                     shingle PREFIX (never a cross join; lossless prefix
+                     filtering, so a shingle present in f docs no longer
+                     emits O(f²) candidate rows), optionally capped by
+                     ``max_shingle_df``; Jaccard itself is then computed
+                     EXACTLY on the full per-doc shingle sets.
 * MinHash-LSH      — shingle → k minhashes → b bands → band-bucket equi-join;
                      exact Jaccard computed for the LSH candidates ONLY
                      (set-intersect per candidate pair — the quadratic
@@ -28,15 +26,12 @@ trip. Each operator is mirrored by an ANSI-SQL oracle in __spark_entry__.
 
 from __future__ import annotations
 
-import os
-import warnings
-from urllib.parse import urlparse
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import word_ngrams
 from ..functions.text import word_hash
+from ..plans import gates
 from ..plans.ckpt import materialize
 
 # LSH parameters: k = bands * rows_per_band minhashes.
@@ -81,76 +76,13 @@ def _shingles(docs: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     return ng.select("_id", F.explode(F.array_distinct(F.col("_ngrams"))).alias("shingle"))
 
 
-def _shingle_sets(sh: DataFrame) -> DataFrame:
-    """Per-doc full shingle set (array) + its size. Bounded by doc length —
-    the verify side's join payload, never the pair space."""
-    return sh.groupBy("_id").agg(
-        F.collect_list("shingle").alias("_set"), F.count("*").alias("n_sh")
-    )
-
-
-def _plan_stats_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate, via the JVM bridge. This is
-    PRIVATE Spark API (`_jdf`, stable across 3.x-4.x but unversioned):
-    isolated here so a Spark upgrade that moves it degrades to the public
-    fallback in :func:`_small_relation` instead of silently changing join
-    strategies. Returns None when unavailable."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString())
-    except Exception:
-        return None
-
-
-def _small_relation(df: DataFrame, threshold_bytes: int) -> bool:
-    """Is this relation provably small enough to broadcast? — the
-    broadcast-hint decision used by the dedup joins (no job either way).
-
-    Primary probe: Catalyst plan statistics (:func:`_plan_stats_size_bytes`,
-    accounts for filters/projections). Public-API fallback when the private
-    bridge is gone: sum of the plan's input-file sizes (``df.inputFiles()``)
-    — on-disk compressed bytes, an UNDERestimate of in-memory size, so the
-    fallback threshold is tightened 4× (parquet's typical compression
-    ratio). Conservatively False when neither probe answers (with a loud
-    one-time warning), so at real corpus scale — or on a probe-less Spark —
-    the hints turn themselves off rather than forcing a broadcast."""
-    sz = _plan_stats_size_bytes(df)
-    if sz is not None:
-        return sz <= threshold_bytes
-    try:
-        files = df.inputFiles()
-        if not files:
-            return False
-        total = 0
-        for f in files:
-            p = urlparse(f).path or f
-            total += os.path.getsize(p)
-            if total > threshold_bytes // 4:
-                return False
-        return True
-    except Exception:
-        global _PROBE_WARNED
-        if not _PROBE_WARNED:
-            _PROBE_WARNED = True
-            warnings.warn(
-                "broadcast-size probes unavailable (Catalyst plan stats AND "
-                "inputFiles both failed); dedup broadcast hints disabled",
-                stacklevel=2,
-            )
-        return False
-
-
-_PROBE_WARNED = False
-
-
-def _verify_pairs(
-    candidates: DataFrame, sets: DataFrame, threshold: float, broadcast_candidates: bool = False
-) -> DataFrame:
+def _verify_pairs(candidates: DataFrame, sets: DataFrame, threshold: float, broadcast: bool) -> DataFrame:
     """Exact Jaccard for candidate pairs ONLY: join each side to its full
     shingle set and set-intersect per pair. Cost ∝ |candidates|·doc_size,
     independent of the corpus-wide shingle-pair space. A broadcast hint on
     the (id-pair-only) candidate side keeps the heavy shingle-set relation
     from being exchanged twice — right whenever candidates fit in memory."""
-    if broadcast_candidates:
+    if broadcast:
         candidates = F.broadcast(candidates)
     sa = sets.select(F.col("_id").alias("id_a"), F.col("_set").alias("_sa"), F.col("n_sh").alias("n_a"))
     sb = sets.select(F.col("_id").alias("id_b"), F.col("_set").alias("_sb"), F.col("n_sh").alias("n_b"))
@@ -174,9 +106,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_df: int | None = None,
-    prefix_filter: bool = True,
-    broadcast_dfreq: bool | str = "auto",
-    broadcast_threshold_bytes: int = 128 << 20,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index join.
 
@@ -204,67 +133,55 @@ def ngram_jaccard_pairs(
     (distinct shingles per doc), consumed by four differently-keyed joins
     that would otherwise each re-run the full explode + dfreq pipeline.
 
-    ``broadcast_dfreq`` hints the df-table side of the prefix join as a
-    broadcast: the exploded shingle set then needs NO by-shingle exchange
-    (its dominant local cost). The shingle vocabulary is bounded by the raw
-    text volume, so ``'auto'`` (default) broadcasts exactly when the DOCS
-    relation's Catalyst size estimate is under ``broadcast_threshold_bytes``
-    (128 MB) — read from plan statistics, no extra job — and turns itself
-    off at real corpus scale, where the vocabulary must stay partitioned.
+    The df-table side of the prefix join and the candidate side of the
+    verify join are broadcast-hinted when the docs relation is small (the
+    ``ngram_broadcast`` size gate, :mod:`geopetl_spark.plans.gates`): the
+    exploded shingle set then needs NO by-shingle exchange (its dominant
+    local cost). The shingle vocabulary is bounded by the raw text volume,
+    so the hint turns itself off at real corpus scale, where the vocabulary
+    must stay partitioned.
     """
     sh = _shingles(docs, text_col, id_col, n)
-    index = sh
-    if broadcast_dfreq == "auto":
-        broadcast_dfreq = _small_relation(docs, broadcast_threshold_bytes)
-    sets = None
-    if prefix_filter:
-        # ONE df aggregation serves both the prefix order and the optional
-        # hot-shingle cap; the join reuses dfreq's by-shingle exchange. The
-        # per-doc prefix is one groupBy (sort_array + slice) instead of two
-        # window evaluations — same (df asc, shingle asc) order, same
-        # |prefix| = sz - ceil(t*sz) + 1 bound over the FULL set size.
-        dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-        if broadcast_dfreq:
-            dfreq = F.broadcast(dfreq)
-        # Materialize the per-doc (df, shingle) lists ONCE (guide §3.3): the
-        # four consumers below — index side a, index side b, verify sets sa,
-        # verify sets sb — sit behind differently-keyed/broadcast joins, so
-        # ReuseExchange never fires and the whole corpus pipeline (scan →
-        # n-gram explode → dfreq join → sort-aggregate) would run 4× (and
-        # its dfreq subtree 8×; confirmed in the r6 physical plan). The
-        # checkpoint is bounded by the per-doc DISTINCT shingle sets (≈ n×
-        # the raw text — corpus-shaped, never the pair space) and written to
-        # process-temp disk, not pinned executor memory; one columnar write
-        # + 4 cheap scans replaces 3 full re-evaluations at any scale.
-        per_doc = materialize(
-            sh.join(dfreq, "shingle")
-            .groupBy("_id")
-            .agg(F.array_sort(F.collect_list(F.struct(F.col("_df"), F.col("shingle")))).alias("_lst")),
-            "ngram_perdoc",
-        )
-        sz = F.size(F.col("_lst"))
-        plen = sz - F.ceil(F.lit(float(threshold)) * sz) + F.lit(1)
-        index = per_doc.select("_id", F.explode(F.slice(F.col("_lst"), F.lit(1), plen)).alias("_e"))
-        if max_shingle_df is not None:
-            index = index.filter(F.col("_e._df") <= max_shingle_df)
-        index = index.select("_id", F.col("_e.shingle").alias("shingle"))
-        # the verify side's full shingle sets come from the SAME per_doc
-        # aggregation (its by-_id exchange is reused by AQE), not a second
-        # explode + groupBy over the corpus — array order is irrelevant to
-        # array_intersect, values unchanged
-        sets = per_doc.select(
-            "_id",
-            F.transform(F.col("_lst"), lambda e: e["shingle"]).alias("_set"),
-            F.size(F.col("_lst")).alias("n_sh"),
-        )
-    elif max_shingle_df is not None:
-        keep = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("_cnt"))
-            .filter(F.col("_cnt") <= max_shingle_df)
-            .select("shingle")
-        )
-        index = index.join(keep, "shingle").select("_id", "shingle")
+    broadcast = gates.small_bytes(docs, "ngram_broadcast")
+    # ONE df aggregation serves both the prefix order and the optional
+    # hot-shingle cap; the join reuses dfreq's by-shingle exchange. The
+    # per-doc prefix is one groupBy (sort_array + slice) instead of two
+    # window evaluations — same (df asc, shingle asc) order, same
+    # |prefix| = sz - ceil(t*sz) + 1 bound over the FULL set size.
+    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
+    if broadcast:
+        dfreq = F.broadcast(dfreq)
+    # Materialize the per-doc (df, shingle) lists ONCE (guide §3.3): the
+    # four consumers below — index side a, index side b, verify sets sa,
+    # verify sets sb — sit behind differently-keyed/broadcast joins, so
+    # ReuseExchange never fires and the whole corpus pipeline (scan →
+    # n-gram explode → dfreq join → sort-aggregate) would run 4× (and
+    # its dfreq subtree 8×; confirmed in the r6 physical plan). The
+    # checkpoint is bounded by the per-doc DISTINCT shingle sets (≈ n×
+    # the raw text — corpus-shaped, never the pair space) and written to
+    # process-temp disk, not pinned executor memory; one columnar write
+    # + 4 cheap scans replaces 3 full re-evaluations at any scale.
+    per_doc = materialize(
+        sh.join(dfreq, "shingle")
+        .groupBy("_id")
+        .agg(F.array_sort(F.collect_list(F.struct(F.col("_df"), F.col("shingle")))).alias("_lst")),
+        "ngram_perdoc",
+    )
+    sz = F.size(F.col("_lst"))
+    plen = sz - F.ceil(F.lit(float(threshold)) * sz) + F.lit(1)
+    index = per_doc.select("_id", F.explode(F.slice(F.col("_lst"), F.lit(1), plen)).alias("_e"))
+    if max_shingle_df is not None:
+        index = index.filter(F.col("_e._df") <= max_shingle_df)
+    index = index.select("_id", F.col("_e.shingle").alias("shingle"))
+    # the verify side's full shingle sets come from the SAME per_doc
+    # aggregation (its by-_id exchange is reused by AQE), not a second
+    # explode + groupBy over the corpus — array order is irrelevant to
+    # array_intersect, values unchanged
+    sets = per_doc.select(
+        "_id",
+        F.transform(F.col("_lst"), lambda e: e["shingle"]).alias("_set"),
+        F.size(F.col("_lst")).alias("n_sh"),
+    )
     a = index.alias("a")
     b = index.alias("b")
     candidates = (
@@ -272,12 +189,7 @@ def ngram_jaccard_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    return _verify_pairs(
-        candidates,
-        sets if sets is not None else _shingle_sets(sh),
-        threshold,
-        broadcast_candidates=bool(broadcast_dfreq),
-    )
+    return _verify_pairs(candidates, sets, threshold, broadcast)
 
 
 def _minhash_sig_cols(n_hashes: int):
@@ -298,8 +210,6 @@ def minhash_lsh_pairs(
     rows_per_band: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_candidates: bool | str = "auto",
-    broadcast_threshold_bytes: int = 128 << 20,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup candidate generation, then exact-Jaccard
     verification of candidates only.
@@ -309,11 +219,10 @@ def minhash_lsh_pairs(
     emitted after exact verification — the verification is a per-candidate
     set intersection against the full shingle sets, so at 100 TB the cost is
     |candidates|·doc_size; the quadratic shingle-pair space is never joined.
+    The candidate side of the verify join is broadcast-hinted when the docs
+    relation is small (small corpus => small candidate set; the
+    ``minhash_broadcast`` size gate).
     """
-    if broadcast_candidates == "auto":
-        # small corpus => small candidate set: same plan-stats heuristic as
-        # ngram_jaccard_pairs' dfreq broadcast
-        broadcast_candidates = _small_relation(docs, broadcast_threshold_bytes)
     k = bands * rows_per_band
     sh = _shingles(docs, text_col, id_col, n)
     hashed = sh.withColumn(
@@ -361,9 +270,7 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    return _verify_pairs(
-        candidates, sets, threshold, broadcast_candidates=bool(broadcast_candidates)
-    )
+    return _verify_pairs(candidates, sets, threshold, gates.small_bytes(docs, "minhash_broadcast"))
 
 
 # ---------------------------------------------------------------------------
@@ -457,7 +364,6 @@ def contaminated_doc_ids(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_benchmark: bool | None = None,
 ) -> DataFrame:
     """Benchmark decontamination — the eval-leakage guard every LLM data
     pipeline runs before training: flag every training doc sharing at
@@ -467,8 +373,8 @@ def contaminated_doc_ids(
     against a 100-TB corpus) and the corpus joins them with ONE
     shingle-key LEFT-SEMI equi-join — the corpus is touched once, no pair
     space, no threshold math. The benchmark side broadcast-hints itself
-    via the same plan-stats/file-size probe as the dedup joins (auto-OFF
-    if the "benchmark" is actually large — the safe polarity). ``n=8``
+    through the ``decontaminate_broadcast`` size gate (off if the
+    "benchmark" is actually large — the safe polarity). ``n=8``
     default matches common decontamination practice (wide shingles ≈
     verbatim leakage); lower ``n`` is aggressive/fuzzier.
 
@@ -477,15 +383,10 @@ def contaminated_doc_ids(
     SURVEY §2.7.
     """
     bench_sh = _shingles(benchmark, text_col, id_col, n).select("shingle").distinct()
-    if broadcast_benchmark is None:
-        # what broadcasts is the EXPLODED shingle relation, ~n× the raw
-        # benchmark text (every word starts an n-word shingle), so the
-        # size probe runs against a threshold shrunk by n — auto-off
-        # before the broadcast side can approach unsafe sizes
-        broadcast_benchmark = _small_relation(
-            benchmark, (64 * 1024 * 1024) // max(n, 1)
-        )
-    if broadcast_benchmark:
+    # what broadcasts is the EXPLODED shingle relation, ~n× the raw
+    # benchmark text (every word starts an n-word shingle), so the gate
+    # weighs the benchmark at n× its size
+    if gates.small_bytes(benchmark, "decontaminate_broadcast", scale=max(n, 1)):
         bench_sh = F.broadcast(bench_sh)
     doc_sh = _shingles(docs, text_col, id_col, n)
     return (

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import word_hash
+from ..plans import gates
 
 __all__ = ["hash_bucket", "split_by_hash", "deterministic_sample", "stratified_sample", "pack_sequences"]
 
@@ -119,12 +120,6 @@ def deterministic_sample(df: DataFrame, id_col: str, fraction: float) -> DataFra
     return df.filter(hash_bucket(F.col(id_col)) < F.lit(cutoff))
 
 
-# above this many named groups the chained CASE WHEN plan (one branch per
-# group, evaluated per row) gives way to a broadcast join against a tiny
-# fractions table — O(1) plan size however large the mixture config grows
-_STRATIFY_JOIN_THRESHOLD = 64
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -141,9 +136,10 @@ def stratified_sample(
 
     Two physically different plans, identical membership:
 
-    * few named groups (≤ ``_STRATIFY_JOIN_THRESHOLD``): a chained
-      ``CASE WHEN`` cutoff — a pure per-row projection + filter, no
-      shuffle, no second relation in the plan;
+    * few named groups (the ``stratify_case_groups`` count gate,
+      :mod:`geopetl_spark.plans.gates`): a chained ``CASE WHEN`` cutoff —
+      a pure per-row projection + filter, no shuffle, no second relation
+      in the plan;
     * many groups (thousands of sources in a production mixture): a
       **broadcast left join** against a (group, cutoff) literal table —
       the per-row work stays O(1) hash-probe instead of O(groups) branch
@@ -163,7 +159,7 @@ def stratified_sample(
     # join-time casts that can diverge from the CASE path's literal
     # equality semantics (advisor r6), so other key types keep the CASE
     # plan at any group count.
-    if len(fractions) <= _STRATIFY_JOIN_THRESHOLD or not isinstance(
+    if gates.small_count(len(fractions), "stratify_case_groups") or not isinstance(
         df.schema[group_col].dataType, T.StringType
     ):
         cutoff = F.lit(default_cut)

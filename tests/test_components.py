@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, ".")
 from geopetl_spark.operators.components import component_stats, dup_components  # noqa: E402
+from geopetl_spark.plans import gates  # noqa: E402
 
 
 def _pairs(spark, rows):
@@ -47,29 +48,27 @@ def test_deterministic_under_pair_order(spark):
     assert ra == rb
 
 
-def test_max_iter_guard_raises_not_partial(spark):
-    # driver_max_edges=0 pins the DISTRIBUTED path (the guard under test)
+def test_max_iter_guard_raises_not_partial(spark, monkeypatch):
+    # a zero driver limit pins the DISTRIBUTED path (the guard under test)
+    monkeypatch.setitem(gates.LIMITS, "components_driver_edges", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dup_components(
-            _pairs(spark, [(i, i + 1) for i in range(30)]), max_iter=1, driver_max_edges=0
-        )
+        dup_components(_pairs(spark, [(i, i + 1) for i in range(30)]), max_iter=1)
 
 
-def test_deep_chain_converges_in_log_rounds(spark):
+def test_deep_chain_converges_in_log_rounds(spark, monkeypatch):
     # a 199-hop duplicate chain (templated-page near-dup chains at web scale):
     # star alternation converges in O(log n) rounds, far under the default
     # budget — the scenario that could only raise under min-label propagation
     stats = {}
-    comps = dup_components(
-        _pairs(spark, [(i, i + 1) for i in range(199)]), stats=stats, driver_max_edges=0
-    )
+    monkeypatch.setitem(gates.LIMITS, "components_driver_edges", 0)
+    comps = dup_components(_pairs(spark, [(i, i + 1) for i in range(199)]), stats=stats)
     got = {r.doc_id: r.component_id for r in comps.collect()}
     comps.unpersist(False)
     assert set(got.values()) == {0} and len(got) == 200
     assert stats["rounds"] <= 12, stats
 
 
-def test_driver_and_distributed_paths_agree(spark):
+def test_driver_and_distributed_paths_agree(spark, monkeypatch):
     # the r7 small-graph driver union-find must label BIT-identically to the
     # star alternation on an adversarial mix: chains, stars, self-loops,
     # isolated pairs, reversed/duplicated edges
@@ -83,7 +82,8 @@ def test_driver_and_distributed_paths_agree(spark):
     edges += [(b, a) for a, b in edges[:20]] + edges[:10]     # reversed + dups
     stats_d, stats_s = {}, {}
     drv = dup_components(_pairs(spark, edges), stats=stats_d)  # default: driver path
-    dist = dup_components(_pairs(spark, edges), stats=stats_s, driver_max_edges=0)
+    monkeypatch.setitem(gates.LIMITS, "components_driver_edges", 0)
+    dist = dup_components(_pairs(spark, edges), stats=stats_s)
     got_d = sorted((r.doc_id, r.component_id) for r in drv.collect())
     got_s = sorted((r.doc_id, r.component_id) for r in dist.collect())
     drv.unpersist(False)

@@ -415,3 +415,42 @@ def test_lsn_append_rejects_null_and_stale_lsns(spark, tmp_path):
 
     # neither rejected attempt committed a version or wrote data
     assert t.manifest()["version"] == v0
+
+
+def test_lsn_append_is_checked_from_what_was_written(spark, tmp_path):
+    """The _lsn check judges the written files, not a second evaluation of
+    the input: an _lsn whose value changes between evaluations (a UDF that
+    answers a row's first call with a fresh LSN and every later call with
+    NULL) either commits only visible LSNs or commits nothing. A refused
+    append leaves no data dir behind."""
+    t = LakeTable(spark, str(tmp_path / "lake")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    ev = generate_cdc_events(spark, 400, n_keys=40, events_per_epoch=200)
+    t.merge(ev.filter(F.col("epoch") == 0), epoch_id=0)
+    v0, wm = t.manifest()["version"], t.manifest()["lsn_watermark"]
+    marks = tmp_path / "evaluated"
+    marks.mkdir()
+
+    def first_call_lsn(doc_id):
+        mark = marks / doc_id
+        if mark.exists():
+            return None
+        mark.touch()
+        return wm + 1 + int(doc_id.split("-")[1])
+
+    lsn = F.udf(first_call_lsn, "long").asNondeterministic()
+    rows = spark.createDataFrame([("ud-%d" % i, [i], 1, "backfill") for i in range(20)], DOC_SCHEMA)
+    try:
+        t.write(rows.withColumn("_lsn", lsn("doc_id")), mode="append")
+    except ValueError:
+        assert t.manifest()["version"] == v0
+    else:
+        got = t.read(include_system=True).filter(F.col("doc_id").startswith("ud-")).collect()
+        assert len(got) == 20
+        assert all(r["_lsn"] is not None and r["_lsn"] > wm for r in got)
+
+    data = tmp_path / "lake" / "data"
+    before = sorted(os.listdir(data))
+    nulls = rows.withColumn("_lsn", F.lit(None).cast("long"))
+    with pytest.raises(ValueError, match="null-_lsn"):
+        t.write(nulls, mode="append")
+    assert sorted(os.listdir(data)) == before

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, ".")
 from geopetl_spark.operators import ann as ANN  # noqa: E402
 from geopetl_spark.operators import dedup_text as DD  # noqa: E402
+from geopetl_spark.plans import gates  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -23,7 +24,7 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_default_plan_is_bucket_keyed_not_block_fanout(spark, emb):
+def test_default_plan_is_bucket_keyed_not_block_fanout(spark, emb, monkeypatch):
     """The DEFAULT path must derive candidates from the (table, bucket) LSH
     key — NOT the B(B+1)/2 block-pair fan-out of the exact mode (which
     replicates every vector B times regardless of data). r7: below the
@@ -37,7 +38,8 @@ def test_default_plan_is_bucket_keyed_not_block_fanout(spark, emb):
     assert "BroadcastNestedLoopJoin" not in plan
     # large-corpus path (gate forced off): the bucket EQUI-JOIN, with no
     # per-group kernel
-    big = _plan(ANN.embedding_near_dup_pairs(emb, threshold=0.4, lut_threshold_bytes=0))
+    monkeypatch.setitem(gates.LIMITS, "near_dup_kernel", 0)
+    big = _plan(ANN.embedding_near_dup_pairs(emb, threshold=0.4))
     assert "_tb" in big and "FlatMapGroupsInPandas" not in big
     assert "CartesianProduct" not in big
     # the exact mode (opt-in) still uses the block-pair fan-out
@@ -45,7 +47,7 @@ def test_default_plan_is_bucket_keyed_not_block_fanout(spark, emb):
     assert "FlatMapGroupsInPandas" in blocked
 
 
-def test_near_dup_small_and_large_paths_agree(spark, emb):
+def test_near_dup_small_and_large_paths_agree(spark, emb, monkeypatch):
     """The r7 per-bucket kernel (small-corpus gate on) and the bucket
     equi-join + pair verify (gate off) must emit the identical pair set
     with identical 6dp similarities."""
@@ -53,11 +55,10 @@ def test_near_dup_small_and_large_paths_agree(spark, emb):
         (r.id_a, r.id_b): r.similarity
         for r in ANN.embedding_near_dup_pairs(emb, threshold=0.4).collect()
     }
+    monkeypatch.setitem(gates.LIMITS, "near_dup_kernel", 0)
     large = {
         (r.id_a, r.id_b): r.similarity
-        for r in ANN.embedding_near_dup_pairs(
-            emb, threshold=0.4, lut_threshold_bytes=0
-        ).collect()
+        for r in ANN.embedding_near_dup_pairs(emb, threshold=0.4).collect()
     }
     assert small == large and len(small) > 0
 
@@ -214,13 +215,15 @@ def test_near_dup_rejects_unknown_method(spark, emb):
         ANN.embedding_near_dup_pairs(emb, threshold=0.4, method="fold")
 
 
-def test_ngram_broadcast_hint_auto_on_small_and_off_when_forced(spark, sf_dir):
-    """Plan shape: the small-corpus auto heuristic turns the df-table join
-    into a broadcast hash join; a 1-byte threshold forces it back off."""
+def test_ngram_broadcast_hint_auto_on_small_and_off_when_forced(spark, sf_dir, monkeypatch):
+    """Plan shape: the small-corpus size gate turns the df-table join into
+    a broadcast hash join; a zero limit forces it back off."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     on = DD.ngram_jaccard_pairs(docs, threshold=0.8, n=3)
     assert "BroadcastHashJoin" in _plan(on)
-    off = DD.ngram_jaccard_pairs(docs, threshold=0.8, n=3, broadcast_dfreq=False)
+    monkeypatch.setitem(gates.LIMITS, "ngram_broadcast", 0)
+    off = DD.ngram_jaccard_pairs(docs, threshold=0.8, n=3)
+    assert "strategy=broadcast" not in off._jdf.queryExecution().optimizedPlan().toString()
     got_on = sorted((r.id_a, r.id_b, r.jaccard) for r in on.collect())
     got_off = sorted((r.id_a, r.id_b, r.jaccard) for r in off.collect())
     assert got_on == got_off and len(got_on) > 0
@@ -232,12 +235,14 @@ def test_small_relation_public_fallback(spark, sf_dir, monkeypatch):
     inputFiles() sizes — still auto-on for a small parquet relation and
     auto-off at a tiny threshold — instead of silently disabling hints."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    monkeypatch.setattr(DD, "_plan_stats_size_bytes", lambda df: None)
-    assert DD._small_relation(docs, 128 * 1024 * 1024) is True
-    assert DD._small_relation(docs, 1) is False
-    # no input files (in-memory relation) -> conservative False
     mem = spark.createDataFrame([(1,)], "x int")
-    assert DD._small_relation(mem, 128 * 1024 * 1024) is False
+    monkeypatch.setattr(gates, "_plan_stats_size_bytes", lambda df: None)
+    monkeypatch.setitem(gates.LIMITS, "ngram_broadcast", 128 * 1024 * 1024)
+    assert gates.small_bytes(docs, "ngram_broadcast") is True
+    # no input files (in-memory relation) -> conservative False
+    assert gates.small_bytes(mem, "ngram_broadcast") is False
+    monkeypatch.setitem(gates.LIMITS, "ngram_broadcast", 1)
+    assert gates.small_bytes(docs, "ngram_broadcast") is False
 
 
 def test_embed_near_dedup_stats_entry(spark, sf_dir):

@@ -12,6 +12,7 @@ from geopetl_spark.operators.sample import (  # noqa: E402
     split_by_hash,
     stratified_sample,
 )
+from geopetl_spark.plans import gates  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -70,16 +71,14 @@ def test_stratified_sample_per_group_rates(spark, ids):
 
 
 def test_stratified_sample_join_path_equivalence(spark, ids, monkeypatch):
-    """Above _STRATIFY_JOIN_THRESHOLD named groups the sampler switches to
-    a broadcast join against a fractions table; membership, schema, and
-    column order must be identical to the chained-CASE path, and the plan
-    must broadcast (never shuffle the corpus side)."""
-    import geopetl_spark.operators.sample as S
-
+    """Above the stratify_case_groups limit of named groups the sampler
+    switches to a broadcast join against a fractions table; membership,
+    schema, and column order must be identical to the chained-CASE path,
+    and the plan must broadcast (never shuffle the corpus side)."""
     grouped = ids.withColumn("src", F.concat(F.lit("g"), (F.col("doc_id") % 10).cast("string")))
     fr = {f"g{i}": (i + 1) / 20 for i in range(10)}  # g0=0.05 .. g9=0.5
     case_path = stratified_sample(grouped, "doc_id", "src", fr, default_fraction=0.1)
-    monkeypatch.setattr(S, "_STRATIFY_JOIN_THRESHOLD", 4)
+    monkeypatch.setitem(gates.LIMITS, "stratify_case_groups", 4)
     join_path = stratified_sample(grouped, "doc_id", "src", fr, default_fraction=0.1)
     assert join_path.columns == case_path.columns == grouped.columns
     a = {(r.doc_id, r.src) for r in case_path.collect()}
@@ -99,13 +98,11 @@ def test_stratified_sample_nonstring_key_and_collision(spark, ids, monkeypatch):
     threshold must keep the CASE plan (join-time casts could diverge from
     literal-equality semantics) and stay membership-identical; (b) a
     pre-existing _strat_cutoff column must not break the join path."""
-    import geopetl_spark.operators.sample as S
-
     # (a) integer group column, many named groups
     grouped = ids.withColumn("src", (F.col("doc_id") % 10).cast("int"))
     fr = {str(i): (i + 1) / 20 for i in range(10)}
     base = stratified_sample(grouped, "doc_id", "src", fr, default_fraction=0.1)
-    monkeypatch.setattr(S, "_STRATIFY_JOIN_THRESHOLD", 4)
+    monkeypatch.setitem(gates.LIMITS, "stratify_case_groups", 4)
     low = stratified_sample(grouped, "doc_id", "src", fr, default_fraction=0.1)
     assert "BroadcastHashJoin" not in low._jdf.queryExecution().executedPlan().toString()
     assert {r.doc_id for r in base.collect()} == {r.doc_id for r in low.collect()}
@@ -118,7 +115,7 @@ def test_stratified_sample_nonstring_key_and_collision(spark, ids, monkeypatch):
     fr_s = {f"g{i}": (i + 1) / 20 for i in range(10)}
     joined = stratified_sample(clash, "doc_id", "src", fr_s, default_fraction=0.1)
     assert "_strat_cutoff" in joined.columns  # the caller's column survives
-    monkeypatch.setattr(S, "_STRATIFY_JOIN_THRESHOLD", 64)
+    monkeypatch.setitem(gates.LIMITS, "stratify_case_groups", 64)
     case = stratified_sample(clash, "doc_id", "src", fr_s, default_fraction=0.1)
     assert {r.doc_id for r in joined.collect()} == {r.doc_id for r in case.collect()}
 

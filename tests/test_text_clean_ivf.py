@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, ".")
 from geopetl_spark.functions import text as TXT  # noqa: E402
 from geopetl_spark.operators import ann as ANN  # noqa: E402
+from geopetl_spark.plans import gates  # noqa: E402
 
 
 def test_normalize_text(spark):
@@ -112,12 +113,13 @@ def test_ivf_search_is_equi_join_not_cross(spark, emb):
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
-def test_trainer_driver_and_distributed_agree(spark, emb):
+def test_trainer_driver_and_distributed_agree(spark, emb, monkeypatch):
     """The small-corpus driver trainer must reproduce the distributed
     map-side-combine trainer BIT-for-bit (integer cluster sums are
     order-free; every float op is the same kernel in the same sequence)."""
     local = ANN.ivf_train_centroids(emb, n_centroids=6, n_iter=3)
-    dist = ANN.ivf_train_centroids(emb, n_centroids=6, n_iter=3, driver_threshold_bytes=0)
+    monkeypatch.setitem(gates.LIMITS, "ivf_driver_train", 0)
+    dist = ANN.ivf_train_centroids(emb, n_centroids=6, n_iter=3)
     assert local.collect() == dist.collect()
 
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
 from geopetl_spark import LakeTable  # noqa: E402
+from geopetl_spark.plans import gates  # noqa: E402
 from tests.test_cdc_engine import DOC_SCHEMA  # noqa: E402
 
 
@@ -47,7 +48,7 @@ def test_distributed_harvest_identical_to_driver_serial(table, spark, monkeypatc
     m = table.manifest()
     written = {b: list(dl) for b, dl in m["buckets"].items()}
     serial = {b: LakeTable._file_stats(dl) for b, dl in written.items()}
-    monkeypatch.setattr(LakeTable, "_HARVEST_DRIVER_MAX_FILES", 0)  # force the job path
+    monkeypatch.setitem(gates.LIMITS, "harvest_driver_files", 0)  # force the job path
     distributed = table._harvest_stats(written)
     assert distributed == serial
     # and the stats the ORIGINAL commit recorded match both (modulo the

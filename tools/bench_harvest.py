@@ -25,6 +25,7 @@ def main() -> None:
     import pyarrow.parquet as pq
 
     from geopetl_spark.lake.table import LakeTable
+    from geopetl_spark.plans import gates
     from geopetl_spark.session import get_spark
 
     spark = get_spark(app_name="bench-harvest")
@@ -57,14 +58,14 @@ def main() -> None:
             t_serial = time.perf_counter() - t0
 
             table = LakeTable(spark, os.path.join(work, f"tbl-{n_files}"))
-            saved = LakeTable._HARVEST_DRIVER_MAX_FILES
-            LakeTable._HARVEST_DRIVER_MAX_FILES = 0
+            saved = gates.LIMITS["harvest_driver_files"]
+            gates.LIMITS["harvest_driver_files"] = 0  # force the job path
             try:
                 t0 = time.perf_counter()
                 dist = table._harvest_stats(written)
                 t_dist = time.perf_counter() - t0
             finally:
-                LakeTable._HARVEST_DRIVER_MAX_FILES = saved
+                gates.LIMITS["harvest_driver_files"] = saved
             assert dist == serial, f"harvest mismatch at {n_files} files"
             print(
                 f"files={n_files:5d} buckets={n_buckets:4d} "
