@@ -139,9 +139,13 @@ def _q_top_revenue_orders(spark, sf):
         if gates.small_bytes(o, "top_revenue_prefilter")
         else li
     )
+    # exact DECIMAL sum: a double sum's rounding depends on summation
+    # order, so engines disagree on a .xx5 boundary; DOUBLE out as before
+    price = F.col("l_extendedprice").cast("decimal(15,2)")
+    disc = F.col("l_discount").cast("decimal(15,2)")
     rev = (
         li_f.groupBy("l_orderkey")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .agg(F.round(F.sum(price * (1 - disc)), 2).cast("double").alias("revenue"))
     )
     joined = (
         rev.join(bo, rev.l_orderkey == bo.o_orderkey)
@@ -1171,7 +1175,9 @@ def _oracle_sql_base() -> dict[str, str]:
         """,
         "top_revenue_orders": """
             with rev as (
-              select l_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) as revenue
+              select l_orderkey,
+                     CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                                    * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) as revenue
               from lineitem group by l_orderkey)
             select r.l_orderkey as orderkey, r.revenue, c.c_custkey as custkey
             from rev r join orders o on r.l_orderkey = o.o_orderkey

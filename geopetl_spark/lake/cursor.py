@@ -26,6 +26,8 @@ import json
 import os
 import time
 
+from ..atomic import atomic_write
+
 
 class ConsumerCursor:
     """One JSON file: ``{"version": N, "updated_at": <unix>}``."""
@@ -67,11 +69,5 @@ class ConsumerCursor:
             pass  # torn file: overwrite with good state
         if cur is not None and cur >= version:
             return
-        d = os.path.dirname(self.path) or "."
-        os.makedirs(d, exist_ok=True)
-        tmp = f"{self.path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"version": int(version), "updated_at": time.time()}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.path)
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        atomic_write(self.path, json.dumps({"version": int(version), "updated_at": time.time()}))

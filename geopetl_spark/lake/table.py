@@ -31,6 +31,13 @@ implemented on parquet + JSON manifests:
   below, state-equivalent to CoW by construction and test; (c) within-bucket
   key-range file stats would prune further at 10^10+ rows (future work —
   requires per-file min/max key tracking in the manifest).
+* **Per-dir stats** — the manifest field ``dir_stats`` holds one record
+  ``{"rows", "live", "zones"}`` per base or delta dir the manifest
+  references (column min/max from the dir's parquet footers, harvested at
+  write time). Every stats fact is derived from these records: bucket and
+  dir pruning, changelog dir pruning, the copy-on-write row count and
+  ``describe()``'s tombstones. A dir with no record (a manifest from
+  before ``dir_stats``) is unknown: it never prunes and is always read.
 * **Additive schema evolution** — the manifest schema evolves via
   :func:`geopetl_spark.schema.evolve_schema`; reads always apply the current
   manifest schema, so files written before a column existed surface NULLs
@@ -67,6 +74,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schema as schema_mod
+from ..atomic import atomic_write
 from ..operators.dedup_cdc import event_order, latest_per_key
 from ..plans import gates
 from ..sqltext import cast, quote, select_sql
@@ -174,7 +182,9 @@ class LakeTable:
         created with O_EXCL — two writers racing to publish the same next
         version see exactly one winner; the loser gets CommitConflict and
         must re-read the table and retry its operation (same contract as
-        Iceberg's atomic swap). The pointer swap after that is atomic."""
+        Iceberg's atomic swap). The manifest body and then the pointer are
+        each written by :func:`atomic_write` (fsync before the rename), so
+        after a crash the pointer names a complete manifest."""
         # Commit-time stamp for timestamp time travel.  Clamped to the
         # parent's stamp so committed_at is monotone in version even across
         # a wall-clock step backwards (Iceberg snapshot-log semantics:
@@ -187,30 +197,23 @@ class LakeTable:
             pass  # first commit: no current pointer yet
         manifest["committed_at"] = max(time.time(), parent_at)
         mpath = self._manifest_path(manifest["version"])
-        tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
         try:
-            fd = os.open(mpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            atomic_write(mpath, json.dumps(manifest), exclusive=True)
         except FileExistsError:
-            os.unlink(tmp)
             raise CommitConflict(
                 f"version {manifest['version']} was committed concurrently at {self.path}"
             ) from None
-        os.close(fd)
-        os.replace(tmp, mpath)
-        ptr_tmp = self.current_ptr + f".tmp-{uuid.uuid4().hex}"
-        with open(ptr_tmp, "w") as fh:
-            fh.write(os.path.basename(mpath))
-        os.replace(ptr_tmp, self.current_ptr)  # atomic pointer swap = commit
+        atomic_write(self.current_ptr, os.path.basename(mpath))  # pointer swap = commit
 
     def _commit(self, m: dict, summary: dict, **fields: Any) -> dict:
         """Publish the version after ``m``: ``m`` with ``fields`` replaced,
         a new snapshot id, ``m`` as parent and ``summary``. Returns
-        ``summary``."""
+        ``summary``. The per-bucket stats fields of older manifests are not
+        carried forward: they no longer describe the table once it changes,
+        and older readers treat their absence as unknown stats."""
         self._publish(
             {
-                **m,
+                **{k: v for k, v in m.items() if k not in ("bucket_stats", "delta_stats")},
                 **fields,
                 "version": m["version"] + 1,
                 "snapshot_id": uuid.uuid4().hex,
@@ -387,16 +390,11 @@ class LakeTable:
                 return False
         return True
 
-    @staticmethod
-    def _merge_zones(a: dict | None, b: dict | None) -> dict:
-        """Union of two zone maps: common columns widen; a side with
-        unknown zones (None) makes the union unknowable (empty)."""
-        if a is None or b is None:
-            return {}
-        return {
-            k: [min(a[k][0], b[k][0]), max(a[k][1], b[k][1])]
-            for k in a.keys() & b.keys()
-        }
+    @classmethod
+    def _dir_misses(cls, stats: dict, d: str, preds: list[tuple[str, str, object]]) -> bool:
+        """True when dir ``d``'s ``dir_stats`` record provably holds no row
+        matching ``preds``. A dir with no record is unknown: never a miss."""
+        return d in stats and not cls._zones_may_match(stats[d]["zones"], preds)
 
     @staticmethod
     def _advance_watermark(m: dict, wstats: dict) -> int | None:
@@ -418,33 +416,28 @@ class LakeTable:
 
     def _pruned_buckets(self, m: dict, where: str | None) -> set[str]:
         """Bucket keys that provably hold no row matching ``where`` (zone-map
-        data skipping). A bucket carrying MoR deltas prunes only when BOTH
-        its base zones AND its delta zones exclude the predicate — pruning
-        is all-or-nothing per bucket, because dropping only one side before
-        the read-time reduce could resurrect superseded state. Buckets whose
-        delta dirs predate delta-zone tracking have unknown delta zones and
-        never prune (conservative)."""
+        data skipping): a bucket prunes iff every one of its base and delta
+        dirs has a ``dir_stats`` record whose zones provably miss. Pruning
+        is all-or-nothing per bucket, because dropping only some of a
+        bucket's dirs before the read-time reduce could resurrect
+        superseded state; dropping all of them is sound, since if every
+        stored row fails the predicate so does every row the reduce keeps.
+        A dir with no record never prunes its bucket (conservative)."""
         if not where:
             return set()
         preds = self._parse_zone_preds(where)
         if not preds:
             return set()
-        stats = m.get("bucket_stats") or {}
+        stats = m.get("dir_stats") or {}
         deltas = m.get("deltas") or {}
-        dstats = m.get("delta_stats") or {}
-        out = set()
-        for b in set(m["buckets"]) | set(deltas):
-            base_zones = (stats.get(b) or {}).get("zones")
-            base_misses = not m["buckets"].get(b) or (
-                bool(base_zones) and not self._zones_may_match(base_zones, preds)
+        return {
+            b
+            for b in set(m["buckets"]) | set(deltas)
+            if all(
+                self._dir_misses(stats, d, preds)
+                for d in (*m["buckets"].get(b, []), *deltas.get(b, []))
             )
-            delta_zones = (dstats.get(b) or {}).get("zones")
-            delta_misses = not deltas.get(b) or (
-                bool(delta_zones) and not self._zones_may_match(delta_zones, preds)
-            )
-            if base_misses and delta_misses:
-                out.add(b)
-        return out
+        }
 
     def read(
         self,
@@ -464,13 +457,12 @@ class LakeTable:
         directories of requested buckets are scanned — the engine's own
         partition pruning, independent of (and additive to) parquet
         row-group stats on ``_bucket``. ``where=`` additionally applies
-        **zone-map data skipping** at two granularities: per-bucket column
-        min/max prune whole buckets a simple range/equality conjunction
-        provably cannot match, and — on tables with no MoR deltas — per-DIR
-        zones prune individual append-accumulated directories inside
-        surviving buckets (the union range is wide, the dirs narrow). The
-        filter itself always still runs — pruning only removes
-        provably-empty scans.
+        **zone-map data skipping** from the manifest's per-dir column
+        min/max (``dir_stats``): a whole bucket is skipped when every one of
+        its dirs provably misses a simple range/equality conjunction, and —
+        on tables with no MoR deltas — single dirs that provably miss are
+        skipped inside surviving buckets. The filter itself always still
+        runs — pruning only removes provably-empty scans.
 
         Merge-on-read: when the manifest carries delta dirs for the selected
         buckets, base and delta rows are unioned and reduced per key via
@@ -484,9 +476,8 @@ class LakeTable:
         m = self.manifest(version)
         skip = self._pruned_buckets(m, where)
         # per-DIR pruning within surviving buckets (Iceberg prunes per file
-        # for the same reason): an append-heavy bucket's UNION zone range is
-        # wide even when each dir is narrow. Only sound when the table holds
-        # no MoR deltas — with deltas, the read-time reduce makes rows
+        # for the same reason). Only sound when the table holds no MoR
+        # deltas — with deltas, the read-time reduce makes rows
         # interdependent (dropping a dir could change which version of a
         # key survives the max_by); without them rows are independent and a
         # dir whose zones provably miss contributes nothing to the filter.
@@ -495,19 +486,11 @@ class LakeTable:
             if where and not m.get("deltas")
             else None
         )
-        stats = m.get("bucket_stats") or {}
+        stats = m.get("dir_stats") or {}
         dirs: list[str] = []
         for b, dlist in m["buckets"].items():
             if (buckets is None or int(b) in set(buckets)) and b not in skip:
-                if preds:
-                    dz = (stats.get(b) or {}).get("dirs") or {}
-                    dirs.extend(
-                        d
-                        for d in dlist
-                        if not (dz.get(d) and not self._zones_may_match(dz[d], preds))
-                    )
-                else:
-                    dirs.extend(dlist)
+                dirs.extend(d for d in dlist if not (preds and self._dir_misses(stats, d, preds)))
         delta_dirs: list[str] = []
         for b, dlist in m.get("deltas", {}).items():
             # skip is all-or-nothing per bucket (base AND delta provably
@@ -539,22 +522,21 @@ class LakeTable:
         ``_lsn > wm``, and whether those dirs are one merge-on-read commit's
         deltas. A dir whose recorded ``_lsn`` max is at or below the
         watermark holds only rows that filter drops, so it is not read; a
-        dir with no recorded range is always read (conservative) and never
-        counts as one commit's delta."""
+        dir with no recorded range (no ``dir_stats`` record, or none for
+        ``_lsn``) is always read (conservative) and never counts as one
+        commit's delta."""
         preds = [] if wm is None else [(LSN_COL, ">", int(wm))]
+        stats = m.get("dir_stats") or {}
         out: list[str] = []
         one_commit = True
-        for is_delta, dirs_by_bucket, stats in (
-            (False, m["buckets"], m.get("bucket_stats")),
-            (True, m.get("deltas") or {}, m.get("delta_stats")),
-        ):
-            for b, dlist in dirs_by_bucket.items():
-                zones = ((stats or {}).get(b) or {}).get("dirs") or {}
+        for is_delta, dirs_by_bucket in ((False, m["buckets"]), (True, m.get("deltas") or {})):
+            for dlist in dirs_by_bucket.values():
                 for d in dlist:
-                    if zones.get(d) and not self._zones_may_match(zones[d], preds):
+                    if self._dir_misses(stats, d, preds):
                         continue
                     out.append(d)
-                    one_commit = one_commit and is_delta and bool(zones.get(d))
+                    has_lsn = LSN_COL in stats.get(d, {}).get("zones", {})
+                    one_commit = one_commit and is_delta and has_lsn
         # a commit writes one dir per bucket, all in its one snapshot dir
         one_commit = one_commit and len({os.path.dirname(d) for d in out}) <= 1
         return out, one_commit
@@ -572,8 +554,8 @@ class LakeTable:
         table schema + ``_lsn`` + ``_deleted``.
 
         Cost model: the read is O(the data the window's commits wrote), not
-        O(table) or O(history). Base and delta dirs carry their ``_lsn``
-        [min, max] in the manifest, and a dir whose max is at or below the
+        O(table) or O(history). Each base and delta dir's ``dir_stats``
+        record carries its ``_lsn`` [min, max], and a dir whose max is at or below the
         ``since_version`` watermark ``wm`` is not read, so a one-commit
         window reads that commit's dirs only. On a merge-on-read table the
         surviving rows are filtered to ``_lsn > wm`` first and only then
@@ -587,7 +569,7 @@ class LakeTable:
 
         Pruning a dir only removes rows the filter would drop, so it cannot
         change either side. A dir with no recorded range (LSN-less bulk
-        rows, or a manifest from before per-dir ranges) is always read. A ``since_version``
+        rows, or a manifest from before ``dir_stats``) is always read. A ``since_version``
         predating the first merge (``wm`` None) yields the full
         CDC-derived state. Spark lists more than 32 dirs with a parallel
         listing job, so a window over a wide bucket count (over 32 delta
@@ -764,8 +746,8 @@ class LakeTable:
     ) -> tuple[dict[str, list[str]], dict[str, dict], int, int]:
         """Write df (already carrying _bucket and _lsn) into one dir per
         bucket under the snapshot dir, sorted by ``key`` within each
-        bucket; returns (bucket->dirs map,
-        bucket->{rows,live} stats, total rows, total live).
+        bucket; returns (bucket->dirs map, the written dirs' ``dir_stats``
+        records, total rows, total live).
 
         ``_bucket`` is duplicated into a partition-dir column so bucket
         separation is physical (file pruning) while the value also stays
@@ -792,24 +774,18 @@ class LakeTable:
             if name.startswith(f"{_PART_COL}="):
                 b = name.split("=", 1)[1]
                 written[b] = [os.path.join(snapdir, name)]
-        # Per-bucket row accounting from parquet FOOTERS plus a read of only
+        # Per-dir row accounting from parquet FOOTERS plus a read of only
         # the tombstone-flag column (RLE booleans, ~KBs/file) — zero
-        # data-page rescans of what was just written (previously this was a
-        # full two-column readback job per commit; Iceberg keeps the same
+        # data-page rescans of what was just written (Iceberg keeps the same
         # stats in its manifests for the same reason). Small commits harvest
         # on the driver (no job-launch overhead); large commits fan the
         # footer reads out across executors so the commit path never
         # serializes O(files) metadata reads (see _harvest_stats).
         try:
-            stats = self._harvest_stats(written, check)
+            stats = self._harvest_stats([d for dl in written.values() for d in dl], check)
         except Exception:
             shutil.rmtree(snapdir, ignore_errors=True)
             raise
-        # each snapshot write produces exactly ONE dir per bucket, so the
-        # bucket's harvested zones are also that dir's zones — recorded
-        # per-dir for within-bucket pruning on append-accumulated buckets
-        for b, dlist in written.items():
-            stats[b]["dirs"] = {dlist[0]: stats[b]["zones"]}
         n_rows = sum(v["rows"] for v in stats.values())
         n_live = sum(v["live"] for v in stats.values())
         return written, stats, n_rows, n_live
@@ -819,19 +795,14 @@ class LakeTable:
         """(rows, live, zones) for a list of parquet dirs — the driver-serial
         reference harvest; see :func:`_stat_parquet_file` for the per-file
         extraction and :func:`_combine_file_stats` for the (order-
-        independent) merge. Kept as the small-commit path and the equality
-        reference for the distributed harvest."""
-        files = []
-        for d in dirs:
-            for fn in sorted(os.listdir(d)):
-                if not fn.startswith((".", "_")) and fn.endswith(".parquet"):
-                    files.append(os.path.join(d, fn))
-        return _combine_file_stats([_stat_parquet_file(p) for p in files])
+        independent) merge. Kept as the equality reference for the
+        harvest."""
+        return _combine_file_stats([_stat_parquet_file(p) for d in dirs for p in _parquet_files(d)])
 
     def _harvest_stats(
-        self, written: dict[str, list[str]], check: Callable[[list[dict]], None] | None = None
+        self, dirs: list[str], check: Callable[[list[dict]], None] | None = None
     ) -> dict[str, dict]:
-        """Bucket → (rows, live, zones) for a just-written snapshot.
+        """Dir → (rows, live, zones) for a just-written snapshot's dirs.
 
         The footer reads are the commit path's only O(files) work; at real
         epoch sizes (10³–10⁴ files across thousands of buckets) a serial
@@ -839,32 +810,27 @@ class LakeTable:
         ``harvest_driver_files`` gate the per-file extraction fans out as
         one tiny Spark job over the file list (executors read footers in
         parallel, return one small stats dict per file — manifest-style
-        metadata, never data), and only the per-bucket combine runs on the
+        metadata, never data), and only the per-dir combine runs on the
         driver. The combine is order-independent (sums + min/max widening +
         no-stats-column union), so both paths are byte-identical — asserted
         by ``tests/test_zone_maps.py``. ``check`` sees the per-file stats."""
-        pairs: list[tuple[str, str]] = []
-        for b, dirs in written.items():
-            for d in dirs:
-                for fn in sorted(os.listdir(d)):
-                    if not fn.startswith((".", "_")) and fn.endswith(".parquet"):
-                        pairs.append((b, os.path.join(d, fn)))
+        pairs = [(d, p) for d in dirs for p in _parquet_files(d)]
         if gates.small_count(len(pairs), "harvest_driver_files"):
-            per_file = [(b, _stat_parquet_file(p)) for b, p in pairs]
+            per_file = [(d, _stat_parquet_file(p)) for d, p in pairs]
         else:
             sc = self.spark.sparkContext
             n_slices = max(1, min(len(pairs) // 8, sc.defaultParallelism * 4))
             per_file = (
                 sc.parallelize(pairs, n_slices)
-                .map(lambda bp: (bp[0], _stat_parquet_file(bp[1])))
+                .map(lambda dp: (dp[0], _stat_parquet_file(dp[1])))
                 .collect()
             )
         if check is not None:
             check([st for _, st in per_file])
-        grouped: dict[str, list[dict]] = {b: [] for b in written}
-        for b, st in per_file:
-            grouped[b].append(st)
-        return {b: _combine_file_stats(sts) for b, sts in grouped.items()}
+        grouped: dict[str, list[dict]] = {d: [] for d in dirs}
+        for d, st in per_file:
+            grouped[d].append(st)
+        return {d: _combine_file_stats(sts) for d, sts in grouped.items()}
 
     def write(
         self,
@@ -927,32 +893,13 @@ class LakeTable:
 
         if mode == "overwrite":
             buckets = written
-            bucket_stats = wstats
+            dir_stats = wstats
             total = n_new
             deltas = {}  # full refresh folds/discards all MoR deltas
-            delta_stats = {}
         elif mode == "append":
-            buckets = {k: list(v) for k, v in m["buckets"].items()}
-            bucket_stats = {k: dict(v) for k, v in m.get("bucket_stats", {}).items()}
-            for b, dlist in written.items():
-                had_prior = bool(buckets.get(b))
-                buckets.setdefault(b, []).extend(dlist)
-                bs = bucket_stats.setdefault(b, {"rows": 0, "live": 0})
-                bs["rows"] += wstats[b]["rows"]
-                bs["live"] += wstats[b]["live"]
-                # zone maps widen under append; prior dirs with UNKNOWN
-                # zones poison the union (old manifests) -> drop, no pruning
-                nz = wstats[b].get("zones", {})
-                bs["zones"] = (
-                    self._merge_zones(bs.get("zones"), nz) if had_prior else nz
-                )
-                # per-dir zones don't widen — each appended dir keeps its
-                # own (that's the point: the union is wide, the dirs narrow)
-                dmap = dict(bs.get("dirs") or {})
-                dmap.update(wstats[b].get("dirs") or {})
-                bs["dirs"] = dmap
-            deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-            delta_stats = {k: dict(v) for k, v in m.get("delta_stats", {}).items()}
+            buckets = _extend_dirs(m["buckets"], written)
+            dir_stats = {**m.get("dir_stats", {}), **wstats}
+            deltas = m.get("deltas", {})
             prev_total = m["summary"].get("total_rows", 0)
             total = None if prev_total is None else prev_total + n_new
         else:
@@ -984,8 +931,7 @@ class LakeTable:
             schema=json.loads(new_schema.json()),
             buckets=buckets,
             deltas=deltas,
-            delta_stats=delta_stats,
-            bucket_stats=bucket_stats,
+            dir_stats=dir_stats,
             lsn_watermark=self._advance_watermark(m, wstats),
             lineage=(lineage or []),
         )
@@ -1001,8 +947,7 @@ class LakeTable:
             committed_epochs=[],
             buckets={},
             deltas={},
-            delta_stats={},
-            bucket_stats={},
+            dir_stats={},
             lsn_watermark=None,
             changelog_min_version=m["version"] + 1,
             changelog_min_reason="truncate()",
@@ -1070,7 +1015,12 @@ class LakeTable:
                 staged, version, n_buckets, key, key_partitioned=aligned
             )
             _t_write = time.time()
-            fields = self._merge_mor(m, written, wstats)
+            # merge-on-read bookkeeping: O(batch), no target read; the
+            # read-time reduce resolves the deltas as a CoW merge would
+            fields = {
+                "deltas": _extend_dirs(m.get("deltas", {}), written),
+                "dir_stats": {**m.get("dir_stats", {}), **wstats},
+            }
             summary = {
                 "operation": "merge",
                 "mode": "mor",
@@ -1109,24 +1059,19 @@ class LakeTable:
             buckets = {k: list(v) for k, v in m["buckets"].items() if k not in affected}
             buckets.update(written)  # carry forward untouched buckets, swap affected
             deltas = {k: list(v) for k, v in old.items() if k not in affected}
-            delta_stats = {
-                k: dict(v) for k, v in m.get("delta_stats", {}).items() if k in deltas
-            }
-            # incremental live-row accounting from manifest bucket stats — no
-            # scan of historical data (fallback scan only for pre-stats tables)
-            prev_stats = m.get("bucket_stats")
-            if prev_stats is None:
-                prev_stats = self._recompute_bucket_stats(m)
-            bucket_stats = {k: dict(v) for k, v in prev_stats.items() if k not in affected}
-            bucket_stats.update(wstats)
-            fields = dict(
-                buckets=buckets, deltas=deltas, delta_stats=delta_stats, bucket_stats=bucket_stats
-            )
+            folded = set(dirs)
+            dir_stats = {d: s for d, s in m.get("dir_stats", {}).items() if d not in folded}
+            dir_stats.update(wstats)
+            fields = dict(buckets=buckets, deltas=deltas, dir_stats=dir_stats)
+            # incremental live-row accounting from the dir records — no scan
+            # of historical data. With unfolded deltas on other buckets the
+            # exact live total is data-dependent (key overlap), and a dir
+            # with no record is unknown: count() then scans.
+            base = [d for dl in buckets.values() for d in dl]
+            known = not deltas and all(d in dir_stats for d in base)
             summary = {
                 "operation": "merge",
-                # with unfolded deltas on other buckets the exact live total
-                # is data-dependent (key overlap) — unknown until compaction
-                "total_rows": sum(v["live"] for v in bucket_stats.values()) if not deltas else None,
+                "total_rows": sum(dir_stats[d]["live"] for d in base) if known else None,
                 "rows_written": n_rows,
                 "live_rows_written": n_live,
                 "buckets_affected": len(affected),
@@ -1186,31 +1131,6 @@ class LakeTable:
         }
         return _conform(deduped, new_schema, extra=system)
 
-    def _merge_mor(self, m: dict, written: dict[str, list[str]], wstats: dict[str, dict]) -> dict:
-        """Merge-on-read bookkeeping: the manifest ``deltas`` and
-        ``delta_stats`` after the batch was written as per-bucket delta
-        dirs — O(batch) work regardless of how many buckets the keys touch,
-        no target read. The read-time reduce by :func:`_stored_order`
-        resolves them exactly as a CoW merge would have."""
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-        # delta zone maps widen across delta commits exactly like append's
-        # base zones; a bucket whose existing deltas predate delta_stats
-        # tracking has unknown zones, and _merge_zones(None, x) poisons the
-        # union to {} so it can never prune. Each delta dir also keeps its
-        # own _lsn range (that column only: read_changes prunes dirs on it)
-        delta_stats = {k: dict(v) for k, v in m.get("delta_stats", {}).items()}
-        for b, dlist in written.items():
-            had_prior = bool(deltas.get(b))
-            deltas.setdefault(b, []).extend(dlist)
-            nz = wstats[b].get("zones", {})
-            prior = (delta_stats.get(b) or {}) if had_prior else {}
-            zones = self._merge_zones(prior.get("zones"), nz) if had_prior else nz
-            dirs = dict(prior.get("dirs") or {})
-            if LSN_COL in nz:
-                dirs.update({d: {LSN_COL: nz[LSN_COL]} for d in dlist})
-            delta_stats[b] = {"zones": zones, "dirs": dirs}
-        return {"deltas": deltas, "delta_stats": delta_stats}
-
     def vacuum(self, keep_last_versions: int = 1) -> dict:
         """Delete snapshot data directories not referenced by the last
         ``keep_last_versions`` manifests (and drop the older manifests).
@@ -1226,10 +1146,7 @@ class LakeTable:
             except FileNotFoundError:
                 continue
             kept_manifests.add(os.path.basename(self._manifest_path(v)))
-            for dl in m["buckets"].values():
-                referenced.update(os.path.normpath(d) for d in dl)
-            for dl in m.get("deltas", {}).values():  # MoR delta dirs are live too
-                referenced.update(os.path.normpath(d) for d in dl)
+            referenced.update(os.path.normpath(d) for d in _data_dirs(m))
 
         removed_dirs = 0
         data_root = os.path.join(self.path, "data")
@@ -1257,24 +1174,6 @@ class LakeTable:
                 os.unlink(os.path.join(self.manifest_dir, name))
                 removed_manifests += 1
         return {"removed_data_dirs": removed_dirs, "removed_manifests": removed_manifests}
-
-    def _recompute_bucket_stats(self, m: dict) -> dict[str, dict]:
-        """Full-scan fallback for manifests written before bucket_stats
-        existed (only the _bucket/_deleted columns are read)."""
-        dirs = [d for dl in m["buckets"].values() for d in dl]
-        if not dirs:
-            return {}
-        rows = (
-            self.spark.read.schema(self._read_schema(m))
-            .parquet(*dirs)
-            .groupBy(BUCKET_COL)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), 0).otherwise(1)).alias("live"),
-            )
-            .collect()
-        )
-        return {str(r[BUCKET_COL]): {"rows": int(r["n"]), "live": int(r["live"] or 0)} for r in rows}
 
     # ------------------------------------------------------------ utilities
 
@@ -1339,7 +1238,8 @@ class LakeTable:
         the physical-design facts are the bucket layout and sort order, and
         the access facts are owner + ACL)."""
         m = self.manifest()
-        stats = m.get("bucket_stats") or {}
+        stats = m.get("dir_stats") or {}
+        dirs = _data_dirs(m)
         return {
             "path": self.path,
             "version": m["version"],
@@ -1356,7 +1256,11 @@ class LakeTable:
             "data_dirs": sum(len(v) for v in m["buckets"].values()),
             "delta_dirs": sum(len(v) for v in m.get("deltas", {}).values()),
             "total_rows": m["summary"].get("total_rows", 0),
-            "tombstones": sum(v["rows"] - v["live"] for v in stats.values()) if stats else None,
+            "tombstones": (
+                sum(stats[d]["rows"] - stats[d]["live"] for d in dirs)
+                if all(d in stats for d in dirs)
+                else None
+            ),
             "committed_epochs": len(m.get("committed_epochs", [])),
             # the CDC-out surface a changelog consumer plans against
             "changelog": {
@@ -1414,8 +1318,7 @@ class LakeTable:
             bucket_hash=MURMUR3,
             buckets=written,
             deltas={},  # the read above reduced any deltas into the rewrite
-            delta_stats={},
-            bucket_stats=wstats,
+            dir_stats=wstats,
             lsn_watermark=self._advance_watermark(m, wstats),
         )
 
@@ -1450,10 +1353,18 @@ class LakeTable:
             **history,
             buckets=written,
             deltas={},  # the read above reduced deltas into the rewrite
-            delta_stats={},
-            bucket_stats=wstats,
+            dir_stats=wstats,
             lsn_watermark=self._advance_watermark(m, wstats),
         )
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The parquet data files of dir ``d``, in name order."""
+    return [
+        os.path.join(d, fn)
+        for fn in sorted(os.listdir(d))
+        if not fn.startswith((".", "_")) and fn.endswith(".parquet")
+    ]
 
 
 def _stat_parquet_file(path: str) -> dict:
@@ -1536,7 +1447,7 @@ def _refuse_invisible_lsns(file_stats: list[dict], wm: int | None) -> None:
 
 
 def _combine_file_stats(file_stats: list[dict]) -> dict:
-    """Merge per-file stats into the bucket-level manifest entry. Order-
+    """Merge per-file stats into one dir's ``dir_stats`` record. Order-
     independent by construction: row/delete counts sum, zone ranges widen
     via min/max, and any column lacking stats in ANY file is dropped
     (a column absent from a file's SCHEMA entirely is fine — its rows read
@@ -1559,6 +1470,19 @@ def _combine_file_stats(file_stats: list[dict]) -> dict:
                 z[0] = min(z[0], lo)
                 z[1] = max(z[1], hi)
     return {"rows": rows, "live": rows - deleted, "zones": zones}
+
+
+def _data_dirs(m: dict) -> list[str]:
+    """Every base and MoR delta dir manifest ``m`` references."""
+    return [d for part in (m["buckets"], m.get("deltas", {})) for dl in part.values() for d in dl]
+
+
+def _extend_dirs(old: dict[str, list[str]], written: dict[str, list[str]]) -> dict[str, list[str]]:
+    """``old``'s bucket -> dirs map with ``written``'s dirs appended."""
+    out = {b: list(dl) for b, dl in old.items()}
+    for b, dl in written.items():
+        out.setdefault(b, []).extend(dl)
+    return out
 
 
 def _stored_order() -> Column:

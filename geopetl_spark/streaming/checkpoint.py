@@ -14,8 +14,9 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from typing import Any
+
+from ..atomic import atomic_write
 
 
 class Checkpoint:
@@ -38,12 +39,7 @@ class Checkpoint:
         }
         if extra:
             state.update(extra)
-        tmp = self.file + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-            fh.flush()
-            os.fsync(fh.fileno())  # durable before the rename publishes it
-        os.replace(tmp, self.file)
+        atomic_write(self.file, json.dumps(state))
 
     def next_epoch_after(self, default_start: int = 0) -> int:
         last = self.load()["last_epoch"]

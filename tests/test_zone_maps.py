@@ -1,6 +1,8 @@
-"""Zone-map data skipping: per-bucket column min/max harvested from parquet
-footers at write time, conservative predicate pruning at read time (simple
-AND-range conjunctions only; MoR-delta buckets never pruned)."""
+"""Zone-map data skipping: per-dir column min/max (the manifest's
+``dir_stats``) harvested from parquet footers at write time, conservative
+predicate pruning at read time (simple AND-range conjunctions only): a
+bucket prunes when every base and MoR delta dir of it provably misses, a dir
+with no record never prunes."""
 
 import sys
 
@@ -30,7 +32,7 @@ def table(spark, tmp_path):
 
 
 def test_zones_recorded_with_correct_global_range(table):
-    stats = table.manifest()["bucket_stats"]
+    stats = table.manifest()["dir_stats"]
     assert stats
     mins, maxs = [], []
     for b, s in stats.items():
@@ -46,17 +48,13 @@ def test_distributed_harvest_identical_to_driver_serial(table, spark, monkeypatc
     """The executor-side footer harvest (commit path, large epochs) must be
     byte-identical to the driver-serial reference on the same files."""
     m = table.manifest()
-    written = {b: list(dl) for b, dl in m["buckets"].items()}
-    serial = {b: LakeTable._file_stats(dl) for b, dl in written.items()}
+    dirs = [d for dl in m["buckets"].values() for d in dl]
+    serial = {d: LakeTable._file_stats([d]) for d in dirs}
     monkeypatch.setitem(gates.LIMITS, "harvest_driver_files", 0)  # force the job path
-    distributed = table._harvest_stats(written)
+    distributed = table._harvest_stats(dirs)
     assert distributed == serial
-    # and the stats the ORIGINAL commit recorded match both (modulo the
-    # per-dir zones the commit path adds on top of the harvest)
-    recorded = {
-        b: {k: v for k, v in m["bucket_stats"][b].items() if k != "dirs"} for b in written
-    }
-    assert recorded == serial
+    # and the records the ORIGINAL commit stored match both
+    assert m["dir_stats"] == serial
 
 
 def test_pruning_excludes_provably_empty_buckets(table):
@@ -94,7 +92,7 @@ def test_pruned_read_matches_unpruned_filter(table):
 
 def test_append_widens_zones(table, spark):
     table.write(_rows(spark, 1000, 1050), mode="append")
-    stats = table.manifest()["bucket_stats"]
+    stats = table.manifest()["dir_stats"]
     maxs = [s["zones"]["n_tok"][1] for s in stats.values() if s.get("zones")]
     assert max(maxs) == 1049
     # the old range is still covered: nothing in [0,200) is prunable
@@ -155,7 +153,7 @@ def test_mor_delta_bucket_prunes_when_base_and_delta_both_miss(table, spark):
     table.merge(batch, epoch_id=99, lsn_col="lsn", op_col="op", strategy="mor")
     m = table.manifest()
     delta_buckets = set(m["deltas"].keys())
-    assert delta_buckets and m.get("delta_stats")
+    assert delta_buckets and all(d in m["dir_stats"] for dl in m["deltas"].values() for d in dl)
     # predicate outside BOTH base (0..199) and delta (150) zones -> every
     # bucket, delta-carrying ones included, provably misses
     pruned = table._pruned_buckets(m, "n_tok > 5000")
@@ -174,7 +172,10 @@ def test_mor_delta_bucket_prunes_when_base_and_delta_both_miss(table, spark):
     )
     table.merge(batch2, epoch_id=100, lsn_col="lsn", op_col="op", strategy="mor")
     m2 = table.manifest()
-    b_k1 = [b for b, s in m2["delta_stats"].items() if s["zones"].get("n_tok", [0, 0])[1] == 6000]
+    b_k1 = [
+        b for b, dl in m2["deltas"].items()
+        if any(m2["dir_stats"][d]["zones"].get("n_tok", [0, 0])[1] == 6000 for d in dl)
+    ]
     assert b_k1
     assert b_k1[0] not in table._pruned_buckets(m2, "n_tok = 6000")
     got = {r.doc_id for r in table.read(where="n_tok = 6000").collect()}
@@ -192,14 +193,117 @@ def test_mor_delta_without_stats_never_prunes(table, spark):
     )
     table.merge(batch, epoch_id=99, lsn_col="lsn", op_col="op", strategy="mor")
     m = table.manifest()
-    # simulate a pre-tracking manifest: strip delta_stats
+    # simulate a pre-tracking manifest: drop the delta dirs' records
     mpath = table._manifest_path(m["version"])
-    m.pop("delta_stats", None)
+    for dl in m["deltas"].values():
+        for d in dl:
+            m["dir_stats"].pop(d)
     with open(mpath, "w") as fh:
         _json.dump(m, fh)
     pruned = table._pruned_buckets(table.manifest(), "n_tok > 5000")
     assert pruned.isdisjoint(set(m["deltas"]))
     assert table.read(where="n_tok > 5000").count() == 0
+
+
+def test_bucket_prunes_when_every_dir_misses(table, spark):
+    """A bucket prunes when each of its dirs misses, even where the union of
+    its dirs' ranges covers the predicate: base dirs hold n_tok 0..199 and
+    1000..1049, a MoR delta holds 5, and n_tok = 500 falls in the gap. The
+    pruned read scans fewer files and equals the unpruned filter."""
+    table.write(_rows(spark, 1000, 1050), mode="append")
+    table.merge(_batch(spark, [("k0", [7], 5, "src", "U", 10_000)]),
+                epoch_id=7, lsn_col="lsn", op_col="op", strategy="mor")
+    m = table.manifest()
+    assert table._pruned_buckets(m, "n_tok = 500") == set(m["buckets"]) | set(m["deltas"])
+    full = table.read()
+    assert len(table.read(where="n_tok = 500").inputFiles()) < len(full.inputFiles())
+    for where in ("n_tok = 500", "n_tok = 5", "n_tok = 1010", "n_tok between 300 and 900"):
+        assert _rowset(table.read(where=where)) == _rowset(full.filter(where)), where
+
+
+def _assert_dir_stats_invariant(t):
+    m = t.manifest()
+    dirs = {d for part in (m["buckets"], m.get("deltas", {})) for dl in part.values() for d in dl}
+    assert set(m["dir_stats"]) == dirs
+    for d in dirs:
+        assert m["dir_stats"][d] == LakeTable._file_stats([d]), d
+    assert not {"bucket_stats", "delta_stats"} & set(m)
+
+
+def test_dir_stats_hold_exactly_the_referenced_dirs(table, spark):
+    """After every manifest-publishing op, ``dir_stats`` holds one record per
+    referenced base and delta dir, each equal to the driver-serial harvest
+    of that dir; a known row count equals the rows read."""
+    _assert_dir_stats_invariant(table)  # overwrite
+    table.write(_rows(spark, 1000, 1050), mode="append")
+    _assert_dir_stats_invariant(table)
+    table.write(
+        spark.createDataFrame([("a1", [9], 9, "s", 50), ("k5", [5], 500, "s", 51)],
+                              "doc_id string, tokens array<int>, n_tok int, source string, _lsn long"),
+        mode="append",
+    )
+    _assert_dir_stats_invariant(table)
+    table.merge(_batch(spark, [("k1", [1], 1, "s", "U", 60)]), epoch_id=1,
+                lsn_col="lsn", op_col="op", strategy="cow")
+    _assert_dir_stats_invariant(table)
+    assert table.count() == table.read().count()
+    _mor(table, spark, [("k2", None, None, "s", "D", 61), ("k3", [3], 3, "s", "U", 62)], 2)
+    _assert_dir_stats_invariant(table)
+    # a CoW merge folds its buckets' base and delta dirs
+    table.merge(_batch(spark, [("k3", [4], 4, "s", "U", 63)]), epoch_id=3,
+                lsn_col="lsn", op_col="op", strategy="cow")
+    _assert_dir_stats_invariant(table)
+    table.compact()
+    _assert_dir_stats_invariant(table)
+    _mor(table, spark, [("k4", None, None, "s", "D", 64)], 4)
+    table.compact(drop_tombstones=True)
+    _assert_dir_stats_invariant(table)
+    assert table.count() == table.read().count()
+    table.rebucket(8)
+    _assert_dir_stats_invariant(table)
+    table.truncate()
+    _assert_dir_stats_invariant(table)
+
+
+def test_manifest_without_dir_stats_reads_correctly(spark, tmp_path):
+    """A manifest of the older shape (per-bucket stats fields, no
+    ``dir_stats``) loses pruning but no rows: ``read``, ``read_changes``
+    and ``count()`` stay exact, the stale fields are ignored and not carried
+    forward, and ``compact()`` restores the records."""
+    import json as _json
+
+    t = LakeTable(spark, str(tmp_path / "older")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    t.merge(_batch(spark, [(f"k{i}", [i], i, "s", "I", i + 1) for i in range(40)]),
+            epoch_id=0, lsn_col="lsn", op_col="op")
+    v1 = t.manifest()["version"]
+    t.merge(_batch(spark, [("k1", [1], 100, "s", "U", 50), ("k2", None, None, "s", "D", 51)]),
+            epoch_id=1, lsn_col="lsn", op_col="op")
+    m = t.manifest()
+    m.pop("dir_stats")
+    # stale per-bucket zones that would prune every bucket if they were read
+    m["bucket_stats"] = {b: {"rows": 0, "live": 0, "zones": {"n_tok": [-9, -8]}} for b in m["buckets"]}
+    with open(t._manifest_path(m["version"]), "w") as fh:
+        _json.dump(m, fh)
+    assert t._pruned_buckets(t.manifest(), "n_tok > 30") == set()
+    full = t.read()
+    for where in ("n_tok > 30", "n_tok = 100", "n_tok = 9999"):
+        assert _rowset(t.read(where=where)) == _rowset(full.filter(where)), where
+    v2 = t.manifest()["version"]
+    assert _rowset(t.read_changes(v1, v2)) == _rowset(_reduce_then_filter(t, v1, v2))
+    assert t.count() == 39
+    # the untouched buckets' dirs have no record, so a CoW merge records no
+    # total and count() scans
+    t.merge(_batch(spark, [("k3", None, None, "s", "D", 60)]), epoch_id=2,
+            lsn_col="lsn", op_col="op", strategy="cow")
+    assert t.manifest()["summary"]["total_rows"] is None
+    assert "bucket_stats" not in t.manifest()
+    assert t.count() == 38
+    v4 = _mor(t, spark, [("k4", [4], 400, "s", "U", 70)], 3)
+    for since in (v1, v2, v4 - 1):
+        assert _rowset(t.read_changes(since, v4)) == _rowset(_reduce_then_filter(t, since, v4))
+    t.compact()
+    _assert_dir_stats_invariant(t)
+    assert t.count() == 38 == t.read().count()
 
 
 def _batch(spark, rows):
@@ -431,9 +535,8 @@ def test_one_commit_changelog_scans_only_that_commit(spark, tmp_path):
     files = t.read_changes(v - 1, v).inputFiles()
     assert files and all(f"/snap-{v:08d}-" in f for f in files), files
     want = _rowset(t.read_changes(v - 1, v))
-    # strip every per-dir range: nothing can be pruned, the rows hold
-    for s in list(m["bucket_stats"].values()) + list(m["delta_stats"].values()):
-        s.pop("dirs", None)
+    # drop every dir's record: nothing can be pruned, the rows hold
+    m.pop("dir_stats")
     with open(t._manifest_path(v), "w") as fh:
         _json.dump(m, fh)
     stripped = t.read_changes(v - 1, v)

@@ -36,11 +36,9 @@ def main() -> None:
             # one dir per "bucket", 8 files per bucket — the shape a real
             # epoch commit hands _harvest_stats
             n_buckets = max(n_files // 8, 1)
-            written: dict[str, list[str]] = {}
-            for b in range(n_buckets):
-                d = os.path.join(root, f"b{b}")
+            dirs = [os.path.join(root, f"b{b}") for b in range(n_buckets)]
+            for d in dirs:
                 os.makedirs(d)
-                written[str(b)] = [d]
             for i in range(n_files):
                 b = i % n_buckets
                 tbl = pa.table(
@@ -54,7 +52,7 @@ def main() -> None:
                 pq.write_table(tbl, os.path.join(root, f"b{b}", f"part-{i:05d}.parquet"))
 
             t0 = time.perf_counter()
-            serial = {b: LakeTable._file_stats(dl) for b, dl in written.items()}
+            serial = {d: LakeTable._file_stats([d]) for d in dirs}
             t_serial = time.perf_counter() - t0
 
             table = LakeTable(spark, os.path.join(work, f"tbl-{n_files}"))
@@ -62,7 +60,7 @@ def main() -> None:
             gates.LIMITS["harvest_driver_files"] = 0  # force the job path
             try:
                 t0 = time.perf_counter()
-                dist = table._harvest_stats(written)
+                dist = table._harvest_stats(dirs)
                 t_dist = time.perf_counter() - t0
             finally:
                 gates.LIMITS["harvest_driver_files"] = saved
