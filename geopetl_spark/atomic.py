@@ -4,7 +4,8 @@ changelog consumer cursor.
 
 A crash at any instant leaves a reader the old content or the new, never a
 torn file: the bytes are made durable in a uniquely named temp file before
-``os.replace`` (atomic on POSIX) publishes them.
+``os.replace`` (atomic on POSIX) publishes them, and the parent directory
+is fsynced after, so the new name survives a power loss too.
 """
 
 from __future__ import annotations
@@ -16,12 +17,13 @@ import uuid
 def atomic_write(path: str, text: str, exclusive: bool = False) -> None:
     """Replace ``path`` with ``text``: write a temp file beside it (uuid
     name, so concurrent writers in one process never share it), flush and
-    fsync it, then ``os.replace`` it over ``path``.
+    fsync it, ``os.replace`` it over ``path``, then fsync the directory.
 
-    ``exclusive``: once the temp file is durable, claim ``path`` with
-    ``O_CREAT | O_EXCL`` before the replace; if ``path`` already exists the
-    temp file is removed and ``FileExistsError`` raised (the optimistic
-    commit claim of a manifest version)."""
+    ``exclusive``: publish with ``os.link`` of the durable temp file instead
+    of the replace, so ``path`` is claimed and filled in one step (the
+    optimistic commit claim of a manifest version). If ``path`` already
+    exists the temp file is removed and ``FileExistsError`` raised; a
+    writer that dies at any point leaves ``path`` absent or complete."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
         fh.write(text)
@@ -29,8 +31,13 @@ def atomic_write(path: str, text: str, exclusive: bool = False) -> None:
         os.fsync(fh.fileno())
     if exclusive:
         try:
-            os.close(os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-        except FileExistsError:
+            os.link(tmp, path)
+        finally:
             os.unlink(tmp)
-            raise
-    os.replace(tmp, path)
+    else:
+        os.replace(tmp, path)
+    fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)

@@ -5,7 +5,7 @@ from-scratch copy-on-write table format with Iceberg-like semantics,
 implemented on parquet + JSON manifests:
 
 * **Atomic snapshot commits** — data files are written to a new immutable
-  snapshot directory, then a manifest (file inventory + schema + lineage) is
+  snapshot directory, then a manifest (file inventory + schema + epochs) is
   published and the ``_current`` pointer is swapped with ``os.replace``
   (atomic on POSIX; on an object store this swap maps to a catalog/metastore
   CAS — the single point to port).
@@ -92,6 +92,7 @@ _PART_COL = "_bucket_p"  # physical partition dir column (duplicated from _bucke
 MURMUR3 = "murmur3"  # manifest "bucket_hash" of pmod(hash(key), N) tables
 _SYSTEM_COLS = (BUCKET_COL, LSN_COL, DELETED_COL, SEQ_COL)
 _LIVE = f"NOT coalesce({DELETED_COL}, false)"  # the filter that drops tombstones
+_DROPPED_FIELDS = ("bucket_stats", "delta_stats", "lineage")  # older manifests' fields
 
 
 class CommitConflict(Exception):
@@ -150,7 +151,6 @@ class LakeTable:
             "schema": json.loads(user_schema.json()),
             "buckets": {},  # bucket id (str) -> list of data dirs
             "summary": {"total_rows": 0, "operation": "create"},
-            "lineage": [],
             "properties": properties or {},
             "owner": owner,
             # informational grants surface (C6 tail): principal -> sorted ops.
@@ -179,23 +179,19 @@ class LakeTable:
 
     def _publish(self, manifest: dict) -> None:
         """Optimistic-concurrency commit: the manifest version file is
-        created with O_EXCL — two writers racing to publish the same next
+        claimed exclusively — two writers racing to publish the same next
         version see exactly one winner; the loser gets CommitConflict and
         must re-read the table and retry its operation (same contract as
         Iceberg's atomic swap). The manifest body and then the pointer are
-        each written by :func:`atomic_write` (fsync before the rename), so
-        after a crash the pointer names a complete manifest."""
+        each written by :func:`atomic_write` (fsync before the rename or
+        link), so after a crash the pointer names a complete manifest."""
         # Commit-time stamp for timestamp time travel.  Clamped to the
-        # parent's stamp so committed_at is monotone in version even across
-        # a wall-clock step backwards (Iceberg snapshot-log semantics:
+        # parent's stamp, which the manifest still carries from its parent
+        # (create() has none), so committed_at is monotone in version even
+        # across a wall-clock step backwards (Iceberg snapshot-log semantics:
         # version_as_of picks max version with stamp <= ts, which requires
         # stamps ordered like versions).
-        parent_at = 0.0
-        try:
-            parent_at = float(self.manifest().get("committed_at") or 0.0)
-        except FileNotFoundError:
-            pass  # first commit: no current pointer yet
-        manifest["committed_at"] = max(time.time(), parent_at)
+        manifest["committed_at"] = max(time.time(), float(manifest.get("committed_at") or 0.0))
         mpath = self._manifest_path(manifest["version"])
         try:
             atomic_write(mpath, json.dumps(manifest), exclusive=True)
@@ -210,10 +206,12 @@ class LakeTable:
         a new snapshot id, ``m`` as parent and ``summary``. Returns
         ``summary``. The per-bucket stats fields of older manifests are not
         carried forward: they no longer describe the table once it changes,
-        and older readers treat their absence as unknown stats."""
+        and older readers treat their absence as unknown stats. Nor is
+        their always-empty ``lineage`` list: epoch lineage lives in
+        :class:`geopetl_spark.streaming.lineage.LineageLog`."""
         self._publish(
             {
-                **{k: v for k, v in m.items() if k not in ("bucket_stats", "delta_stats")},
+                **{k: v for k, v in m.items() if k not in _DROPPED_FIELDS},
                 **fields,
                 "version": m["version"] + 1,
                 "snapshot_id": uuid.uuid4().hex,
@@ -243,6 +241,9 @@ class LakeTable:
         # BEFORE the atomic pointer swap that defines the commit point, so a
         # writer crashed (or observed) in between leaves a complete manifest
         # for a never-committed version.  Never resolve past the pointer.
+        # An unreadable manifest file is an empty placeholder: tables written
+        # while a version was claimed by an empty O_EXCL file before its
+        # rename may keep one from a crashed writer.
         committed = self.manifest()["version"]
         for name in sorted(os.listdir(self.manifest_dir)):
             if not (name.startswith("manifest-") and name.endswith(".json")):
@@ -251,7 +252,7 @@ class LakeTable:
                 with open(os.path.join(self.manifest_dir, name)) as fh:
                     m = json.load(fh)
             except json.JSONDecodeError:
-                continue  # in-flight concurrent commit
+                continue  # empty claim placeholder (see above)
             if m["version"] > committed:
                 continue  # manifest published but pointer swap never happened
             at = m.get("committed_at")
@@ -273,7 +274,7 @@ class LakeTable:
                     with open(os.path.join(self.manifest_dir, name)) as fh:
                         m = json.load(fh)
                 except json.JSONDecodeError:
-                    continue  # in-flight concurrent commit (O_EXCL placeholder)
+                    continue  # empty placeholder (see version_as_of)
                 out.append(
                     {
                         "version": m["version"],
@@ -838,7 +839,6 @@ class LakeTable:
         mode: str = "overwrite",
         epoch_id: Any | None = None,
         fail_on_empty: bool = False,
-        lineage: list[dict] | None = None,
     ) -> dict:
         """Full refresh (``overwrite`` ≈ truncate+load) or blind ``append``.
 
@@ -933,7 +933,6 @@ class LakeTable:
             deltas=deltas,
             dir_stats=dir_stats,
             lsn_watermark=self._advance_watermark(m, wstats),
-            lineage=(lineage or []),
         )
 
     def truncate(self) -> None:
@@ -951,7 +950,6 @@ class LakeTable:
             lsn_watermark=None,
             changelog_min_version=m["version"] + 1,
             changelog_min_reason="truncate()",
-            lineage=[],
         )
 
     # ---------------------------------------------------------------- MERGE
@@ -962,7 +960,6 @@ class LakeTable:
         epoch_id: Any,
         lsn_col: str = "lsn",
         op_col: str = "op",
-        lineage: list[dict] | None = None,
         strategy: str | None = None,
     ) -> dict:
         """Apply a CDC change batch as an idempotent key-partitioned MERGE.
@@ -991,7 +988,6 @@ class LakeTable:
         """
         if not self.exists():
             raise ValueError(f"no lake table at {self.path}")
-        _t0 = time.time()
         m = self.manifest()
         if epoch_id is not None and epoch_id in set(m.get("committed_epochs", [])):
             return {"operation": "skip", "reason": "epoch already committed", "epoch_id": epoch_id}
@@ -1014,7 +1010,6 @@ class LakeTable:
             written, wstats, n_rows, n_live = self._write_snapshot_data(
                 staged, version, n_buckets, key, key_partitioned=aligned
             )
-            _t_write = time.time()
             # merge-on-read bookkeeping: O(batch), no target read; the
             # read-time reduce resolves the deltas as a CoW merge would
             fields = {
@@ -1030,7 +1025,6 @@ class LakeTable:
                 "buckets_affected": len(written),
                 "delta_dirs": sum(len(v) for v in fields["deltas"].values()),
                 "epoch_id": epoch_id,
-                "merge_phase_sec": {"dedup_and_delta_write": round(_t_write - _t0, 2)},
             }
         else:
             # The staged batch is consumed twice (affected-bucket discovery +
@@ -1042,7 +1036,6 @@ class LakeTable:
             # are read and rewritten. The distinct-bucket list is tiny
             # (≤ n_buckets ints) — the one deliberate collect in the merge.
             affected = {str(r[0]) for r in staged.select(BUCKET_COL).distinct().collect()}
-            _t_dedup = time.time()
             # Fold: a key's base rows, delta rows and batch row share its
             # bucket, so one reduce over the affected buckets' dirs plus the
             # batch resolves the MERGE and folds those buckets' deltas.
@@ -1053,7 +1046,6 @@ class LakeTable:
             written, wstats, n_rows, n_live = self._write_snapshot_data(
                 resolved, version, n_buckets, key, key_partitioned=aligned
             )
-            _t_write = time.time()
             staged.unpersist()
 
             buckets = {k: list(v) for k, v in m["buckets"].items() if k not in affected}
@@ -1076,12 +1068,7 @@ class LakeTable:
                 "live_rows_written": n_live,
                 "buckets_affected": len(affected),
                 "epoch_id": epoch_id,
-                "merge_phase_sec": {
-                    "dedup_and_bucket_discovery": round(_t_dedup - _t0, 2),
-                    "reduce_and_write": round(_t_write - _t_dedup, 2),
-                },
             }
-        summary["merge_phase_sec"]["count_bookkeeping"] = round(time.time() - _t_write, 2)
         return self._commit(
             m,
             summary,
@@ -1089,7 +1076,6 @@ class LakeTable:
             committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
             schema=schema_json,
             lsn_watermark=self._advance_watermark(m, wstats),
-            lineage=(lineage or []),
             **fields,
         )
 

@@ -30,15 +30,13 @@ class Checkpoint:
         with open(self.file) as fh:
             return json.load(fh)
 
-    def save(self, last_epoch: Any, offsets: dict | None = None, extra: dict | None = None) -> None:
+    def save(self, last_epoch: Any, offsets: dict | None = None) -> None:
         os.makedirs(self.path, exist_ok=True)
         state = {
             "last_epoch": last_epoch,
             "offsets": offsets or {},
             "updated_at": time.time(),
         }
-        if extra:
-            state.update(extra)
         atomic_write(self.file, json.dumps(state))
 
     def next_epoch_after(self, default_start: int = 0) -> int:

@@ -7,10 +7,13 @@ This is the engine's driver program (SURVEY §7 step 9). Each epoch:
    partitioned by epoch, see
    :func:`geopetl_spark.sources.cdc_gen.write_cdc_log`);
 2. sanitize payloads (vectorized, JVM-side);
-3. idempotent MERGE into the lake table (epoch-keyed snapshot commit),
-   which reduces the batch to one row per key by max (lsn, ts, op) first;
-4. append per-partition lineage + throughput metrics;
-5. advance the checkpoint.
+3. quarantine events with a NULL ``lsn`` or key (the key the table's
+   manifest records);
+4. idempotent MERGE of the rest into the lake table (epoch-keyed snapshot
+   commit), which reduces the batch to one row per key by max (lsn, ts,
+   op) first;
+5. append per-partition lineage + throughput metrics;
+6. advance the checkpoint.
 
 Crash anywhere and rerun: epochs up to the checkpoint are skipped by the
 checkpoint, the possibly-in-flight epoch is skipped by the sink's
@@ -44,17 +47,13 @@ from .lineage import LineageLog, partition_lineage
 
 @dataclass
 class IngestConfig:
+    """Where an ingest reads, writes and keeps its resume state. The key
+    comes from the table; the change log's envelope columns are ``op`` and
+    ``lsn`` (:func:`geopetl_spark.sources.cdc_gen.write_cdc_log`)."""
+
     log_path: str
     table_path: str
-    checkpoint_path: str
-    key_col: str = "doc_id"
-    lsn_col: str = "lsn"
-    op_col: str = "op"
-    vocab_size: int | None = None
-    sanitize: bool = True
-    quarantine: bool = True  # split events with null key/LSN into a
-    # side-channel instead of poisoning the MERGE (a null key would
-    # otherwise land as a junk row; a null LSN breaks ordering semantics)
+    checkpoint_path: str  # checkpoint, lineage log and quarantined rows
     merge_strategy: str | None = None  # 'cow' | 'mor' | None (table property)
 
 
@@ -154,39 +153,33 @@ def apply_epoch(
     epoch: int,
     lineage_log: LineageLog | None = None,
 ) -> EpochResult:
-    """Apply one micro-batch (usable directly as a foreachBatch body)."""
+    """Apply one micro-batch (usable directly as a foreachBatch body).
+    Events with a NULL key or LSN go to a side-channel instead of the MERGE:
+    a NULL key would land as a junk row, a NULL LSN breaks the ordering."""
     t0 = time.time()
-    if cfg.sanitize:
-        batch = sanitize_tokens(batch, vocab_size=cfg.vocab_size)
+    batch = sanitize_tokens(batch)
     # Lineage + poison accounting ride the dedup job as observed metrics
     # (CollectMetrics): the epoch is scanned exactly ONCE on the clean path —
     # no separate lineage pre-scan job, no extra job when the batch is clean.
     # Predicate and metrics are SQL text: one py4j call each.
-    lsn = quote(cfg.lsn_col)
-    valid_sql = f"{quote(cfg.key_col)} IS NOT NULL AND {lsn} IS NOT NULL"
+    valid_sql = f"{quote(table.key_col)} IS NOT NULL AND lsn IS NOT NULL"
     invalid_sql = f"NOT ({valid_sql})"
     obs = Observation()
-    metrics = ["count(1) AS rows", f"min({lsn}) AS min_lsn", f"max({lsn}) AS max_lsn"]
-    if cfg.quarantine:
-        metrics.append(f"sum(CASE WHEN {invalid_sql} THEN 1 ELSE 0 END) AS invalid_rows")
+    metrics = [
+        "count(1) AS rows",
+        "min(lsn) AS min_lsn",
+        "max(lsn) AS max_lsn",
+        f"sum(CASE WHEN {invalid_sql} THEN 1 ELSE 0 END) AS invalid_rows",
+    ]
     observed = batch.observe(obs, *[F.expr(m) for m in metrics])
-    to_merge = observed.filter(valid_sql) if cfg.quarantine else observed
-    summary = table.merge(
-        to_merge,
-        epoch_id=epoch,
-        lsn_col=cfg.lsn_col,
-        op_col=cfg.op_col,
-        strategy=cfg.merge_strategy,
-    )
+    summary = table.merge(observed.filter(valid_sql), epoch_id=epoch, strategy=cfg.merge_strategy)
     t1 = time.time()
     n_quarantined = 0
     if summary.get("operation") == "skip":
         # nothing executed the observed plan — fall back to a direct scan so
         # a deliberate re-apply still records what arrived (rare path), with
         # the same poison-row accounting as the normal path
-        plineage = partition_lineage(
-            batch, lsn_col=cfg.lsn_col, invalid_pred=F.expr(invalid_sql) if cfg.quarantine else None
-        )
+        plineage = partition_lineage(batch, invalid_pred=F.expr(invalid_sql))
         n_quarantined = sum(int(p.pop("invalid_rows", 0) or 0) for p in plineage)
     else:
         got = obs.get

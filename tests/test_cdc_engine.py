@@ -294,7 +294,8 @@ def test_pipeline_resume_from_checkpoint(spark, events, tmp_path):
 
 def test_checkpoint_save_fsyncs_before_replace(tmp_path, monkeypatch):
     """The checkpoint's temp file is fsynced before the rename publishes it,
-    so a crash cannot leave a renamed but empty or torn checkpoint."""
+    so a crash cannot leave a renamed but empty or torn checkpoint; the
+    directory is fsynced after it, so the rename survives a power loss."""
     calls = []
     fsync, replace = os.fsync, os.replace
 
@@ -310,7 +311,7 @@ def test_checkpoint_save_fsyncs_before_replace(tmp_path, monkeypatch):
     monkeypatch.setattr(os, "replace", spy_replace)
     ck = Checkpoint(str(tmp_path / "ck"))
     ck.save(3, {"p": 7})
-    assert calls == ["fsync", "replace"]
+    assert calls == ["fsync", "replace", "fsync"]
     assert ck.load()["last_epoch"] == 3
 
 

@@ -89,3 +89,32 @@ def test_clean_batch_quarantines_nothing(spark, tmp_path):
     res = apply_epoch(spark, cfg, LakeTable(spark, tp), batch, epoch=0)
     assert res.commit["rows_quarantined"] == 0
     assert not os.path.exists(os.path.join(cfg.checkpoint_path, "quarantine"))
+
+
+def test_ingest_takes_the_key_from_the_table(spark, tmp_path):
+    """The epoch's key is the one the table's manifest records: into a
+    table keyed on ``id``, a NULL-``id`` event is quarantined and the rest
+    merge. The config names only paths and the merge strategy."""
+    from dataclasses import fields
+
+    assert [f.name for f in fields(IngestConfig)] == [
+        "log_path", "table_path", "checkpoint_path", "merge_strategy"
+    ]
+    tp = str(tmp_path / "lake")
+    schema = "id string, tokens array<int>, n_tok int, source string"
+    t = LakeTable(spark, tp).create(spark.createDataFrame([], schema).schema, key_col="id", n_buckets=4)
+    cfg = IngestConfig(log_path="unused", table_path=tp, checkpoint_path=str(tmp_path / "ck"))
+    batch = spark.createDataFrame(
+        [
+            ("I", 1, None, [1], 1, "s"),      # null key  -> quarantine
+            ("I", 2, "k2", [2], 1, "s"),
+            ("U", 3, "k2", [3], 1, "s"),
+            ("I", 4, "k4", [4], 1, "s"),
+        ],
+        f"op string, lsn long, {schema}",
+    )
+    res = apply_epoch(spark, cfg, t, batch, epoch=0)
+    assert res.commit["rows_quarantined"] == 1
+    assert sorted((r["id"], r["tokens"]) for r in t.read().collect()) == [("k2", [3]), ("k4", [4])]
+    q = spark.read.parquet(os.path.join(cfg.checkpoint_path, "quarantine", "epoch=0"))
+    assert [r["lsn"] for r in q.collect()] == [1]

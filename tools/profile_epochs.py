@@ -3,8 +3,7 @@
 Runs one ingest at a chosen parallelism / epoch size, one epoch per
 ``run_ingest(max_epochs=1)`` call, and prints for each epoch:
 
-* the copy-on-write merge phase timings (``merge_phase_sec``: dedup+bucket-
-  discovery, reduce+write, count bookkeeping) from the lineage log;
+* rows, throughput and wall seconds from the lineage log;
 * ``py4j_calls``: Python -> JVM round trips the driver thread made,
   counted at py4j's ``ClientServerConnection.send_command`` — the
   plan-construction fixed cost;
@@ -109,14 +108,12 @@ def main() -> None:
             clientserver.ClientServerConnection.send_command = send
         per_epoch = []
         for e in sorted(LineageLog(ck).read(), key=lambda e: str(e["epoch"])):
-            cs = e.get("commit") or {}
             per_epoch.append(
                 {
                     "epoch": e["epoch"],
                     "rows": e["rows"],
                     "events_per_sec": round(e["events_per_sec"], 1),
                     "elapsed_sec": round(e["elapsed_sec"], 2),
-                    "phases": cs.get("merge_phase_sec"),
                     **counts.get(str(e["epoch"]), {}),
                 }
             )
