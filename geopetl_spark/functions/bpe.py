@@ -192,12 +192,6 @@ def _merge_collisions(merges: list[tuple[str, str]]) -> set[str]:
     return dup
 
 
-def save_merges(merges: list[tuple[str, str]], alphabet: list[str], path: str = _DATA_PATH) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as fh:
-        json.dump({"merges": [list(m) for m in merges], "alphabet": alphabet}, fh, indent=1)
-
-
 def load_merges(path: str | None = None) -> tuple[list[tuple[str, str]], list[str]]:
     """The shipped default merges table (trained on sf0.001 documents).
     Resolves through ``importlib.resources`` when the package is imported

@@ -714,12 +714,6 @@ def resize_images(
     return df.select(id_col, blob_col).mapInPandas(run, schema="id long, blob binary")
 
 
-def resize_stub(df: DataFrame, target_w: int, target_h: int, blob_col: str = "blob", id_col: str = "id") -> DataFrame:
-    """Back-compat alias from the rounds-2-4 stub era; the resize is real
-    now (see :func:`resize_images`)."""
-    return resize_images(df, target_w, target_h, blob_col, id_col)
-
-
 def frame_sample_stub(df: DataFrame, every_n: int = 10, blob_col: str = "blob", id_col: str = "id") -> DataFrame:
     """Video frame-sampling plumbing: emits one row per sampled 'frame'
     (1:N row fan-out through mapInPandas — the shape a real decoder needs).

@@ -15,12 +15,11 @@ implemented on parquet + JSON manifests:
   (``/root/reference/geopetl/oracle_sde.py:1050-1074``) to idempotent
   exactly-once.
 * **Hash-bucket layout** — rows are bucketed by ``pmod(hash(key), N)``,
-  Spark's own shuffle hash (manifest ``"bucket_hash": "murmur3"``; older
-  tables keep ``pmod(xxhash64(key), N)`` until :meth:`LakeTable.rebucket`).
-  Each snapshot keeps one parquet directory per touched bucket, and the
-  manifest carries forward untouched buckets' directories from the parent
-  snapshot. MERGE therefore costs O(changed buckets), not O(table) — the
-  same copy-on-write economics as Iceberg's.
+  Spark's own Murmur3 shuffle hash, so a merge writes straight from its
+  per-key reduce's exchange. Each snapshot keeps one parquet directory per
+  touched bucket, and the manifest carries forward untouched buckets'
+  directories from the parent snapshot. MERGE therefore costs O(changed
+  buckets), not O(table) — the same copy-on-write economics as Iceberg's.
 
   **Regime limits, named:** a uniformly-keyed epoch touches all N buckets
   and CoW rewrites the full table per epoch. The mitigations, by table size:
@@ -36,8 +35,13 @@ implemented on parquet + JSON manifests:
   references (column min/max from the dir's parquet footers, harvested at
   write time). Every stats fact is derived from these records: bucket and
   dir pruning, changelog dir pruning, the copy-on-write row count and
-  ``describe()``'s tombstones. A dir with no record (a manifest from
-  before ``dir_stats``) is unknown: it never prunes and is always read.
+  ``describe()``'s tombstones. Every commit keeps the records of exactly
+  the dirs it references, so no referenced dir is ever without one.
+* **One table format** — the manifest carries ``"format_version": 2``, and
+  ``create()`` writes every field a later commit reads. A manifest of any
+  other version is refused (:meth:`LakeTable.manifest` raises): an older
+  table is re-ingested, not upgraded in place (Delta's reader-version
+  check works the same way).
 * **Additive schema evolution** — the manifest schema evolves via
   :func:`geopetl_spark.schema.evolve_schema`; reads always apply the current
   manifest schema, so files written before a column existed surface NULLs
@@ -66,7 +70,7 @@ import re
 import shutil
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -87,12 +91,11 @@ DELETED_COL = "_deleted"  # tombstone flag: deletes persist so a late replay of
 # True) reclaims them once the replay horizon has passed.
 SEQ_COL = "_seq"  # commit-order tiebreak of the merge order (_stored_order):
 # on equal _lsn the row a later commit wrote wins, in both merge strategies.
-# Files from before this column existed read as NULL -> sorts below any commit.
+# Rows loaded by write() carry none (NULL) -> sorts below any merged commit.
 _PART_COL = "_bucket_p"  # physical partition dir column (duplicated from _bucket)
-MURMUR3 = "murmur3"  # manifest "bucket_hash" of pmod(hash(key), N) tables
 _SYSTEM_COLS = (BUCKET_COL, LSN_COL, DELETED_COL, SEQ_COL)
 _LIVE = f"NOT coalesce({DELETED_COL}, false)"  # the filter that drops tombstones
-_DROPPED_FIELDS = ("bucket_stats", "delta_stats", "lineage")  # older manifests' fields
+FORMAT_VERSION = 2  # the one manifest shape this module reads and writes
 
 
 class CommitConflict(Exception):
@@ -139,7 +142,7 @@ class LakeTable:
                 owner = "unknown"
         user_schema = T.StructType([f for f in schema.fields if f.name not in _SYSTEM_COLS])
         manifest = {
-            "format_version": 1,
+            "format_version": FORMAT_VERSION,
             "version": 0,
             "snapshot_id": uuid.uuid4().hex,
             "parent": None,
@@ -147,9 +150,14 @@ class LakeTable:
             "committed_epochs": [],
             "key_col": key_col,
             "n_buckets": int(n_buckets),
-            "bucket_hash": MURMUR3,
             "schema": json.loads(user_schema.json()),
-            "buckets": {},  # bucket id (str) -> list of data dirs
+            "buckets": {},  # bucket id (str) -> list of base data dirs
+            "deltas": {},  # bucket id (str) -> list of MoR delta dirs
+            "dir_stats": {},  # data dir -> {"rows", "live", "zones"}
+            "lsn_watermark": None,
+            "bulk_write_versions": [],
+            "changelog_min_version": None,
+            "changelog_min_reason": None,
             "summary": {"total_rows": 0, "operation": "create"},
             "properties": properties or {},
             "owner": owner,
@@ -157,6 +165,7 @@ class LakeTable:
             # The owner starts with ALL; see grant()/revoke()/privileges().
             "acl": {owner: ["ALL"]},
             "created_at": time.time(),
+            "committed_at": 0.0,  # stamped by _publish
         }
         os.makedirs(self.manifest_dir, exist_ok=True)
         self._publish(manifest)
@@ -187,11 +196,11 @@ class LakeTable:
         link), so after a crash the pointer names a complete manifest."""
         # Commit-time stamp for timestamp time travel.  Clamped to the
         # parent's stamp, which the manifest still carries from its parent
-        # (create() has none), so committed_at is monotone in version even
+        # (create() passes 0), so committed_at is monotone in version even
         # across a wall-clock step backwards (Iceberg snapshot-log semantics:
         # version_as_of picks max version with stamp <= ts, which requires
         # stamps ordered like versions).
-        manifest["committed_at"] = max(time.time(), float(manifest.get("committed_at") or 0.0))
+        manifest["committed_at"] = max(time.time(), manifest["committed_at"])
         mpath = self._manifest_path(manifest["version"])
         try:
             atomic_write(mpath, json.dumps(manifest), exclusive=True)
@@ -204,14 +213,10 @@ class LakeTable:
     def _commit(self, m: dict, summary: dict, **fields: Any) -> dict:
         """Publish the version after ``m``: ``m`` with ``fields`` replaced,
         a new snapshot id, ``m`` as parent and ``summary``. Returns
-        ``summary``. The per-bucket stats fields of older manifests are not
-        carried forward: they no longer describe the table once it changes,
-        and older readers treat their absence as unknown stats. Nor is
-        their always-empty ``lineage`` list: epoch lineage lives in
-        :class:`geopetl_spark.streaming.lineage.LineageLog`."""
+        ``summary``."""
         self._publish(
             {
-                **{k: v for k, v in m.items() if k not in _DROPPED_FIELDS},
+                **m,
                 **fields,
                 "version": m["version"] + 1,
                 "snapshot_id": uuid.uuid4().hex,
@@ -222,42 +227,49 @@ class LakeTable:
         return summary
 
     def manifest(self, version: int | None = None) -> dict:
+        """The current manifest, or that of ``version``. Raises
+        ``ValueError`` on a manifest of another ``format_version``."""
         if version is None:
             with open(self.current_ptr) as fh:
                 name = fh.read().strip()
             mpath = os.path.join(self.manifest_dir, name)
         else:
             mpath = self._manifest_path(version)
+        return self._load(mpath)
+
+    def _load(self, mpath: str) -> dict:
         with open(mpath) as fh:
-            return json.load(fh)
+            m = json.load(fh)
+        found = m.get("format_version")
+        if found != FORMAT_VERSION:
+            raise ValueError(
+                f"lake table at {self.path} has format_version {found!r}; this "
+                f"engine reads only format_version {FORMAT_VERSION}. Re-ingest "
+                f"the table into a new one."
+            )
+        return m
+
+    def _manifests(self) -> Iterator[dict]:
+        """Every retained manifest, in version order."""
+        for name in sorted(os.listdir(self.manifest_dir)):
+            if name.startswith("manifest-") and name.endswith(".json"):
+                yield self._load(os.path.join(self.manifest_dir, name))
 
     def version_as_of(self, ts: float) -> int:
         """Latest version committed at or before unix timestamp ``ts`` —
         Iceberg-style timestamp time travel, resolved against the retained
         manifest window (vacuum prunes old manifests, so travel reaches
         only what retention kept; a ts before the window raises)."""
-        best = None
         # Clamp to the committed pointer: _publish writes the manifest file
         # BEFORE the atomic pointer swap that defines the commit point, so a
         # writer crashed (or observed) in between leaves a complete manifest
         # for a never-committed version.  Never resolve past the pointer.
-        # An unreadable manifest file is an empty placeholder: tables written
-        # while a version was claimed by an empty O_EXCL file before its
-        # rename may keep one from a crashed writer.
         committed = self.manifest()["version"]
-        for name in sorted(os.listdir(self.manifest_dir)):
-            if not (name.startswith("manifest-") and name.endswith(".json")):
-                continue
-            try:
-                with open(os.path.join(self.manifest_dir, name)) as fh:
-                    m = json.load(fh)
-            except json.JSONDecodeError:
-                continue  # empty claim placeholder (see above)
-            if m["version"] > committed:
-                continue  # manifest published but pointer swap never happened
-            at = m.get("committed_at")
-            if at is not None and at <= ts and (best is None or m["version"] > best):
-                best = m["version"]
+        best = max(
+            (m["version"] for m in self._manifests()
+             if m["version"] <= committed and m["committed_at"] <= ts),
+            default=None,
+        )
         if best is None:
             raise ValueError(
                 f"no retained snapshot committed at or before ts={ts} "
@@ -267,31 +279,23 @@ class LakeTable:
         return best
 
     def history(self) -> list[dict]:
-        out = []
-        for name in sorted(os.listdir(self.manifest_dir)):
-            if name.startswith("manifest-") and name.endswith(".json"):
-                try:
-                    with open(os.path.join(self.manifest_dir, name)) as fh:
-                        m = json.load(fh)
-                except json.JSONDecodeError:
-                    continue  # empty placeholder (see version_as_of)
-                out.append(
-                    {
-                        "version": m["version"],
-                        "snapshot_id": m["snapshot_id"],
-                        "epoch_id": m.get("epoch_id"),
-                        "operation": m["summary"].get("operation"),
-                        "total_rows": m["summary"].get("total_rows"),
-                        "committed_at": m.get("committed_at"),
-                    }
-                )
-        return out
+        return [
+            {
+                "version": m["version"],
+                "snapshot_id": m["snapshot_id"],
+                "epoch_id": m["epoch_id"],
+                "operation": m["summary"]["operation"],
+                "total_rows": m["summary"]["total_rows"],
+                "committed_at": m["committed_at"],
+            }
+            for m in self._manifests()
+        ]
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(self.manifest()["schema"])
 
     def committed_epochs(self) -> set:
-        return set(self.manifest().get("committed_epochs", []))
+        return set(self.manifest()["committed_epochs"])
 
     @property
     def key_col(self) -> str:
@@ -394,20 +398,16 @@ class LakeTable:
     @classmethod
     def _dir_misses(cls, stats: dict, d: str, preds: list[tuple[str, str, object]]) -> bool:
         """True when dir ``d``'s ``dir_stats`` record provably holds no row
-        matching ``preds``. A dir with no record is unknown: never a miss."""
-        return d in stats and not cls._zones_may_match(stats[d]["zones"], preds)
+        matching ``preds``."""
+        return not cls._zones_may_match(stats[d]["zones"], preds)
 
     @staticmethod
     def _advance_watermark(m: dict, wstats: dict) -> int | None:
         """Monotone LSN high-water mark, advanced from the _lsn zone maps
         the writer just harvested — no extra jobs, never regresses (compact
         rewrites old data; its harvest can only confirm the mark)."""
-        prev = m.get("lsn_watermark")
-        vals = [
-            s["zones"][LSN_COL][1]
-            for s in wstats.values()
-            if s.get("zones", {}).get(LSN_COL) is not None
-        ]
+        prev = m["lsn_watermark"]
+        vals = [s["zones"][LSN_COL][1] for s in wstats.values() if LSN_COL in s["zones"]]
         cur = int(max(vals)) if vals else None
         if prev is None:
             return cur
@@ -422,15 +422,14 @@ class LakeTable:
         is all-or-nothing per bucket, because dropping only some of a
         bucket's dirs before the read-time reduce could resurrect
         superseded state; dropping all of them is sound, since if every
-        stored row fails the predicate so does every row the reduce keeps.
-        A dir with no record never prunes its bucket (conservative)."""
+        stored row fails the predicate so does every row the reduce keeps."""
         if not where:
             return set()
         preds = self._parse_zone_preds(where)
         if not preds:
             return set()
-        stats = m.get("dir_stats") or {}
-        deltas = m.get("deltas") or {}
+        stats = m["dir_stats"]
+        deltas = m["deltas"]
         return {
             b
             for b in set(m["buckets"]) | set(deltas)
@@ -482,18 +481,14 @@ class LakeTable:
         # interdependent (dropping a dir could change which version of a
         # key survives the max_by); without them rows are independent and a
         # dir whose zones provably miss contributes nothing to the filter.
-        preds = (
-            self._parse_zone_preds(where)
-            if where and not m.get("deltas")
-            else None
-        )
-        stats = m.get("dir_stats") or {}
+        preds = self._parse_zone_preds(where) if where and not m["deltas"] else None
+        stats = m["dir_stats"]
         dirs: list[str] = []
         for b, dlist in m["buckets"].items():
             if (buckets is None or int(b) in set(buckets)) and b not in skip:
                 dirs.extend(d for d in dlist if not (preds and self._dir_misses(stats, d, preds)))
         delta_dirs: list[str] = []
-        for b, dlist in m.get("deltas", {}).items():
+        for b, dlist in m["deltas"].items():
             # skip is all-or-nothing per bucket (base AND delta provably
             # miss), so dropping the delta dirs with the base is safe
             if (buckets is None or int(b) in set(buckets)) and b not in skip:
@@ -523,20 +518,19 @@ class LakeTable:
         ``_lsn > wm``, and whether those dirs are one merge-on-read commit's
         deltas. A dir whose recorded ``_lsn`` max is at or below the
         watermark holds only rows that filter drops, so it is not read; a
-        dir with no recorded range (no ``dir_stats`` record, or none for
-        ``_lsn``) is always read (conservative) and never counts as one
-        commit's delta."""
+        dir with no ``_lsn`` range (LSN-less bulk rows) is always read and
+        never counts as one commit's delta."""
         preds = [] if wm is None else [(LSN_COL, ">", int(wm))]
-        stats = m.get("dir_stats") or {}
+        stats = m["dir_stats"]
         out: list[str] = []
         one_commit = True
-        for is_delta, dirs_by_bucket in ((False, m["buckets"]), (True, m.get("deltas") or {})):
+        for is_delta, dirs_by_bucket in ((False, m["buckets"]), (True, m["deltas"])):
             for dlist in dirs_by_bucket.values():
                 for d in dlist:
                     if self._dir_misses(stats, d, preds):
                         continue
                     out.append(d)
-                    has_lsn = LSN_COL in stats.get(d, {}).get("zones", {})
+                    has_lsn = LSN_COL in stats[d]["zones"]
                     one_commit = one_commit and is_delta and has_lsn
         # a commit writes one dir per bucket, all in its one snapshot dir
         one_commit = one_commit and len({os.path.dirname(d) for d in out}) <= 1
@@ -570,11 +564,10 @@ class LakeTable:
 
         Pruning a dir only removes rows the filter would drop, so it cannot
         change either side. A dir with no recorded range (LSN-less bulk
-        rows, or a manifest from before ``dir_stats``) is always read. A ``since_version``
-        predating the first merge (``wm`` None) yields the full
-        CDC-derived state. Spark lists more than 32 dirs with a parallel
-        listing job, so a window over a wide bucket count (over 32 delta
-        dirs per commit) still pays that job.
+        rows) is always read. A ``since_version`` predating the first merge
+        (``wm`` None) yields the full CDC-derived state. Spark lists more
+        than 32 dirs with a parallel listing job, so a window over a wide
+        bucket count (over 32 delta dirs per commit) still pays that job.
 
         **One-commit rule:** when every dir left after that pruning is a
         delta dir with a recorded range and all of them sit in one
@@ -613,9 +606,9 @@ class LakeTable:
         if on_bulk not in ("error", "ignore"):
             raise ValueError(f"on_bulk must be 'error' or 'ignore', got {on_bulk!r}")
         m_to = self.manifest(to_version)
-        min_v = m_to.get("changelog_min_version")
-        if min_v is not None and since_version < int(min_v):
-            op = m_to.get("changelog_min_reason", "a history-breaking commit")
+        min_v = m_to["changelog_min_version"]
+        if min_v is not None and since_version < min_v:
+            op = m_to["changelog_min_reason"]
             raise ValueError(
                 f"changelog window since_version={since_version} predates "
                 f"version {min_v} ({op}): incremental reads across it would "
@@ -623,11 +616,7 @@ class LakeTable:
                 f"full snapshot read() and restart the changelog from "
                 f"version {min_v} or later."
             )
-        bulk = [
-            int(v)
-            for v in m_to.get("bulk_write_versions", [])
-            if since_version < int(v) <= m_to["version"]
-        ]
+        bulk = [v for v in m_to["bulk_write_versions"] if since_version < v <= m_to["version"]]
         if bulk and on_bulk == "error":
             raise ValueError(
                 f"changelog window ({since_version}, {m_to['version']}] spans "
@@ -639,7 +628,7 @@ class LakeTable:
                 f"read the merge-only changes."
             )
         try:
-            wm = self.manifest(since_version).get("lsn_watermark")
+            wm = self.manifest(since_version)["lsn_watermark"]
         except FileNotFoundError:
             raise ValueError(
                 f"since_version={since_version} has been vacuumed out of the "
@@ -653,7 +642,7 @@ class LakeTable:
         # the watermark filter runs BEFORE the merge-on-read reduce (see
         # "Cost model" above for why that returns the same rows)
         df = df.filter(f"{LSN_COL} IS NOT NULL" if wm is None else f"{LSN_COL} > {int(wm)}")
-        if m_to.get("deltas") and not one_commit:
+        if m_to["deltas"] and not one_commit:
             df = latest_per_key(df, m_to["key_col"], _stored_order())
         return df.drop(BUCKET_COL, SEQ_COL)
 
@@ -677,7 +666,7 @@ class LakeTable:
         for v in range(since_version + 1, current + 1):
             try:
                 m = self.manifest(v)
-                wm_prev = self.manifest(prev).get("lsn_watermark")
+                wm_prev = self.manifest(prev)["lsn_watermark"]
             except FileNotFoundError:
                 raise ValueError(
                     f"changelog tail from since_version={since_version} "
@@ -685,11 +674,11 @@ class LakeTable:
                     f"(at or near v={v}); resync from a full snapshot "
                     f"read() and restart the tail from a retained version."
                 ) from None
-            op = m["summary"].get("operation")
+            op = m["summary"]["operation"]
             if op == "alter-acl":
                 prev = v
                 continue
-            if op in ("compact", "rebucket") and m.get("lsn_watermark") == wm_prev:
+            if op in ("compact", "rebucket") and m["lsn_watermark"] == wm_prev:
                 prev = v  # state-preserving rewrite: nothing past the watermark
                 continue
             df = self.read_changes(prev, to_version=v, on_bulk=on_bulk)
@@ -704,7 +693,7 @@ class LakeTable:
         # summary stores None and the count falls back to one reduced scan —
         # the same "counts are exact only after compaction" economics as
         # Iceberg MoR.
-        total = self.manifest()["summary"].get("total_rows", 0)
+        total = self.manifest()["summary"]["total_rows"]
         if total is None:
             return self.read().count()
         return int(total)
@@ -712,17 +701,14 @@ class LakeTable:
     # --------------------------------------------------------------- writes
 
     @staticmethod
-    def _bucket_sql(key_sql: str, n_buckets: int, bucket_hash: str | None) -> str:
-        # bucket_hash: the manifest's field (None on pre-Murmur3 tables)
-        if bucket_hash == MURMUR3:
-            return f"pmod(hash({key_sql}), {n_buckets})"
-        return f"pmod(xxhash64(cast({key_sql} as string)), {n_buckets})"
+    def _bucket_sql(key_sql: str, n_buckets: int) -> str:
+        return f"pmod(hash({key_sql}), {n_buckets})"
 
     @classmethod
-    def _bucket_int_sql(cls, key_col: str, n_buckets: int, bucket_hash: str | None = MURMUR3) -> str:
+    def _bucket_int_sql(cls, key_col: str, n_buckets: int) -> str:
         """The ``_bucket`` of a row, as SQL text over ``key_col``. Hash the
         key as stored: Spark hashes an int and the same bigint differently."""
-        return f"CAST({cls._bucket_sql(quote(key_col), n_buckets, bucket_hash)} AS INT)"
+        return f"CAST({cls._bucket_sql(quote(key_col), n_buckets)} AS INT)"
 
     def _shuffle_partitions(self) -> int:
         """P of a shuffle Spark plans itself (``SQLConf.numShufflePartitions``)."""
@@ -876,7 +862,7 @@ class LakeTable:
         # the bucket of the conformed key: an incoming int key hashes apart
         # from the stored bigint of the same value
         staged = staged.withColumn(
-            BUCKET_COL, F.expr(self._bucket_int_sql(key, n_buckets, m.get("bucket_hash")))
+            BUCKET_COL, F.expr(self._bucket_int_sql(key, n_buckets))
         )
         # Guard (advisor r6): an LSN-carrying append is exempted from the
         # bulk-blind marker below ONLY because its rows surface in
@@ -884,7 +870,7 @@ class LakeTable:
         # at/below the current watermark would be silently invisible to
         # every changelog window while the version looks complete, so the
         # written files' footer stats are judged before the commit.
-        wm = m.get("lsn_watermark")
+        wm = m["lsn_watermark"]
         check = None if lsn_synthesized or mode != "append" else lambda st: _refuse_invisible_lsns(st, wm)
         version = m["version"] + 1
         written, wstats, n_new, _live_new = self._write_snapshot_data(
@@ -898,9 +884,9 @@ class LakeTable:
             deltas = {}  # full refresh folds/discards all MoR deltas
         elif mode == "append":
             buckets = _extend_dirs(m["buckets"], written)
-            dir_stats = {**m.get("dir_stats", {}), **wstats}
-            deltas = m.get("deltas", {})
-            prev_total = m["summary"].get("total_rows", 0)
+            dir_stats = {**m["dir_stats"], **wstats}
+            deltas = m["deltas"]
+            prev_total = m["summary"]["total_rows"]
             total = None if prev_total is None else prev_total + n_new
         else:
             raise ValueError(f"unknown write mode {mode!r}")
@@ -919,15 +905,13 @@ class LakeTable:
             # surface in read_changes (and advance the watermark), so marking
             # the version bulk would raise a false-positive on a window that
             # is actually complete.
-            history["bulk_write_versions"] = sorted(
-                set(int(v) for v in m.get("bulk_write_versions", [])) | {version}
-            )
+            history["bulk_write_versions"] = [*m["bulk_write_versions"], version]
         return self._commit(
             m,
             {"total_rows": total, "operation": mode, "rows_written": n_new},
             **history,
             epoch_id=epoch_id,
-            committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
+            committed_epochs=_merge_epochs(m["committed_epochs"], epoch_id),
             schema=json.loads(new_schema.json()),
             buckets=buckets,
             deltas=deltas,
@@ -989,9 +973,9 @@ class LakeTable:
         if not self.exists():
             raise ValueError(f"no lake table at {self.path}")
         m = self.manifest()
-        if epoch_id is not None and epoch_id in set(m.get("committed_epochs", [])):
+        if epoch_id is not None and epoch_id in set(m["committed_epochs"]):
             return {"operation": "skip", "reason": "epoch already committed", "epoch_id": epoch_id}
-        mode = strategy or m.get("properties", {}).get("write.merge-mode", "cow")
+        mode = strategy or m["properties"].get("write.merge-mode", "cow")
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge strategy {mode!r}")
 
@@ -1002,19 +986,19 @@ class LakeTable:
         new_schema = self._evolved_schema(m, changes, lsn_col, op_col)
         schema_json = json.loads(new_schema.json())
         staged = self._stage(m, changes, new_schema, lsn_col, op_col)
-        # the write's input is always a per-key reduce (the dedup, or the
-        # fold below), so Murmur3 buckets need no write shuffle when P | N
-        aligned = m.get("bucket_hash") == MURMUR3
+        # key_partitioned: the write's input is always a per-key reduce (the
+        # dedup, or the fold below), so the buckets need no write shuffle
+        # when P | N
 
         if mode == "mor":
             written, wstats, n_rows, n_live = self._write_snapshot_data(
-                staged, version, n_buckets, key, key_partitioned=aligned
+                staged, version, n_buckets, key, key_partitioned=True
             )
             # merge-on-read bookkeeping: O(batch), no target read; the
             # read-time reduce resolves the deltas as a CoW merge would
             fields = {
-                "deltas": _extend_dirs(m.get("deltas", {}), written),
-                "dir_stats": {**m.get("dir_stats", {}), **wstats},
+                "deltas": _extend_dirs(m["deltas"], written),
+                "dir_stats": {**m["dir_stats"], **wstats},
             }
             summary = {
                 "operation": "merge",
@@ -1039,12 +1023,12 @@ class LakeTable:
             # Fold: a key's base rows, delta rows and batch row share its
             # bucket, so one reduce over the affected buckets' dirs plus the
             # batch resolves the MERGE and folds those buckets' deltas.
-            old = m.get("deltas", {})
+            old = m["deltas"]
             dirs = [d for b in sorted(affected) for d in (*m["buckets"].get(b, []), *old.get(b, []))]
             target = self._scan({**m, "schema": schema_json}, dirs)
             resolved = latest_per_key(target.unionByName(staged), key, _stored_order())
             written, wstats, n_rows, n_live = self._write_snapshot_data(
-                resolved, version, n_buckets, key, key_partitioned=aligned
+                resolved, version, n_buckets, key, key_partitioned=True
             )
             staged.unpersist()
 
@@ -1052,18 +1036,17 @@ class LakeTable:
             buckets.update(written)  # carry forward untouched buckets, swap affected
             deltas = {k: list(v) for k, v in old.items() if k not in affected}
             folded = set(dirs)
-            dir_stats = {d: s for d, s in m.get("dir_stats", {}).items() if d not in folded}
+            dir_stats = {d: s for d, s in m["dir_stats"].items() if d not in folded}
             dir_stats.update(wstats)
             fields = dict(buckets=buckets, deltas=deltas, dir_stats=dir_stats)
             # incremental live-row accounting from the dir records — no scan
             # of historical data. With unfolded deltas on other buckets the
-            # exact live total is data-dependent (key overlap), and a dir
-            # with no record is unknown: count() then scans.
+            # exact live total is data-dependent (key overlap): count() then
+            # scans.
             base = [d for dl in buckets.values() for d in dl]
-            known = not deltas and all(d in dir_stats for d in base)
             summary = {
                 "operation": "merge",
-                "total_rows": sum(dir_stats[d]["live"] for d in base) if known else None,
+                "total_rows": None if deltas else sum(dir_stats[d]["live"] for d in base),
                 "rows_written": n_rows,
                 "live_rows_written": n_live,
                 "buckets_affected": len(affected),
@@ -1073,7 +1056,7 @@ class LakeTable:
             m,
             summary,
             epoch_id=epoch_id,
-            committed_epochs=_merge_epochs(m.get("committed_epochs", []), epoch_id),
+            committed_epochs=_merge_epochs(m["committed_epochs"], epoch_id),
             schema=schema_json,
             lsn_watermark=self._advance_watermark(m, wstats),
             **fields,
@@ -1108,7 +1091,7 @@ class LakeTable:
             changes, [cast(quote(c), key_type, c) if c == key else quote(c) for c in changes.columns]
         )
         deduped = latest_per_key(changes, key, event_order(changes, lsn_col=lsn_col, op_col=op_col))
-        bucket = self._bucket_int_sql(key, m["n_buckets"], m.get("bucket_hash"))
+        bucket = self._bucket_int_sql(key, m["n_buckets"])
         system = {
             LSN_COL: f"CAST({quote(lsn_col)} AS BIGINT)",
             DELETED_COL: f"{quote(op_col)} = 'D'",
@@ -1121,7 +1104,9 @@ class LakeTable:
         """Delete snapshot data directories not referenced by the last
         ``keep_last_versions`` manifests (and drop the older manifests).
         Reclaims copy-on-write garbage + orphans from crashed commits.
-        Time travel remains possible only within the kept window."""
+        Time travel remains possible only within the kept window. A
+        snapshot dir of a version above the current one belongs to a commit
+        still being written, so it is kept."""
         current = self.manifest()
         keep_versions = set(range(max(current["version"] - keep_last_versions + 1, 0), current["version"] + 1))
         referenced: set[str] = set()
@@ -1139,7 +1124,8 @@ class LakeTable:
         if os.path.isdir(data_root):
             for snap in sorted(os.listdir(data_root)):
                 snapdir = os.path.join(data_root, snap)
-                if not os.path.isdir(snapdir):
+                # snap-<version>-<attempt> (see _snapshot_dir)
+                if not os.path.isdir(snapdir) or int(snap.split("-")[1]) > current["version"]:
                     continue
                 live = [
                     d for d in os.listdir(snapdir)
@@ -1178,18 +1164,18 @@ class LakeTable:
         if bad:
             raise ValueError(f"unknown ops {bad!r} (valid: {self._VALID_OPS})")
         m = self.manifest()
-        acl = {k: list(v) for k, v in m.get("acl", {}).items()}
+        acl = {k: list(v) for k, v in m["acl"].items()}
         merged = set(acl.get(principal, [])) | {o.upper() for o in ops}
         acl[principal] = sorted(merged if "ALL" not in merged else {"ALL"})
         note = f"grant {ops} to {principal}"
         return self._commit(m, {"operation": "alter-acl", "note": note,
-                                "total_rows": m["summary"].get("total_rows")}, acl=acl)
+                                "total_rows": m["summary"]["total_rows"]}, acl=acl)
 
     def revoke(self, principal: str, ops: list[str] | str | None = None) -> dict:
         """Remove privileges (all of them when ``ops`` is None). Revoking
         from the owner is allowed but the ownership fact itself persists."""
         m = self.manifest()
-        acl = {k: list(v) for k, v in m.get("acl", {}).items()}
+        acl = {k: list(v) for k, v in m["acl"].items()}
         if principal not in acl:
             return {"operation": "alter-acl", "noop": True}
         if ops is None:
@@ -1212,11 +1198,11 @@ class LakeTable:
                     del acl[principal]
         note = f"revoke {ops or 'ALL'} from {principal}"
         return self._commit(m, {"operation": "alter-acl", "note": note,
-                                "total_rows": m["summary"].get("total_rows")}, acl=acl)
+                                "total_rows": m["summary"]["total_rows"]}, acl=acl)
 
     def privileges(self) -> dict:
         """{principal: [ops]} — the grants surface (informational)."""
-        return {k: list(v) for k, v in self.manifest().get("acl", {}).items()}
+        return {k: list(v) for k, v in self.manifest()["acl"].items()}
 
     def describe(self) -> dict:
         """Informational layout/stats surface (C6 analog: the reference
@@ -1224,8 +1210,7 @@ class LakeTable:
         the physical-design facts are the bucket layout and sort order, and
         the access facts are owner + ACL)."""
         m = self.manifest()
-        stats = m.get("dir_stats") or {}
-        dirs = _data_dirs(m)
+        stats = m["dir_stats"]
         return {
             "path": self.path,
             "version": m["version"],
@@ -1234,30 +1219,26 @@ class LakeTable:
             "columns": [f["name"] for f in m["schema"]["fields"]],
             "layout": {
                 "type": "hash-bucket copy-on-write",
-                "bucket_expr": self._bucket_sql(m["key_col"], m["n_buckets"], m.get("bucket_hash")),
+                "bucket_expr": self._bucket_sql(m["key_col"], m["n_buckets"]),
                 "n_buckets": m["n_buckets"],
                 "sort_within_buckets": m["key_col"],
             },
             "buckets_populated": len(m["buckets"]),
             "data_dirs": sum(len(v) for v in m["buckets"].values()),
-            "delta_dirs": sum(len(v) for v in m.get("deltas", {}).values()),
-            "total_rows": m["summary"].get("total_rows", 0),
-            "tombstones": (
-                sum(stats[d]["rows"] - stats[d]["live"] for d in dirs)
-                if all(d in stats for d in dirs)
-                else None
-            ),
-            "committed_epochs": len(m.get("committed_epochs", [])),
+            "delta_dirs": sum(len(v) for v in m["deltas"].values()),
+            "total_rows": m["summary"]["total_rows"],
+            "tombstones": sum(stats[d]["rows"] - stats[d]["live"] for d in _data_dirs(m)),
+            "committed_epochs": len(m["committed_epochs"]),
             # the CDC-out surface a changelog consumer plans against
             "changelog": {
-                "lsn_watermark": m.get("lsn_watermark"),
-                "min_version": m.get("changelog_min_version"),
-                "min_reason": m.get("changelog_min_reason"),
-                "bulk_write_versions": list(m.get("bulk_write_versions", [])),
+                "lsn_watermark": m["lsn_watermark"],
+                "min_version": m["changelog_min_version"],
+                "min_reason": m["changelog_min_reason"],
+                "bulk_write_versions": list(m["bulk_write_versions"]),
             },
-            "properties": m.get("properties", {}),
-            "owner": m.get("owner"),
-            "privileges": {k: list(v) for k, v in m.get("acl", {}).items()},
+            "properties": m["properties"],
+            "owner": m["owner"],
+            "privileges": {k: list(v) for k, v in m["acl"].items()},
         }
 
     def checksum(self) -> int:
@@ -1278,8 +1259,7 @@ class LakeTable:
         10^10 rows the create-time bucket count is wrong by definition —
         CoW rewrite cost per epoch is O(table/n_buckets · touched buckets),
         so the count must grow with the table. One full rewrite under the
-        Murmur3 ``pmod(hash(key), n)`` layout (the migration path of
-        ``pmod(xxhash64(key), n)`` tables); logical state (and therefore
+        ``pmod(hash(key), n)`` layout; logical state (and therefore
         ``checksum()``) is unchanged, all zone/dir stats are rebuilt for
         the new layout, and subsequent merges route by the new count.
         Run it like compaction: between epochs, versioned, replay-safe."""
@@ -1290,7 +1270,7 @@ class LakeTable:
         df = df.withColumn(BUCKET_COL, F.expr(self._bucket_int_sql(m["key_col"], n_buckets)))
         version = m["version"] + 1
         written, wstats, n, n_live = self._write_snapshot_data(
-            df, version, n_buckets, m["key_col"], key_partitioned=any(m.get("deltas", {}).values())
+            df, version, n_buckets, m["key_col"], key_partitioned=any(m["deltas"].values())
         )
         return self._commit(
             m,
@@ -1301,7 +1281,6 @@ class LakeTable:
                 "n_buckets": int(n_buckets),
             },
             n_buckets=int(n_buckets),
-            bucket_hash=MURMUR3,
             buckets=written,
             deltas={},  # the read above reduced any deltas into the rewrite
             dir_stats=wstats,
@@ -1325,9 +1304,8 @@ class LakeTable:
             df = df.filter(_LIVE)
         version = m["version"] + 1
         # a read() of a table with deltas ran the per-key reduction
-        aligned = any(m.get("deltas", {}).values()) and m.get("bucket_hash") == MURMUR3
         written, wstats, n, n_live = self._write_snapshot_data(
-            df, version, m["n_buckets"], m["key_col"], aligned
+            df, version, m["n_buckets"], m["key_col"], key_partitioned=any(m["deltas"].values())
         )
         history: dict[str, Any] = {}
         if drop_tombstones:
@@ -1460,7 +1438,7 @@ def _combine_file_stats(file_stats: list[dict]) -> dict:
 
 def _data_dirs(m: dict) -> list[str]:
     """Every base and MoR delta dir manifest ``m`` references."""
-    return [d for part in (m["buckets"], m.get("deltas", {})) for dl in part.values() for d in dl]
+    return [d for part in (m["buckets"], m["deltas"]) for dl in part.values() for d in dl]
 
 
 def _extend_dirs(old: dict[str, list[str]], written: dict[str, list[str]]) -> dict[str, list[str]]:
@@ -1474,8 +1452,8 @@ def _extend_dirs(old: dict[str, list[str]], written: dict[str, list[str]]) -> di
 def _stored_order() -> Column:
     """The one MERGE rule, (_lsn, _seq): per key the greatest stored row
     wins — in the MoR read, compact, and the CoW merge's fold alike. On
-    equal LSNs the later commit wins. NULL _lsn (plain writes) and NULL
-    _seq (files from before the column) sort lowest."""
+    equal LSNs the later commit wins. NULL _lsn and NULL _seq (rows loaded
+    by write()) sort lowest."""
     return F.expr(
         f"named_struct('l', coalesce({LSN_COL}, {-(1 << 62)}L), 's', coalesce({SEQ_COL}, -1L))"
     )

@@ -126,7 +126,7 @@ def main(argv: list[str] | None = None) -> dict:
             "current_version": table.manifest()["version"],
             "changed_rows": ch.count(),
             "delete_tombstones": n_del,
-            "lsn_watermark": table.manifest().get("lsn_watermark"),
+            "lsn_watermark": table.manifest()["lsn_watermark"],
         }
         print(json.dumps(out))
         return out

@@ -155,36 +155,37 @@ def _upsert(spark, key, lsn):
     )
 
 
-@pytest.mark.parametrize("strategy", ["cow", "mor"])
-def test_table_without_bucket_hash_keeps_xxhash_until_rebucket(spark, tmp_path, strategy):
-    """A manifest from before Murmur3 buckets (no ``bucket_hash``) keeps
-    routing by ``pmod(xxhash64(cast(key as string)), n)``: merging an
-    existing key updates it in place, with no duplicate in another bucket.
-    ``rebucket()`` migrates it to Murmur3 with the checksum unchanged."""
-    t = LakeTable(spark, str(tmp_path / "lake")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=8)
+def test_table_of_another_format_version_is_refused(spark, tmp_path):
+    """A manifest of another ``format_version`` is refused, not read:
+    ``manifest()``, ``read()`` and ``merge()`` raise, naming the version
+    found and asking for a re-ingest."""
+    t = LakeTable(spark, str(tmp_path / "lake")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    assert t.manifest()["format_version"] == 2
     m = t.manifest()
-    del m["bucket_hash"]
-    t._publish(dict(m, version=m["version"] + 1))
-    xx = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(8))
-    ev = generate_cdc_events(spark, 2000, n_keys=100, events_per_epoch=1000)
-    for e in range(2):
-        t.merge(ev.filter(F.col("epoch") == e), epoch_id=e, strategy=strategy)
-    key = t.read().orderBy("doc_id").first()["doc_id"]
-    t.merge(_upsert(spark, key, 10_000_000), epoch_id="up", strategy=strategy)
-    rows = t.read(include_system=True).filter(F.col("doc_id") == key).collect()
-    assert len(rows) == 1 and rows[0]["_lsn"] == 10_000_000
-    assert t.read(include_system=True).filter(F.col("_bucket") != xx).count() == 0
-    assert "xxhash64" in t.describe()["layout"]["bucket_expr"]
+    t._publish(dict(m, version=m["version"] + 1, format_version=1))
+    for op in (t.manifest, t.read, lambda: t.merge(_upsert(spark, "k", 1), epoch_id=0)):
+        with pytest.raises(ValueError, match=r"format_version 1; .*Re-ingest"):
+            op()
 
-    before = t.checksum()
-    t.rebucket(8)
-    assert t.manifest()["bucket_hash"] == "murmur3"
-    assert t.describe()["layout"]["bucket_expr"] == "pmod(hash(doc_id), 8)"
-    assert t.checksum() == before
-    stored = t.read(include_system=True)
-    assert stored.filter(F.col("_bucket") != F.pmod(F.hash("doc_id"), F.lit(8))).count() == 0
-    t.merge(_upsert(spark, key, 10_000_001), epoch_id="up2", strategy=strategy)
-    assert t.read().filter(F.col("doc_id") == key).count() == 1
+
+def test_vacuum_keeps_a_commit_still_being_written(spark, tmp_path, monkeypatch):
+    """A vacuum that runs while a merge-on-read commit is being published
+    keeps the snapshot dir that commit has written but not yet published,
+    so the manifest it then publishes names only dirs that exist."""
+    t = LakeTable(spark, str(tmp_path / "lake")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    t.merge(_upsert(spark, "a", 1), epoch_id=0, strategy="mor")
+    publish = LakeTable._publish
+    vacuumed = []
+
+    def publish_after_a_vacuum(self, manifest):
+        if manifest["version"] == 2 and not vacuumed:
+            vacuumed.append(LakeTable(spark, self.path).vacuum(keep_last_versions=1))
+        publish(self, manifest)
+
+    monkeypatch.setattr(LakeTable, "_publish", publish_after_a_vacuum)
+    t.merge(_upsert(spark, "b", 2), epoch_id=1, strategy="mor")
+    assert vacuumed == [{"removed_data_dirs": 0, "removed_manifests": 1}]
+    assert sorted(r.doc_id for r in t.read().collect()) == ["a", "b"]
 
 
 def test_write_buckets_a_narrower_key_by_its_stored_type(spark, tmp_path):

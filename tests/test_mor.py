@@ -77,7 +77,7 @@ def test_merge_writes_whole_buckets_with_no_write_shuffle(spark, tmp_path, event
     and every row is in its own bucket."""
     assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     t = LakeTable(spark, str(tmp_path / strategy)).create(DOC_SCHEMA, key_col="doc_id", n_buckets=16)
-    assert t.manifest()["bucket_hash"] == "murmur3"
+    assert t.describe()["layout"]["bucket_expr"] == "pmod(hash(doc_id), 16)"
     calls = _count_repartitions(spark, monkeypatch)
     plans = []
     write = LakeTable._write_snapshot_data

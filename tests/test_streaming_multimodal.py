@@ -81,7 +81,7 @@ def test_decode_images_stub(blobs):
 
 
 def test_resize_and_frame_sample(blobs):
-    resized = {r["id"]: r["blob"] for r in MM.resize_stub(blobs, 4, 4).collect()}
+    resized = {r["id"]: r["blob"] for r in MM.resize_images(blobs, 4, 4).collect()}
     w, h, _ = MM._decode_fake(bytes(resized[1]))
     assert (w, h) == (4, 4)
     frames = MM.frame_sample_stub(blobs, every_n=16).collect()

@@ -1,8 +1,10 @@
 """Zone-map data skipping: per-dir column min/max (the manifest's
 ``dir_stats``) harvested from parquet footers at write time, conservative
 predicate pruning at read time (simple AND-range conjunctions only): a
-bucket prunes when every base and MoR delta dir of it provably misses, a dir
-with no record never prunes."""
+bucket prunes when every base and MoR delta dir of it provably misses.
+Every referenced dir has a record after every op; a column with no zone
+never prunes, and a dir with no ``_lsn`` zone is always read by the
+changelog."""
 
 import sys
 
@@ -182,29 +184,6 @@ def test_mor_delta_bucket_prunes_when_base_and_delta_both_miss(table, spark):
     assert got == {"k1"}
 
 
-def test_mor_delta_without_stats_never_prunes(table, spark):
-    """Delta dirs from manifests written before delta-zone tracking have
-    unknown zones and must never prune (conservative)."""
-    import json as _json
-
-    batch = spark.createDataFrame(
-        [("k0", [7], 150, "src", "U", 10_000)],
-        "doc_id string, tokens array<int>, n_tok int, source string, op string, lsn long",
-    )
-    table.merge(batch, epoch_id=99, lsn_col="lsn", op_col="op", strategy="mor")
-    m = table.manifest()
-    # simulate a pre-tracking manifest: drop the delta dirs' records
-    mpath = table._manifest_path(m["version"])
-    for dl in m["deltas"].values():
-        for d in dl:
-            m["dir_stats"].pop(d)
-    with open(mpath, "w") as fh:
-        _json.dump(m, fh)
-    pruned = table._pruned_buckets(table.manifest(), "n_tok > 5000")
-    assert pruned.isdisjoint(set(m["deltas"]))
-    assert table.read(where="n_tok > 5000").count() == 0
-
-
 def test_bucket_prunes_when_every_dir_misses(table, spark):
     """A bucket prunes when each of its dirs misses, even where the union of
     its dirs' ranges covers the predicate: base dirs hold n_tok 0..199 and
@@ -221,19 +200,31 @@ def test_bucket_prunes_when_every_dir_misses(table, spark):
         assert _rowset(table.read(where=where)) == _rowset(full.filter(where)), where
 
 
+_MANIFEST_KEYS = {
+    "format_version", "version", "snapshot_id", "parent", "epoch_id", "committed_epochs",
+    "key_col", "n_buckets", "schema", "buckets", "deltas", "dir_stats", "lsn_watermark",
+    "bulk_write_versions", "changelog_min_version", "changelog_min_reason", "summary",
+    "properties", "owner", "acl", "created_at", "committed_at",
+}
+
+
 def _assert_dir_stats_invariant(t):
     m = t.manifest()
-    dirs = {d for part in (m["buckets"], m.get("deltas", {})) for dl in part.values() for d in dl}
+    assert set(m) == _MANIFEST_KEYS
+    dirs = {d for part in (m["buckets"], m["deltas"]) for dl in part.values() for d in dl}
     assert set(m["dir_stats"]) == dirs
     for d in dirs:
         assert m["dir_stats"][d] == LakeTable._file_stats([d]), d
-    assert not {"bucket_stats", "delta_stats"} & set(m)
 
 
-def test_dir_stats_hold_exactly_the_referenced_dirs(table, spark):
-    """After every manifest-publishing op, ``dir_stats`` holds one record per
+def test_dir_stats_hold_exactly_the_referenced_dirs(table, spark, tmp_path):
+    """After create() and every manifest-publishing op, the manifest has
+    exactly the format's keys and ``dir_stats`` holds one record per
     referenced base and delta dir, each equal to the driver-serial harvest
     of that dir; a known row count equals the rows read."""
+    _assert_dir_stats_invariant(
+        LakeTable(spark, str(tmp_path / "new")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
+    )
     _assert_dir_stats_invariant(table)  # overwrite
     table.write(_rows(spark, 1000, 1050), mode="append")
     _assert_dir_stats_invariant(table)
@@ -263,47 +254,6 @@ def test_dir_stats_hold_exactly_the_referenced_dirs(table, spark):
     _assert_dir_stats_invariant(table)
     table.truncate()
     _assert_dir_stats_invariant(table)
-
-
-def test_manifest_without_dir_stats_reads_correctly(spark, tmp_path):
-    """A manifest of the older shape (per-bucket stats fields, no
-    ``dir_stats``) loses pruning but no rows: ``read``, ``read_changes``
-    and ``count()`` stay exact, the stale fields are ignored and not carried
-    forward, and ``compact()`` restores the records."""
-    import json as _json
-
-    t = LakeTable(spark, str(tmp_path / "older")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
-    t.merge(_batch(spark, [(f"k{i}", [i], i, "s", "I", i + 1) for i in range(40)]),
-            epoch_id=0, lsn_col="lsn", op_col="op")
-    v1 = t.manifest()["version"]
-    t.merge(_batch(spark, [("k1", [1], 100, "s", "U", 50), ("k2", None, None, "s", "D", 51)]),
-            epoch_id=1, lsn_col="lsn", op_col="op")
-    m = t.manifest()
-    m.pop("dir_stats")
-    # stale per-bucket zones that would prune every bucket if they were read
-    m["bucket_stats"] = {b: {"rows": 0, "live": 0, "zones": {"n_tok": [-9, -8]}} for b in m["buckets"]}
-    with open(t._manifest_path(m["version"]), "w") as fh:
-        _json.dump(m, fh)
-    assert t._pruned_buckets(t.manifest(), "n_tok > 30") == set()
-    full = t.read()
-    for where in ("n_tok > 30", "n_tok = 100", "n_tok = 9999"):
-        assert _rowset(t.read(where=where)) == _rowset(full.filter(where)), where
-    v2 = t.manifest()["version"]
-    assert _rowset(t.read_changes(v1, v2)) == _rowset(_reduce_then_filter(t, v1, v2))
-    assert t.count() == 39
-    # the untouched buckets' dirs have no record, so a CoW merge records no
-    # total and count() scans
-    t.merge(_batch(spark, [("k3", None, None, "s", "D", 60)]), epoch_id=2,
-            lsn_col="lsn", op_col="op", strategy="cow")
-    assert t.manifest()["summary"]["total_rows"] is None
-    assert "bucket_stats" not in t.manifest()
-    assert t.count() == 38
-    v4 = _mor(t, spark, [("k4", [4], 400, "s", "U", 70)], 3)
-    for since in (v1, v2, v4 - 1):
-        assert _rowset(t.read_changes(since, v4)) == _rowset(_reduce_then_filter(t, since, v4))
-    t.compact()
-    _assert_dir_stats_invariant(t)
-    assert t.count() == 38 == t.read().count()
 
 
 def _batch(spark, rows):
@@ -521,8 +471,8 @@ def test_mor_changelog_equals_reduce_then_filter(spark, tmp_path):
 
 def test_one_commit_changelog_scans_only_that_commit(spark, tmp_path):
     """A one-commit window over uncompacted MoR deltas reads only that
-    commit's files; without the per-dir ``_lsn`` ranges every dir is read
-    and the rows are the same."""
+    commit's files; without the per-dir ``_lsn`` ranges (as for LSN-less
+    bulk rows) every dir is read and the rows are the same."""
     import json as _json
 
     t = LakeTable(spark, str(tmp_path / "scope")).create(DOC_SCHEMA, key_col="doc_id", n_buckets=4)
@@ -535,8 +485,9 @@ def test_one_commit_changelog_scans_only_that_commit(spark, tmp_path):
     files = t.read_changes(v - 1, v).inputFiles()
     assert files and all(f"/snap-{v:08d}-" in f for f in files), files
     want = _rowset(t.read_changes(v - 1, v))
-    # drop every dir's record: nothing can be pruned, the rows hold
-    m.pop("dir_stats")
+    # drop every dir's _lsn range: nothing can be pruned, the rows hold
+    for rec in m["dir_stats"].values():
+        rec["zones"].pop("_lsn")
     with open(t._manifest_path(v), "w") as fh:
         _json.dump(m, fh)
     stripped = t.read_changes(v - 1, v)
